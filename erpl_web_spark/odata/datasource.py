@@ -29,7 +29,8 @@ Python Data Source API:
                surface (``sources/odp.py``), which is the
                change-tracking contract designed for mutating data;
 - execute   -> ``read(partition)``: generator following next-page links,
-               decoding JSON rows to typed tuples (executor-side).
+               decoding each JSON page column-wise into one
+               ``pyarrow.RecordBatch`` (executor-side).
 
 Read options: ``url`` (required), ``select``, ``top``, ``skip``,
 ``expand``, ``count``, ``parallelism``, ``orderby`` (server-side ORDER
@@ -54,6 +55,7 @@ Usage::
 from __future__ import annotations
 
 from collections.abc import Iterator, Sequence
+from typing import TYPE_CHECKING
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -69,11 +71,14 @@ from erpl_web_spark.odata.client import ODataClient
 from erpl_web_spark.odata.edm import EdmModel
 from erpl_web_spark.odata.expand import parse_expand
 from erpl_web_spark.odata.filters import translate_filters
-from erpl_web_spark.odata.json_decode import decode_rows, next_link, total_count
+from erpl_web_spark.odata.json_decode import ColumnDecoders, next_link, total_count
 from erpl_web_spark.odata.query_builder import ODataQueryBuilder
 from erpl_web_spark.core.url import HttpUrl
 
 from pyspark.sql.types import StringType, StructField
+
+if TYPE_CHECKING:
+    import pyarrow
 
 
 class ODataDataSource(DataSource):
@@ -197,11 +202,23 @@ class ODataDataSource(DataSource):
         )
 
     def reader(self, schema: StructType) -> "ODataReader":
-        client = self._client()
+        # One HttpClient (one keep-alive session) serves the metadata
+        # fetch, the version fallback probe and the reader's $count probe.
+        auth = self._auth_headers()
+        http = HttpClient(auth_headers=auth)
+        client = ODataClient(self.options["url"], http)
         try:
-            version = client.version
+            model = client.get_model()
         except Exception:
-            version = 4
+            model = None
+        if model is not None:
+            version = model.protocol_version
+        else:
+            # No metadata: classify from the first page instead.
+            try:
+                version = client.version
+            except Exception:
+                version = 4
         if self._apply_expr() and version == 2:
             raise ValueError(
                 "$apply aggregation pushdown (groupby/aggregate/apply options) "
@@ -224,16 +241,14 @@ class ODataDataSource(DataSource):
             order_keys = []
         else:
             try:
-                order_keys = client.get_model().key_for_entity_set(
-                    client.entity_set_name()
-                )
+                order_keys = model.key_for_entity_set(client.entity_set_name())
             except Exception:
                 order_keys = []
         return ODataReader(
             url=self.options["url"],
             schema=schema,
             version=version,
-            auth_headers=self._auth_headers(),
+            auth_headers=auth,
             select=self.options.get("select"),
             top=_int_opt(self.options, "top"),
             skip=_int_opt(self.options, "skip"),
@@ -245,6 +260,7 @@ class ODataDataSource(DataSource):
             apply=self._apply_expr(),
             auto_partition_rows=_int_opt(self.options, "auto_partition_rows") or 50_000,
             auto_partition_max=_int_opt(self.options, "auto_partition_max") or 32,
+            http=http,
         )
 
 
@@ -278,6 +294,7 @@ class ODataReader(DataSourceReader):
         apply: str | None = None,
         auto_partition_rows: int = 50_000,
         auto_partition_max: int = 32,
+        http: HttpClient | None = None,
     ):
         # A user-supplied $filter in the base URL is folded into the
         # generated $filter (AND-combined with pushed predicates) instead
@@ -305,6 +322,13 @@ class ODataReader(DataSourceReader):
         self._always_order = always_order
         self._apply = apply
         self._filter_expr: str | None = None
+        # Planning-time client, shared with reader(); executors build their own.
+        self._http = http
+
+    def __getstate__(self):
+        state = self.__dict__.copy()
+        state["_http"] = None
+        return state
 
     # -- pushdown ----------------------------------------------------------
 
@@ -353,7 +377,7 @@ class ODataReader(DataSourceReader):
     def _probe_total(self) -> int | None:
         """Server-reported row count via ``$count=true``/``$inlinecount``
         with ``$top=0`` — one cheap request; None when unsupported."""
-        http = HttpClient(auth_headers=self._auth)
+        http = self._http or HttpClient(auth_headers=self._auth)
         probe_url = self._build_url(top=0, count=True)
         try:
             doc = http.get(probe_url, headers={"Accept": "application/json"}).json()
@@ -419,8 +443,9 @@ class ODataReader(DataSourceReader):
 
     # -- execution (runs on executors) ------------------------------------
 
-    def read(self, partition: _PagePartition) -> Iterator[tuple]:
+    def read(self, partition: _PagePartition) -> Iterator[pyarrow.RecordBatch]:
         http = HttpClient(auth_headers=self._auth)
+        decoders = ColumnDecoders(self._schema)
         # Range partitions (skip is set) get $orderby on the entity-set
         # key: OData gives no stable order across independent requests,
         # so unordered parallel $skip windows could duplicate/miss rows.
@@ -435,13 +460,14 @@ class ODataReader(DataSourceReader):
             if resp.status >= 400:
                 raise RuntimeError(f"HTTP {resp.status} fetching {url}")
             doc = resp.json()
-            rows = decode_rows(doc, self._schema)
-            for row in rows:
-                if remaining is not None:
-                    if remaining <= 0:
-                        return
-                    remaining -= 1
-                yield row
+            batch = decoders.batch(doc)
+            if remaining is not None:
+                batch = batch.slice(0, remaining)
+                remaining -= batch.num_rows
+            if batch.num_rows:
+                yield batch
+            if remaining is not None and remaining <= 0:
+                return
             link = next_link(doc)
             url = HttpUrl.parse(url).resolve(link).to_string() if link else None
 

@@ -125,6 +125,12 @@ class EdmModel:
         self.entity_sets: dict[str, EdmEntitySet] = {}
         self.version: str = "4.0"
 
+    @property
+    def protocol_version(self) -> int:
+        """OData major version the service speaks: an EDMX ``Version`` of
+        4.x is v4; anything else (1.0 for v2/v3 services) is v2."""
+        return 4 if self.version.startswith("4") else 2
+
     # -- parsing -----------------------------------------------------------
 
     @classmethod

@@ -20,6 +20,14 @@ Payload row extraction handles both v4 (``value`` array) and v2
 (``d.results`` / ``d``) shapes (odata_content.cpp:1122-1168), and the
 v2 ``__metadata``/``__deferred`` exclusions (odata_read_functions.cpp:
 43-54).
+
+Pages decode a column at a time (``ColumnDecoders``): a column whose
+cells all already have the target's native JSON type (str, bool, float,
+an int within range) is taken as is, and offset-carrying ISO-8601
+timestamp strings are cast by Arrow; any other column goes through
+``decode_value`` cell by cell, so the lenient semantics live in one
+place. ``decode_rows`` returns Python tuples, ``decode_batch`` a
+``pyarrow.RecordBatch`` matching PySpark's Arrow schema for the scan.
 """
 
 from __future__ import annotations
@@ -41,14 +49,18 @@ from pyspark.sql.types import (
     FloatType,
     IntegerType,
     LongType,
+    MapType,
     ShortType,
     StringType,
+    StructField,
     StructType,
+    TimestampNTZType,
     TimestampType,
 )
 
 _V2_DATE_RE = re.compile(r"/Date\((-?\d+)([+-]\d{4})?\)/")
 _META_KEYS = {"__metadata", "__deferred"}
+_INT_BITS = {ByteType: 8, ShortType: 16, IntegerType: 32, LongType: 64}
 
 
 def _to_bool(v: Any):
@@ -121,7 +133,8 @@ def _to_timestamp(v: Any):
             if parsed.tzinfo is not None:
                 parsed = parsed.astimezone(dt.timezone.utc).replace(tzinfo=None)
             return parsed
-        except ValueError:
+        except (ValueError, OverflowError):
+            # OverflowError: an offset shifts the instant past year 1..9999
             return None
     if isinstance(v, (int, float)) and not isinstance(v, bool):
         return _epoch_secs(int(v))
@@ -179,8 +192,7 @@ def decode_value(v: Any, data_type: DataType):
     if isinstance(data_type, BooleanType):
         return _to_bool(v)
     if isinstance(data_type, (ByteType, ShortType, IntegerType, LongType)):
-        bits = {ByteType: 8, ShortType: 16, IntegerType: 32, LongType: 64}
-        return _to_int(v, bits[type(data_type)])
+        return _to_int(v, _INT_BITS[type(data_type)])
     if isinstance(data_type, (FloatType, DoubleType)):
         return _to_float(v)
     if isinstance(data_type, DecimalType):
@@ -251,14 +263,182 @@ def total_count(doc: Any) -> int | None:
     return None
 
 
+# ---------------------------------------------------------------------------
+# Column-wise page decoding
+# ---------------------------------------------------------------------------
+
+_NoneType = type(None)
+# Python types decode_value returns unchanged for these Spark types.
+_NATIVE = {
+    StringType: str,
+    BooleanType: bool,
+    ByteType: int,
+    ShortType: int,
+    IntegerType: int,
+    LongType: int,
+    FloatType: float,
+    DoubleType: float,
+}
+# Microseconds since epoch of datetime.min / datetime.max (UTC).
+_MIN_US, _MAX_US = -62135596800000000, 253402300799999999
+
+
+class _Column:
+    """Decoder for one schema field's cells (JSON values, one per row)."""
+
+    __slots__ = ("name", "data_type", "native", "bound")
+
+    def __init__(self, name: str, data_type: DataType):
+        self.name = name
+        self.data_type = data_type
+        self.native = _NATIVE.get(type(data_type))
+        bits = _INT_BITS.get(type(data_type))
+        self.bound = 1 << (bits - 1) if bits else None
+
+    def cells(self, objs: list[dict]) -> list:
+        if self.name in _META_KEYS:
+            return [None] * len(objs)
+        name = self.name
+        return [o.get(name) for o in objs]
+
+    def is_native(self, cells: list) -> bool:
+        """True when ``decode_value`` would return every cell unchanged:
+        each is None or exactly the native type (``type(v) is int``, so
+        bools stay out of int columns), and ints fit the target width."""
+        if self.native is None:
+            return False
+        kinds = set(map(type, cells))
+        kinds.discard(_NoneType)
+        if not kinds:
+            return True
+        if kinds != {self.native}:
+            return False
+        if self.bound is not None:
+            present = [v for v in cells if v is not None]
+            return -self.bound <= min(present) and max(present) < self.bound
+        return True
+
+    def values(self, cells: list) -> list:
+        if self.is_native(cells):
+            return cells
+        data_type = self.data_type
+        return [decode_value(v, data_type) for v in cells]
+
+    def arrow(self, cells: list, arrow_type, convert):
+        import pyarrow as pa
+
+        if isinstance(self.data_type, TimestampType):
+            arr = _iso_timestamps(cells, arrow_type)
+            if arr is not None:
+                return arr
+        values = self.values(cells)
+        if convert is not None:
+            values = [convert(v) for v in values]
+        return pa.array(values, type=arrow_type)
+
+
+def _iso_timestamps(cells: list, arrow_type):
+    """Arrow's ISO-8601 cast of a column of strings that all carry a zone
+    offset, or None when any cell needs the scalar decoder (zone-less,
+    ``/Date(..)/``, numbers, unparsable, or outside years 1..9999)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    kinds = set(map(type, cells))
+    kinds.discard(_NoneType)
+    if kinds != {str}:
+        return None
+    try:
+        arr = pc.cast(pa.array(cells, pa.string()), arrow_type)
+    except pa.ArrowInvalid:
+        return None
+    span = pc.min_max(arr.view(pa.int64())).as_py()
+    if span["min"] < _MIN_US or span["max"] > _MAX_US:
+        return None
+    return arr
+
+
+def _naive_utc(data_type: DataType) -> DataType:
+    """``data_type`` with every TimestampType read as TimestampNTZType.
+    Decoded timestamps are naive UTC; PySpark's TimestampType converter
+    would read them as worker-local time, while Arrow stores a naive
+    datetime in a UTC timestamp column as the UTC instant it names."""
+    if isinstance(data_type, TimestampType):
+        return TimestampNTZType()
+    if isinstance(data_type, ArrayType):
+        return ArrayType(_naive_utc(data_type.elementType), data_type.containsNull)
+    if isinstance(data_type, MapType):
+        return MapType(
+            _naive_utc(data_type.keyType),
+            _naive_utc(data_type.valueType),
+            data_type.valueContainsNull,
+        )
+    if isinstance(data_type, StructType):
+        return StructType(
+            [StructField(f.name, _naive_utc(f.dataType), f.nullable) for f in data_type.fields]
+        )
+    return data_type
+
+
+def _row_objects(doc: Any) -> list[dict]:
+    return [o for o in extract_rows_payload(doc) if isinstance(o, dict)]
+
+
+class ColumnDecoders:
+    """The per-field column decoders for one schema, built once per
+    reader and shared by ``rows`` (Python tuples) and ``batch`` (Arrow).
+
+    ``batch`` builds its Arrow schema like PySpark's data-source reader
+    (``to_arrow_schema``). Columns without a native fast path (timestamp,
+    decimal, binary, nested, ...) pass their decoded values through
+    PySpark's own ``LocalDataToArrowConversion`` converter, so they hold
+    what PySpark would build from the same tuples."""
+
+    def __init__(self, schema: StructType):
+        self._schema = schema
+        self._columns = [_Column(f.name, f.dataType) for f in schema.fields]
+        self._arrow = None  # (pyarrow schema, converter per column), built on first batch()
+
+    def rows(self, doc: Any) -> list[tuple]:
+        objs = _row_objects(doc)
+        if not self._columns:
+            return [()] * len(objs)
+        return list(zip(*(c.values(c.cells(objs)) for c in self._columns)))
+
+    def batch(self, doc: Any):
+        import pyarrow as pa
+
+        if self._arrow is None:
+            self._arrow = self._arrow_plan()
+        arrow_schema, converters = self._arrow
+        objs = _row_objects(doc)
+        arrays = [
+            col.arrow(col.cells(objs), arrow_schema.field(i).type, converters[i])
+            for i, col in enumerate(self._columns)
+        ]
+        return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+
+    def _arrow_plan(self):
+        from pyspark.sql.conversion import LocalDataToArrowConversion
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        converters = [
+            None
+            if col.native is not None
+            else LocalDataToArrowConversion._create_converter(
+                _naive_utc(col.data_type), none_on_identity=True
+            )
+            for col in self._columns
+        ]
+        return to_arrow_schema(self._schema), converters
+
+
 def decode_rows(doc: Any, schema: StructType) -> list[tuple]:
     """Decode a response document into tuples matching ``schema``."""
-    out = []
-    for obj in extract_rows_payload(doc):
-        if not isinstance(obj, dict):
-            continue
-        clean = {k: v for k, v in obj.items() if k not in _META_KEYS}
-        out.append(
-            tuple(decode_value(clean.get(f.name), f.dataType) for f in schema.fields)
-        )
-    return out
+    return ColumnDecoders(schema).rows(doc)
+
+
+def decode_batch(doc: Any, schema: StructType):
+    """Decode a response document into a ``pyarrow.RecordBatch`` with
+    PySpark's Arrow schema for ``schema``; timestamps are UTC instants."""
+    return ColumnDecoders(schema).batch(doc)

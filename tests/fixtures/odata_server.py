@@ -378,8 +378,9 @@ def _make_handler(state: FixtureState):
             parts = urlsplit(self.path)
             q = dict(parse_qsl(parts.query, keep_blank_values=True))
             state.log.append({
-                "method": self.command, "path": parts.path, "query": q,
+                "method": self.command, "path": parts.path, "query": dict(q),
                 "headers": {k: v for k, v in self.headers.items()},
+                "peer": self.client_address,
             })
             route = parts.path
 
@@ -444,6 +445,13 @@ def _make_handler(state: FixtureState):
             if route in ("/v4/People", "/v4/Orders"):
                 data = PEOPLE if route.endswith("People") else V4_ORDERS
                 return self._serve_v4(route, data, q)
+            # Same service behind a gateway that drops $top: the client
+            # must cut its row budget itself, mid-page.
+            if route == "/v4-notop/$metadata":
+                return self._send(200, EDMX_V4.encode(), "application/xml")
+            if route == "/v4-notop/People":
+                q.pop("$top", None)
+                return self._serve_v4(route, PEOPLE, q)
 
             # ---- OData v2 -------------------------------------------------
             if route == "/v2/$metadata":

@@ -410,3 +410,94 @@ def test_sample_inference_fallback(registered, fixture_server):
     )
     assert all(f.dataType.simpleString() == "string" for f in df.schema.fields)
     assert "__metadata" not in df.columns
+
+
+def test_version_from_metadata_no_unfiltered_probe(registered, fixture_server):
+    """The protocol version comes from the cached EDMX: a filtered read
+    sends every entity-set GET with its $filter (or as the $count
+    probe) — no unfiltered first page fetched just to detect v2/v4."""
+    fixture_server.state.log.clear()
+    v4 = read_people(registered, fixture_server).filter(F.col("Age") > 24)
+    assert v4.count() == 5
+    v2 = (
+        registered.read.format("odata")
+        .option("url", fixture_server.base_url + "/v2/Customers")
+        .load()
+        .filter(F.col("Country") == "Spain")
+    )
+    assert [r["CustomerID"] for r in v2.collect()] == ["C004"]
+    for path in ("/v4/People", "/v2/Customers"):
+        reqs = fixture_server.state.requests_for(path)
+        assert reqs
+        unfiltered = [
+            r["query"] for r in reqs
+            if "$filter" not in r["query"]
+            and "$count" not in r["query"] and "$inlinecount" not in r["query"]
+        ]
+        assert unfiltered == [], f"version probe on {path}: {unfiltered}"
+
+
+def test_reader_shares_one_session_for_metadata_and_count(fixture_server):
+    """reader() fetches the EDMX and partitions() sends the $count probe
+    over one keep-alive connection; the pickled reader carries no
+    client to the executors."""
+    import pickle
+
+    from erpl_web_spark.odata.client import clear_edm_cache
+    from erpl_web_spark.odata.datasource import ODataDataSource
+
+    src = ODataDataSource({
+        "url": fixture_server.base_url + "/v4/People", "auto_partition_rows": "3",
+    })
+    schema = src.schema()
+    clear_edm_cache()
+    fixture_server.state.log.clear()
+    reader = src.reader(schema)
+    assert reader._version == 4
+    assert len(reader.partitions()) == 4
+    log = fixture_server.state.log
+    assert [r["path"] for r in log] == ["/v4/$metadata", "/v4/People"]
+    assert log[1]["query"].get("$count") == "true"
+    assert log[0]["peer"] == log[1]["peer"]
+    assert pickle.loads(pickle.dumps(reader))._http is None
+
+
+def _notop_people(registered, fixture_server, **options):
+    reader = registered.read.format("odata").option(
+        "url", fixture_server.base_url + "/v4-notop/People"
+    )
+    for k, v in options.items():
+        reader = reader.option(k, v)
+    return reader.load().select("UserName", "Age", "Joined")
+
+
+def test_top_trimmed_mid_page_when_server_ignores_top(registered, fixture_server):
+    """The row budget is cut client-side: top=4 over 3-row pages ends
+    inside the second page, and no third page is fetched."""
+    fixture_server.state.log.clear()
+    rows = _notop_people(registered, fixture_server, top="4").collect()
+    assert [(r["UserName"], r["Age"]) for r in rows] == [
+        ("user0", 20), ("user1", 21), ("user2", 22), ("user3", 23),
+    ]
+    assert rows[3]["Joined"] == dt.datetime(2023, 4, 15, 10, 30)
+    pages = [
+        r for r in fixture_server.state.requests_for("/v4-notop/People")
+        if "$count" not in r["query"]
+    ]
+    assert len(pages) == 2, [r["query"] for r in pages]
+
+
+@pytest.mark.parametrize(
+    "options, sizes",
+    [({"parallelism": "3"}, [4, 4, 2]), ({"parallelism": "2", "top": "7"}, [4, 3])],
+)
+def test_partition_windows_trimmed_mid_page(registered, fixture_server, options, sizes):
+    """parallelism=N windows ($skip + $top, ignored by this server) end
+    inside a 3-row page: each partition keeps exactly its window."""
+    df = _notop_people(registered, fixture_server, **options)
+    assert df.rdd.glom().map(len).collect() == sizes
+    rows = df.collect()
+    n = sum(sizes)
+    assert [(r["UserName"], r["Age"]) for r in rows] == [
+        (f"user{i}", 20 + i) for i in range(n)
+    ]

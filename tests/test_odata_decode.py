@@ -89,3 +89,198 @@ def test_payload_shapes_and_links():
     assert next_link({"value": []}) is None
     assert total_count({"@odata.count": 7}) == 7
     assert total_count({"d": {"__count": "9"}}) == 9
+
+
+# ---------------------------------------------------------------------------
+# Column-wise Arrow decoding (pure pyarrow, no SparkSession)
+# ---------------------------------------------------------------------------
+
+import time  # noqa: E402
+
+import pytest  # noqa: E402
+
+from pyspark.sql.types import (  # noqa: E402
+    BinaryType,
+    ByteType,
+    DateType,
+    DoubleType,
+    ShortType,
+)
+
+
+@pytest.fixture()
+def tz(monkeypatch):
+    """Set the process time zone (``TZ`` + ``time.tzset``) for one test."""
+
+    def set_tz(name):
+        monkeypatch.setenv("TZ", name)
+        time.tzset()
+
+    yield set_tz
+    monkeypatch.undo()
+    time.tzset()
+
+
+_MIXED = StructType([
+    StructField("i32", IntegerType()),
+    StructField("i8", ByteType()),
+    StructField("i16", ShortType()),
+    StructField("flag", BooleanType()),
+    StructField("ts", TimestampType()),
+    StructField("day", DateType()),
+    StructField("amount", DecimalType(10, 2)),
+    StructField("blob", BinaryType()),
+    StructField("tags", ArrayType(LongType())),
+    StructField("home", StructType([
+        StructField("city", StringType()),
+        StructField("since", TimestampType()),
+    ])),
+    StructField("name", StringType()),
+    StructField("score", DoubleType()),
+])
+
+_MIXED_ROWS = [
+    {"i32": "42", "i8": 127, "i16": True, "flag": "true", "ts": "/Date(1000000123456)/",
+     "day": 19372, "amount": "12.345", "blob": "aGVsbG8=", "tags": [1, "2", None],
+     "home": {"city": "Rome", "since": "2023-01-15T10:30:00+01:00"}, "name": 7,
+     "score": "2.5"},
+    {"i32": 2**40, "i8": 128, "i16": -(2**15), "flag": 0, "ts": "/Date(1000000000000+0200)/",
+     "day": "2023-01-15", "amount": 3, "blob": "not base64!", "tags": {"results": [5]},
+     "home": {"since": 1673778600}, "name": True, "score": 1},
+    {"i32": 1, "i8": "0x1", "i16": 3.7, "flag": 1, "ts": 1673778600,
+     "day": "garbage", "amount": "n/a", "tags": "x", "home": "not-a-struct",
+     "name": {"nested": [1]}, "score": None},
+    {"i32": 0, "flag": "0", "ts": "2023-01-15T10:30:00", "name": "plain"},
+    {"flag": False, "ts": "garbage"},
+    {"i32": 2**31 - 1, "flag": True, "ts": "2023-01-15T10:30:00Z", "day": 0.9},
+]
+
+_V2_SCHEMA = StructType([
+    StructField("CustomerID", StringType()),
+    StructField("Founded", TimestampType()),
+    StructField("Orders", ArrayType(StringType())),
+    StructField("__metadata", StringType()),
+])
+
+_V2_DOC = {"d": {"results": [
+    {"__metadata": {"uri": "Customers('C1')"}, "CustomerID": "C1",
+     "Founded": "/Date(1000000000000)/", "Orders": {"__deferred": {"uri": "x"}}},
+    {"__metadata": {"uri": "Customers('C2')"}, "CustomerID": "C2",
+     "Founded": "/Date(-1500)/", "Orders": {"results": ["o1", "o2"]}},
+]}}
+
+# every column native: the fast paths (and the Arrow ISO-8601 cast)
+_NATIVE = StructType([
+    StructField("id", LongType()),
+    StructField("qty", IntegerType()),
+    StructField("ok", BooleanType()),
+    StructField("price", DoubleType()),
+    StructField("name", StringType()),
+    StructField("at", TimestampType()),
+])
+
+_NATIVE_DOC = {"value": [
+    {"id": 2**62, "qty": -(2**31), "ok": True, "price": 1.5, "name": "a",
+     "at": "2023-01-15T10:30:00Z"},
+    {"id": -1, "qty": 7, "ok": None, "price": -0.0, "name": "",
+     "at": "2023-01-15T10:30:00.123456+02:00"},
+    {"id": None, "qty": None, "ok": False, "price": 1e300, "name": None,
+     "at": "1969-12-31T23:59:59.5+05:00"},
+    {"id": 0, "qty": 0, "ok": True, "price": 3.25, "name": "ü",
+     "at": "9999-12-31 23:59:59-00:30"},
+    {"id": 5, "qty": 1, "ok": False, "price": 0.1, "name": "z", "at": None},
+]}
+
+
+def _tuple_path(doc, schema):
+    """The tuple reader's Arrow: decode_rows + PySpark's converter."""
+    from pyspark.sql.worker.plan_data_source_read import records_to_arrow_batches
+
+    from erpl_web_spark.odata.datasource import ODataDataSource
+
+    rows = decode_rows(doc, schema)
+    batches = list(records_to_arrow_batches(iter(rows), 10_000, schema, ODataDataSource({})))
+    return batches[0] if batches else None
+
+
+@pytest.mark.parametrize(
+    "doc, schema",
+    [
+        ({"value": _MIXED_ROWS + [5, "not-a-row", None]}, _MIXED),
+        (_V2_DOC, _V2_SCHEMA),
+        (_NATIVE_DOC, _NATIVE),
+        ({"value": [{"id": 2**63}, {"qty": 2**31}, {"ok": 1}, {"price": 2}, {"name": 1},
+                    {"at": "2023-01-15T10:30:00.1234567Z"}, {"at": "2023-01-15"}]}, _NATIVE),
+    ],
+    ids=["lenient", "v2", "native", "native-fallbacks"],
+)
+def test_decode_batch_matches_tuple_path(tz, doc, schema):
+    pa = pytest.importorskip("pyarrow")
+    from erpl_web_spark.odata.json_decode import decode_batch
+
+    tz("UTC")  # the tuple path reads naive timestamps as local time
+    got = decode_batch(doc, schema)
+    want = _tuple_path(doc, schema)
+    assert isinstance(got, pa.RecordBatch)
+    assert got.schema == want.schema
+    assert got.to_pylist() == want.to_pylist()
+    assert got.num_rows == len(decode_rows(doc, schema))
+
+
+def test_decode_batch_lenient_values():
+    pytest.importorskip("pyarrow")
+    from erpl_web_spark.odata.json_decode import decode_batch
+
+    cols = decode_batch({"value": _MIXED_ROWS}, _MIXED).to_pydict()
+    assert cols["i32"] == [42, None, 1, 0, None, 2**31 - 1]  # 2**40 out of range
+    assert cols["i8"] == [127, None, None, None, None, None]
+    assert cols["i16"] == [None, -(2**15), 3, None, None, None]  # bool -> NULL
+    assert cols["flag"] == [True, False, True, False, False, True]
+    utc = dt.timezone.utc
+    assert cols["ts"] == [
+        dt.datetime(2001, 9, 9, 1, 48, 43, tzinfo=utc),
+        dt.datetime(2001, 9, 9, 1, 46, 40, tzinfo=utc),
+        dt.datetime(2023, 1, 15, 10, 30, tzinfo=utc),
+        dt.datetime(2023, 1, 15, 10, 30, tzinfo=utc),  # zone-less read as UTC
+        None,
+        dt.datetime(2023, 1, 15, 10, 30, tzinfo=utc),
+    ]
+    assert cols["day"] == [dt.date(2023, 1, 15), dt.date(2023, 1, 15), None, None, None,
+                           dt.date(1970, 1, 1)]
+    assert cols["amount"][:3] == [Decimal("12.34"), Decimal("3.00"), None]
+    assert cols["blob"][0] == b"hello"
+    assert cols["tags"][:3] == [[1, 2, None], [5], None]
+    assert cols["home"][0] == {
+        "city": "Rome", "since": dt.datetime(2023, 1, 15, 9, 30, tzinfo=utc),
+    }
+    assert cols["name"][:3] == ["7", "true", '{"nested": [1]}']
+    # offsets that push the instant outside years 1..9999 -> NULL
+    edge = decode_batch(
+        {"value": [{"at": "0001-01-01T00:00:00Z"}, {"at": "0001-01-01T00:00:00+01:00"},
+                   {"at": "9999-12-31T23:00:00-05:00"}]},
+        StructType([StructField("at", TimestampType())]),
+    )
+    assert edge.column(0).to_pylist() == [dt.datetime(1, 1, 1, tzinfo=utc), None, None]
+
+
+def test_decode_batch_keeps_utc_instant_in_any_time_zone(tz):
+    """Timestamps land as the UTC instant whatever the worker's zone: on
+    the Arrow-cast fast path, the scalar fallback and inside structs."""
+    pytest.importorskip("pyarrow")
+    from erpl_web_spark.odata.json_decode import decode_batch
+
+    schema = StructType([
+        StructField("fast", TimestampType()),
+        StructField("slow", TimestampType()),
+        StructField("nested", StructType([StructField("at", TimestampType())])),
+    ])
+    doc = {"value": [{
+        "fast": "2023-01-15T10:30:00Z",
+        "slow": "/Date(1673778600000)/",
+        "nested": {"at": "2023-01-15T10:30:00Z"},
+    }]}
+    want = dt.datetime(2023, 1, 15, 10, 30, tzinfo=dt.timezone.utc)
+    for zone in ("Europe/Berlin", "America/New_York", "UTC"):
+        tz(zone)
+        row = decode_batch(doc, schema).to_pylist()[0]
+        assert row == {"fast": want, "slow": want, "nested": {"at": want}}, zone
