@@ -12,7 +12,10 @@ rows and schema, zero Python workers at execution (measured 0.13 s).
 Exactness guards — fall back to the classic path whenever the Arrow
 conversion could diverge: NaN doubles (Arrow's from_pandas reads NaN as
 null — the one measured value divergence), empty row sets (pandas loses
-the column count), and nested cells (list/tuple/dict under dtype=object).
+the column count), nested cells (list/tuple/dict under dtype=object),
+mapping rows (``tuple(row)`` would be the keys; the classic path maps
+them by field name) and ragged rows (pandas pads short rows with NULL
+where the classic path raises).
 dtype=object preserves int64 exactly (no float64 widening), None stays
 null, naive datetimes stay NTZ — pinned by tests/test_local_rows.py.
 """
@@ -20,6 +23,7 @@ null, naive datetimes stay NTZ — pinned by tests/test_local_rows.py.
 from __future__ import annotations
 
 import math
+from collections.abc import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -35,7 +39,12 @@ def local_rows(spark: SparkSession, rows, schema: str) -> DataFrame:
             return False
         return not isinstance(v, (list, tuple, dict, set))
 
-    if not rows or not all(_safe(v) for r in rows for v in r):
+    if (
+        not rows
+        or any(isinstance(r, Mapping) for r in rows)
+        or len({len(r) for r in rows}) > 1
+        or not all(_safe(v) for r in rows for v in r)
+    ):
         return spark.createDataFrame(rows, schema)
     try:
         import pandas as pd

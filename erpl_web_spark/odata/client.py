@@ -14,10 +14,21 @@ from __future__ import annotations
 from collections.abc import Iterator
 from typing import Any
 
-from erpl_web_spark.core.http import HttpClient
+from erpl_web_spark.core.http import HttpClient, HttpResponse
 from erpl_web_spark.core.url import HttpUrl
 from erpl_web_spark.odata.edm import EdmModel
 from erpl_web_spark.odata.json_decode import extract_rows_payload, next_link
+
+
+class HttpStatusError(RuntimeError):
+    """An HTTP error status (>= 400) on a page walk; ``status`` lets
+    callers branch on it (ODP's expired-token reload, Graph's 410)."""
+
+    def __init__(self, status: int, url: str):
+        super().__init__(f"HTTP {status} fetching {url}")
+        self.status = status
+        self.url = url
+
 
 # Process-wide EDMX cache keyed by metadata URL (mirrors EdmCache).
 _EDM_CACHE: dict[str, EdmModel] = {}
@@ -123,19 +134,22 @@ class ODataClient:
 
     # -- pagination --------------------------------------------------------
 
-    def pages(self, first_url: str | None = None, max_pages: int | None = None) -> Iterator[Any]:
-        """Yield response documents following next-links until absent."""
-        url = first_url or self.url
-        n = 0
+    def pages(
+        self, url: str | None = None, headers: dict[str, str] | None = None
+    ) -> Iterator[tuple[HttpResponse, Any]]:
+        """The OData next-link walk (odata_content.cpp:1072-1100): yield
+        each page's response and parsed document, starting at ``url``
+        (default: the client URL) and resolving each next link against
+        the page it came from. ``headers`` go on every page. Lazy: a
+        consumer that stops early fetches no further page."""
+        url = url or self.url
+        headers = headers or {"Accept": "application/json"}
         while url:
-            resp = self.http.get(url, headers={"Accept": "application/json"})
+            resp = self.http.get(url, headers=headers)
             if resp.status >= 400:
-                raise RuntimeError(f"HTTP {resp.status} fetching page {url}")
+                raise HttpStatusError(resp.status, url)
             doc = resp.json()
-            yield doc
-            n += 1
-            if max_pages is not None and n >= max_pages:
-                return
+            yield resp, doc
             link = next_link(doc)
             url = HttpUrl.parse(url).resolve(link).to_string() if link else None
 

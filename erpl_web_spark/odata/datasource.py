@@ -66,12 +66,12 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from erpl_web_spark.core.http import HttpClient
-from erpl_web_spark.core.secrets import default_registry
+from erpl_web_spark.core.secrets import auth_headers_from_options
 from erpl_web_spark.odata.client import ODataClient
 from erpl_web_spark.odata.edm import EdmModel
 from erpl_web_spark.odata.expand import parse_expand
 from erpl_web_spark.odata.filters import translate_filters
-from erpl_web_spark.odata.json_decode import ColumnDecoders, next_link, total_count
+from erpl_web_spark.odata.json_decode import ColumnDecoders, total_count
 from erpl_web_spark.odata.query_builder import ODataQueryBuilder
 from erpl_web_spark.core.url import HttpUrl
 
@@ -88,29 +88,10 @@ class ODataDataSource(DataSource):
     def name(cls) -> str:
         return "odata"
 
-    def _auth_headers(self) -> dict[str, str]:
-        # Inline options first (work on any cluster topology) ...
-        auth_type = self.options.get("auth_type")
-        if auth_type == "bearer" or "token" in self.options:
-            return {"Authorization": f"Bearer {self.options.get('token', '')}"}
-        if auth_type == "basic" or "username" in self.options:
-            import base64
-
-            cred = f"{self.options.get('username', '')}:{self.options.get('password', '')}"
-            return {"Authorization": "Basic " + base64.b64encode(cred.encode()).decode()}
-        # ... then the (file-backed) secret registry: by name, else by
-        # URL-scope longest-prefix match.
-        url = self.options.get("url", "")
-        secret_name = self.options.get("secret")
-        if secret_name:
-            s = default_registry.get(secret_name)
-            if s is not None:
-                return s.auth_headers()
-        return default_registry.auth_headers_for_url(url)
-
     def _client(self) -> ODataClient:
         return ODataClient(
-            self.options["url"], HttpClient(auth_headers=self._auth_headers())
+            self.options["url"],
+            HttpClient(auth_headers=auth_headers_from_options(self.options)),
         )
 
     def _apply_expr(self) -> str | None:
@@ -147,7 +128,7 @@ class ODataDataSource(DataSource):
                 apply=apply_expr,
                 top=32,
             ).build()
-            http = HttpClient(auth_headers=self._auth_headers())
+            http = HttpClient(auth_headers=auth_headers_from_options(self.options))
             doc = http.get(url, headers={"Accept": "application/json"}).json()
             rows = extract_rows_payload(doc)
             if not rows:
@@ -204,9 +185,10 @@ class ODataDataSource(DataSource):
     def reader(self, schema: StructType) -> "ODataReader":
         # One HttpClient (one keep-alive session) serves the metadata
         # fetch, the version fallback probe and the reader's $count probe.
-        auth = self._auth_headers()
+        auth = auth_headers_from_options(self.options)
         http = HttpClient(auth_headers=auth)
         client = ODataClient(self.options["url"], http)
+        apply_expr = self._apply_expr()
         try:
             model = client.get_model()
         except Exception:
@@ -219,7 +201,7 @@ class ODataDataSource(DataSource):
                 version = client.version
             except Exception:
                 version = 4
-        if self._apply_expr() and version == 2:
+        if apply_expr and version == 2:
             raise ValueError(
                 "$apply aggregation pushdown (groupby/aggregate/apply options) "
                 "is OData v4-only; this service speaks v2 — drop the options "
@@ -234,7 +216,7 @@ class ODataDataSource(DataSource):
         user_orderby = self.options.get("orderby")
         if user_orderby:
             order_keys = [s.strip() for s in user_orderby.split(",")]
-        elif self._apply_expr():
+        elif apply_expr:
             # Post-$apply results don't have the entity-set key columns —
             # an $orderby on them would be rejected by the server. (A user
             # orderby above is kept: $orderby evaluates after $apply.)
@@ -257,7 +239,7 @@ class ODataDataSource(DataSource):
             parallelism=self.options.get("parallelism", "auto"),
             order_keys=order_keys,
             always_order=bool(user_orderby),
-            apply=self._apply_expr(),
+            apply=apply_expr,
             auto_partition_rows=_int_opt(self.options, "auto_partition_rows") or 50_000,
             auto_partition_max=_int_opt(self.options, "auto_partition_max") or 32,
             http=http,
@@ -405,35 +387,29 @@ class ODataReader(DataSourceReader):
                 return single
             if self._top is not None and self._top < 2 * self._auto_rows:
                 return single
-            total = self._probe_total()
-            if not total:
-                return single
-            base_skip = self._skip or 0
-            # clamp an over-asked top to the rows that actually exist —
-            # otherwise windows past the end each burn an HTTP request
-            # for an empty page
-            limit = max(total - base_skip, 0)
-            if self._top is not None:
-                limit = min(self._top, limit)
+        elif self._parallelism <= 1:
+            # Explicit parallelism=N: user-forced split count (kept even
+            # without entity-set keys — the user override also forces
+            # $orderby off when no keys exist; documented sharp edge).
+            return single
+        total = self._probe_total()
+        if not total:
+            return single
+        base_skip = self._skip or 0
+        # clamp an over-asked top to the rows that actually exist —
+        # otherwise windows past the end each burn an HTTP request
+        # for an empty page
+        limit = max(total - base_skip, 0)
+        if self._top is not None:
+            limit = min(self._top, limit)
+        if self._auto:
             n = min(self._auto_max, (limit + self._auto_rows - 1) // self._auto_rows)
             if n < 2:
                 return single
         else:
-            # Explicit parallelism=N: user-forced split count (kept even
-            # without entity-set keys — the user override also forces
-            # $orderby off when no keys exist; documented sharp edge).
-            if self._parallelism <= 1:
+            n = min(self._parallelism, limit)
+            if n < 1:
                 return single
-            total = self._probe_total()
-            if not total:
-                return single
-            base_skip = self._skip or 0
-            limit = max(total - base_skip, 0)
-            if self._top is not None:
-                limit = min(self._top, limit)
-            if limit <= 0:
-                return single
-            n = min(self._parallelism, max(1, limit))
         chunk = (limit + n - 1) // n
         return [
             _PagePartition(i, base_skip + i * chunk, min(chunk, limit - i * chunk))
@@ -455,11 +431,7 @@ class ODataReader(DataSourceReader):
         )
         url = self._build_url(top=partition.top, skip=partition.skip, ordered=ordered)
         remaining = partition.top if partition.top is not None else self._top
-        while url:
-            resp = http.get(url, headers={"Accept": "application/json"})
-            if resp.status >= 400:
-                raise RuntimeError(f"HTTP {resp.status} fetching {url}")
-            doc = resp.json()
+        for _resp, doc in ODataClient(url, http).pages():
             batch = decoders.batch(doc)
             if remaining is not None:
                 batch = batch.slice(0, remaining)
@@ -468,8 +440,6 @@ class ODataReader(DataSourceReader):
                 yield batch
             if remaining is not None and remaining <= 0:
                 return
-            link = next_link(doc)
-            url = HttpUrl.parse(url).resolve(link).to_string() if link else None
 
 
 def ensure_registered(spark) -> None:

@@ -100,6 +100,12 @@ def apply_engine_conf(spark: SparkSession) -> SparkSession:
     The driver harness owns the SparkSession it passes to ``entry()`` /
     ``queries()``; we must not restart it, but runtime-mutable confs can
     still be aligned.
+
+    ``spark.sql.shuffle.partitions`` is replaced by the session's default
+    parallelism only while it reads 200, Spark's default. Caveat: the
+    value alone cannot tell an untouched default from an owner who set
+    200 on purpose, so a deliberate 200 is treated as untouched and
+    replaced too (set ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` to pin it).
     """
     for k, v in _TUNED_CONF.items():
         try:

@@ -39,6 +39,7 @@ from pyspark.sql.types import (
 
 from erpl_web_spark.core.http import HttpClient
 from erpl_web_spark.core.secrets import default_registry
+from erpl_web_spark.odata.client import HttpStatusError
 from erpl_web_spark.odata.json_decode import decode_value
 
 MAX_GRAPH_PAGES = 10000
@@ -59,24 +60,46 @@ class GraphClient:
             raise RuntimeError(f"Graph HTTP {resp.status} from {url}")
         return resp.json()
 
-    def get_paged_values(self, path: str) -> list[dict]:
-        """Merge `value` arrays across @odata.nextLink pages (E6)."""
-        url = self.base_url + path
-        out: list[dict] = []
+    def _absolute(self, link: str) -> str:
+        # Graph links are absolute, or relative to the versioned base
+        # ("/users?$skiptoken=..."); HttpUrl.resolve would drop the
+        # base path ("/v1.0").
+        return self.base_url + link if link.startswith("/") else link
+
+    def walk(self, link: str) -> tuple[list[dict], str | None]:
+        """The Graph page walk (E6, graph_client.cpp:203-245): merge
+        ``value`` arrays across ``@odata.nextLink`` pages from ``link``
+        (a base-relative path or an absolute next/delta link) and return
+        ``(items, cursor)``. The cursor is the last ``@odata.deltaLink``;
+        when MAX_GRAPH_PAGES cuts the walk short it is the pending
+        nextLink instead — Graph next links resume the same walk, so the
+        next call continues rather than restarting. An error status
+        raises ``HttpStatusError``."""
+        url: str | None = self._absolute(link)
+        items: list[dict] = []
+        cursor = None
         pages = 0
         while url:
             resp = self.http.get(url, headers={"Accept": "application/json"})
             if resp.status >= 400:
-                raise RuntimeError(f"Graph HTTP {resp.status} from {url}")
+                raise HttpStatusError(resp.status, url)
             doc = resp.json()
-            out.extend(doc.get("value", []))
+            items.extend(doc.get("value", []))
             pages += 1
-            if pages >= MAX_GRAPH_PAGES:
+            # Cursor first, cap second: breaking before capturing this
+            # page's links would strand the walk on collections larger
+            # than the cap.
+            nxt = doc.get("@odata.nextLink")
+            cursor = doc.get("@odata.deltaLink") or cursor
+            url = self._absolute(nxt) if nxt else None
+            if url and pages >= MAX_GRAPH_PAGES:
+                cursor = url
                 break
-            url = doc.get("@odata.nextLink")
-            if url and url.startswith("/"):
-                url = self.base_url + url
-        return out
+        return items, self._absolute(cursor) if cursor else None
+
+    def get_paged_values(self, path: str) -> list[dict]:
+        """Merge `value` arrays across @odata.nextLink pages (E6)."""
+        return self.walk(path)[0]
 
     def request(self, method: str, path: str, body: dict | None = None) -> Any:
         url = self.base_url + path
@@ -916,9 +939,10 @@ def planner_create_tasks(
 def _delta_sync(
     client: GraphClient, path: str, state_key: str, state_dir: str
 ) -> list[dict]:
-    """Shared Graph /delta token machinery (mirrors sources/odp.py):
-    walk @odata.nextLink pages, commit the @odata.deltaLink only after
-    the last page, 410 on an expired token -> drop state and reload."""
+    """Shared Graph /delta token machinery (mirrors sources/odp.py): one
+    ``GraphClient.walk`` from the stored cursor (else ``path``), the new
+    cursor committed only after the walk, 410 on a stored link -> drop
+    state and reload."""
     import json as _json
     import os
 
@@ -928,39 +952,16 @@ def _delta_sync(
     if os.path.exists(state_path):
         with open(state_path) as f:
             delta_link = _json.load(f).get("delta_link")
-
-    url = delta_link or (client.base_url + path)
-    items: list[dict] = []
-    new_delta = None
-    pages = 0
-    while url:
-        resp = client.http.get(url, headers={"Accept": "application/json"})
-        if resp.status == 410 and delta_link:
+    try:
+        items, cursor = client.walk(delta_link or path)
+    except HttpStatusError as e:
+        if e.status == 410 and delta_link:
             os.remove(state_path)
             return _delta_sync(client, path, state_key, state_dir)
-        if resp.status >= 400:
-            raise RuntimeError(f"Graph delta HTTP {resp.status} from {url}")
-        doc = resp.json()
-        items.extend(doc.get("value", []))
-        pages += 1
-        # Capture this page's cursor BEFORE any cap check: losing it
-        # would restart the walk from scratch next sync and never make
-        # progress on directories larger than the page cap.
-        nxt = doc.get("@odata.nextLink")
-        new_delta = doc.get("@odata.deltaLink") or new_delta
-        url = client.base_url + nxt if nxt and nxt.startswith("/") else nxt
-        if pages >= MAX_GRAPH_PAGES and url:
-            # Cap hit mid-walk: persist the nextLink as a resumable
-            # cursor (Graph next links resume the same delta walk), so
-            # the following sync continues instead of re-delivering.
-            new_delta = url
-            break
-
-    if new_delta:
-        if new_delta.startswith("/"):
-            new_delta = client.base_url + new_delta
+        raise
+    if cursor:
         with open(state_path, "w") as f:
-            _json.dump({"delta_link": new_delta}, f)
+            _json.dump({"delta_link": cursor}, f)
     return items
 
 

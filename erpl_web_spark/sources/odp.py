@@ -38,11 +38,11 @@ from dataclasses import asdict, dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from erpl_web_spark.core.http import HttpClient
+from erpl_web_spark.core.http import HttpClient, HttpResponse
 from erpl_web_spark.core.secrets import default_registry
 from erpl_web_spark.core.url import HttpUrl
-from erpl_web_spark.odata.client import ODataClient
-from erpl_web_spark.odata.json_decode import decode_rows, next_link
+from erpl_web_spark.odata.client import HttpStatusError, ODataClient
+from erpl_web_spark.odata.json_decode import decode_rows
 
 DEFAULT_STATE_DIR = os.environ.get(
     "ERPL_WEB_ODP_STATE_DIR", os.path.expanduser("~/.erpl_web_spark/odp")
@@ -204,20 +204,20 @@ class OdpReader:
         client = ODataClient(self.url, self.http)
         return client.get_model().schema_for_entity_set(client.entity_set_name())
 
-    def _fetch_all_pages(self, url: str, headers: dict[str, str]) -> tuple[list[dict], dict]:
-        """Follow next-links; return (docs, last_doc). The delta link only
-        appears on the LAST page — token commit is deferred until then."""
-        docs = []
-        current = url
-        while current:
-            resp = self.http.get(current, headers=headers)
-            if resp.status >= 400:
-                raise OdpHttpError(resp.status, current)
-            doc = resp.json()
-            docs.append(doc)
-            link = next_link(doc)
-            current = HttpUrl.parse(current).resolve(link).to_string() if link else None
-        return docs, docs[-1]
+    def fetch(self, url: str, schema: StructType) -> tuple[list[tuple], HttpResponse, dict]:
+        """Decoded rows of every page from ``url`` on (the
+        ``ODataClient.pages`` walk, the track-changes ``Prefer`` header
+        on every page), the first response and the last document. The
+        delta link appears only on the LAST page, so the token commit
+        waits for it (I4)."""
+        rows: list[tuple] = []
+        first = None
+        walk = ODataClient(self.url, self.http).pages(url, self._prefer_header())
+        for resp, doc in walk:
+            if first is None:
+                first = resp
+            rows.extend(decode_rows(doc, schema))
+        return rows, first, doc
 
     def run_batch(
         self, force_full_load: bool = False, import_delta_token: str | None = None
@@ -239,7 +239,7 @@ class OdpReader:
             phase = "DELTA_FETCH"
             try:
                 rows, sub = self._delta_fetch(sub, schema)
-            except OdpHttpError as e:
+            except HttpStatusError as e:
                 if e.status in (400, 404, 410):
                     # expired/invalid token -> automatic full reload (I5)
                     phase = "INITIAL_LOAD(token-fallback)"
@@ -267,26 +267,11 @@ class OdpReader:
         return {"Accept": "application/json", "Prefer": prefer}
 
     def _initial_load(self, sub: OdpSubscription, schema: StructType):
-        headers = self._prefer_header()
-        resp = self.http.get(self.url, headers=headers)
-        if resp.status >= 400:
-            raise OdpHttpError(resp.status, self.url)
-        applied = "track-changes" in resp.headers.get(
-            "Preference-Applied", resp.headers.get("preference-applied", "")
+        rows, first, last = self.fetch(self.url, schema)
+        sub.preference_applied = "track-changes" in first.headers.get(
+            "Preference-Applied", first.headers.get("preference-applied", "")
         )
-        sub.preference_applied = applied
-        first = resp.json()
-        docs = [first]
-        link = next_link(first)
-        if link:
-            more, _ = self._fetch_all_pages(
-                HttpUrl.parse(self.url).resolve(link).to_string(), headers
-            )
-            docs.extend(more)
-        rows: list[tuple] = []
-        for d in docs:
-            rows.extend(decode_rows(d, schema))
-        token, delta_link = extract_delta_token(docs[-1])
+        token, delta_link = extract_delta_token(last)
         if delta_link:
             sub.delta_token = token
             sub.delta_link = HttpUrl.parse(self.url).resolve(delta_link).to_string()
@@ -294,23 +279,12 @@ class OdpReader:
         return rows, sub
 
     def _delta_fetch(self, sub: OdpSubscription, schema: StructType):
-        headers = self._prefer_header()
-        docs, last = self._fetch_all_pages(sub.delta_link, headers)
-        rows: list[tuple] = []
-        for d in docs:
-            rows.extend(decode_rows(d, schema))
+        rows, _first, last = self.fetch(sub.delta_link, schema)
         token, delta_link = extract_delta_token(last)
         if delta_link:  # advance token only after the last page (I4)
             sub.delta_token = token
             sub.delta_link = HttpUrl.parse(sub.delta_link).resolve(delta_link).to_string()
         return rows, sub
-
-
-class OdpHttpError(RuntimeError):
-    def __init__(self, status: int, url: str):
-        super().__init__(f"ODP HTTP {status} from {url}")
-        self.status = status
-        self.url = url
 
 
 # -- public API -------------------------------------------------------------

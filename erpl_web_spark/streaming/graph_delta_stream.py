@@ -122,40 +122,12 @@ class GraphDeltaStreamReader(SimpleDataSourceStreamReader):
         self._delta_path = delta_path or f"/{entity}/delta"
         self._col_specs = col_specs
 
-    def _client(self):
+    def _fetch(self, start: dict) -> tuple[list[dict], str | None]:
+        """(items, next cursor) of one ``GraphClient.walk`` from the
+        ``start`` offset's link, else from the entity's delta path."""
         from erpl_web_spark.sources.graph import GraphClient
 
-        return GraphClient(self._base_url)
-
-    def _walk(self, url: str) -> tuple[list[dict], str | None]:
-        from erpl_web_spark.sources.graph import MAX_GRAPH_PAGES
-
-        client = self._client()
-        items: list[dict] = []
-        delta = None
-        pages = 0
-        while url:
-            resp = client.http.get(url, headers={"Accept": "application/json"})
-            if resp.status >= 400:
-                raise RuntimeError(f"Graph delta HTTP {resp.status} from {url}")
-            doc = resp.json()
-            items.extend(doc.get("value", []))
-            pages += 1
-            # Cursor first, cap second: breaking before capturing this
-            # page's links would strand the offset and re-deliver the
-            # same rows every micro-batch on large directories.
-            nxt = doc.get("@odata.nextLink")
-            delta = doc.get("@odata.deltaLink") or delta
-            url = self._base_url + nxt if nxt and nxt.startswith("/") else nxt
-            if pages >= MAX_GRAPH_PAGES and url:
-                # Cap hit mid-walk: advance the offset to the nextLink —
-                # a resumable cursor — so the following micro-batch
-                # continues the walk instead of restarting it.
-                delta = url
-                break
-        if delta and delta.startswith("/"):
-            delta = self._base_url + delta
-        return items, delta
+        return GraphClient(self._base_url).walk(start.get("delta_link") or self._delta_path)
 
     def _rows(self, items: list[dict]) -> list[tuple]:
         if self._entity == "list_items":
@@ -185,16 +157,14 @@ class GraphDeltaStreamReader(SimpleDataSourceStreamReader):
         return {"delta_link": ""}
 
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
-        url = start.get("delta_link") or f"{self._base_url}{self._delta_path}"
-        items, delta = self._walk(url)
-        return iter(self._rows(items)), {"delta_link": delta or start.get("delta_link", "")}
+        items, cursor = self._fetch(start)
+        return iter(self._rows(items)), {"delta_link": cursor or start.get("delta_link", "")}
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
         # Failure replay: Graph replays a delta link until the next one is
         # requested, so re-walking the start link is deterministic within
         # the service's retention window.
-        url = start.get("delta_link") or f"{self._base_url}{self._delta_path}"
-        items, _ = self._walk(url)
+        items, _ = self._fetch(start)
         return iter(self._rows(items))
 
     def commit(self, end: dict) -> None:

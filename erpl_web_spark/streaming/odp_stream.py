@@ -24,7 +24,7 @@ from collections.abc import Iterator
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import StructType
 
-from erpl_web_spark.sources.odp import DEFAULT_STATE_DIR, OdpHttpError, OdpReader
+from erpl_web_spark.sources.odp import DEFAULT_STATE_DIR, OdpReader
 
 
 class OdpStreamDataSource(DataSource):
@@ -78,16 +78,10 @@ class OdpStreamReader(SimpleDataSourceStreamReader):
         if not link:
             rows, _sch, _sub, _ph = reader.run_batch(force_full_load=True)
             return iter(rows)
-        try:
-            docs, _last = reader._fetch_all_pages(link, reader._prefer_header())
-        except OdpHttpError:
-            return iter([])
-        from erpl_web_spark.odata.json_decode import decode_rows
-
-        out: list[tuple] = []
-        for d in docs:
-            out.extend(decode_rows(d, self._schema))
-        return iter(out)
+        # An HTTP error (a 503 after retries, an expired token) raises:
+        # an empty replay would silently drop the batch's rows.
+        rows, _first, _last = reader.fetch(link, self._schema)
+        return iter(rows)
 
     def commit(self, end: dict) -> None:
         pass  # durable state already advanced by the repo on each batch

@@ -333,31 +333,47 @@ def test_graph_users_delta_sync(spark, fixture_server, tmp_path):
     assert len(final) == 4
 
 
-def test_graph_delta_page_cap_resumes(spark, fixture_server, tmp_path, monkeypatch):
+@pytest.mark.parametrize("surface", ["batch", "stream"])
+def test_graph_delta_page_cap_resumes(spark, fixture_server, tmp_path, monkeypatch, surface):
     """Hitting MAX_GRAPH_PAGES mid-walk must persist that page's
     nextLink as a resumable cursor: the next sync continues the walk
     (no re-delivery, no lost progress) and eventually lands on the
-    deltaLink steady state."""
+    deltaLink steady state — for the batch helper (cursor in a state
+    file) and the streaming source (cursor as the offset) alike."""
     import erpl_web_spark.sources.graph as graph_mod
     from erpl_web_spark.core.http import HttpClient
     from erpl_web_spark.sources.graph import GraphClient, graph_users_delta
+    from erpl_web_spark.streaming.graph_delta_stream import GraphDeltaStreamReader
 
     monkeypatch.setattr(graph_mod, "MAX_GRAPH_PAGES", 1)
-    g = GraphClient(fixture_server.base_url + "/graph", HttpClient())
-    state = str(tmp_path / "gstate")
+    base = fixture_server.base_url + "/graph"
+    if surface == "batch":
+        g = GraphClient(base, HttpClient())
+        state = str(tmp_path / "gstate")
+
+        def sync():
+            df = graph_users_delta(spark, g, state)
+            return [(r["id"], r["change_op"]) for r in df.collect()]
+    else:
+        reader = GraphDeltaStreamReader(base, "users")
+        offset = reader.initialOffset()
+
+        def sync():
+            nonlocal offset
+            rows, offset = reader.read(offset)
+            return [(r[0], r[-1]) for r in rows]
 
     # page cap of 1: the 5-user 2-page initial load arrives over two syncs
-    first = graph_users_delta(spark, g, state).collect()
+    first = sync()
     assert len(first) == 3
-    second = graph_users_delta(spark, g, state).collect()
+    second = sync()
     assert len(second) == 2
     # no overlap — progress, not re-delivery
-    assert {r["id"] for r in first}.isdisjoint({r["id"] for r in second})
+    assert {i for i, _ in first}.isdisjoint({i for i, _ in second})
 
     # now on the deltaLink: changes, then steady state, as usual
-    ops = {r["id"]: r["change_op"] for r in graph_users_delta(spark, g, state).collect()}
-    assert ops == {"u1": "U", "u3": "D"}
-    assert graph_users_delta(spark, g, state).count() == 0
+    assert dict(sync()) == {"u1": "U", "u3": "D"}
+    assert sync() == []
 
 
 def test_graph_groups_delta_sync(spark, fixture_server, tmp_path):

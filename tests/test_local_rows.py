@@ -13,6 +13,8 @@ from __future__ import annotations
 import datetime
 import math
 
+import pytest
+
 from erpl_web_spark.core.localframe import local_rows
 
 
@@ -69,6 +71,25 @@ def test_nested_and_empty_fall_back(spark):
     ref = spark.createDataFrame(rows, "a int, arr array<int>")
     got = local_rows(spark, rows, "a int, arr array<int>")
     assert got.collect() == ref.collect()
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [
+        [{"a": "x", "b": "y"}, {"b": "w", "a": "v"}],  # by name, not keys
+        [("x", "y"), ("z",)],  # ragged: the classic path raises, no NULL pad
+    ],
+    ids=["dict_rows", "ragged_rows"],
+)
+def test_dict_and_ragged_rows_take_classic_path(spark, rows):
+    schema = "a string, b string"
+    try:
+        want = spark.createDataFrame(rows, schema).collect()
+    except Exception as e:
+        with pytest.raises(type(e)):
+            local_rows(spark, rows, schema).collect()
+    else:
+        assert local_rows(spark, rows, schema).collect() == want
 
 
 def test_no_python_workers_in_plan(spark):

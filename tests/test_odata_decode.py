@@ -284,3 +284,45 @@ def test_decode_batch_keeps_utc_instant_in_any_time_zone(tz):
         tz(zone)
         row = decode_batch(doc, schema).to_pylist()[0]
         assert row == {"fast": want, "slow": want, "nested": {"at": want}}, zone
+
+
+def test_one_page_walker_per_web_api_family():
+    """The OData next-link walk lives only in ``ODataClient.pages``
+    (``odata/client.py``) and the Graph one only in ``GraphClient.walk``
+    (``sources/graph.py``): no other package module calls
+    ``next_link(`` or reads ``"@odata.nextLink"`` with ``.get``, so a
+    hand-rolled page loop cannot grow back unnoticed. ``next_link``'s
+    own body, the parser of the link keys, is the one exemption."""
+    import ast
+    from pathlib import Path
+
+    import erpl_web_spark
+
+    root = Path(erpl_web_spark.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        tree = ast.parse(path.read_text(), filename=rel)
+        parser = [
+            n for n in ast.walk(tree)
+            if rel == "odata/json_decode.py"
+            and isinstance(n, ast.FunctionDef) and n.name == "next_link"
+        ]
+        exempt = {id(n) for f in parser for n in ast.walk(f)}
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call) or id(node) in exempt:
+                continue
+            func = node.func
+            name = getattr(func, "id", None) or getattr(func, "attr", None)
+            if name == "next_link" and rel != "odata/client.py":
+                offenders.append(f"{rel}:{node.lineno} calls next_link(")
+            if (
+                name == "get"
+                and isinstance(func, ast.Attribute)
+                and node.args
+                and isinstance(node.args[0], ast.Constant)
+                and node.args[0].value == "@odata.nextLink"
+                and rel != "sources/graph.py"
+            ):
+                offenders.append(f'{rel}:{node.lineno} reads .get("@odata.nextLink")')
+    assert not offenders, offenders

@@ -244,6 +244,22 @@ def test_odp_force_full_load(spark, fixture_server, odp_state):
     assert df.count() == 7
 
 
+def test_odp_stream_replay_raises_on_http_error(fixture_server, odp_state):
+    """Failure replay re-walks the start offset's delta link; an HTTP
+    error there (here the server's 410 for an unknown token) must raise,
+    not replay an empty micro-batch that silently drops its rows."""
+    from erpl_web_spark.odata.client import HttpStatusError
+    from erpl_web_spark.sources.odp import OdpReader
+    from erpl_web_spark.streaming.odp_stream import OdpStreamReader
+
+    url = fixture_server.base_url + "/odp/Facts"
+    reader = OdpStreamReader(url, OdpReader(url, odp_state).schema(), odp_state, None)
+    start = {"delta_link": url + "?!deltatoken='UNKNOWN'", "batch": 1}
+    with pytest.raises(HttpStatusError) as err:
+        reader.readBetweenOffsets(start, {"delta_link": "", "batch": 2})
+    assert err.value.status == 410
+
+
 def test_odp_streaming_source(spark, fixture_server, odp_state, tmp_path):
     from erpl_web_spark.streaming.odp_stream import OdpStreamDataSource
 
