@@ -23,6 +23,12 @@ All relational operators (joins, aggregates, windows, set ops) are
 expressed with the DataFrame API so Catalyst/Tungsten choose physical
 plans; Python only runs at the connector boundary and in explicitly
 Arrow-batched UDFs.
+
+Importing the package installs ``core.pyworker``'s zipimport stat guard.
 """
 
+from erpl_web_spark.core import pyworker as _pyworker
+
 __version__ = "0.1.0"
+
+_pyworker.install()

@@ -1,19 +1,29 @@
 """Core plumbing: URL building, HTTP session (retry/redirect/charset/
 cache), secret registry. Pure Python, no Spark dependency — usable on the
-driver (probe/metadata) and inside executors (page fetches)."""
+driver (probe/metadata) and inside executors (page fetches).
 
-from erpl_web_spark.core.url import HttpUrl, merge_query_params, canonicalize_query_key
-from erpl_web_spark.core.http import HttpClient, HttpResponse, RetryConfig
-from erpl_web_spark.core.secrets import SecretRegistry, Secret, default_registry
+The names below resolve on first access, so importing a light submodule
+(``core.pyworker``, which the package ``__init__`` imports in every Python
+worker) does not pull in ``requests``."""
 
-__all__ = [
-    "HttpUrl",
-    "merge_query_params",
-    "canonicalize_query_key",
-    "HttpClient",
-    "HttpResponse",
-    "RetryConfig",
-    "SecretRegistry",
-    "Secret",
-    "default_registry",
-]
+from importlib import import_module
+
+_EXPORTS = {
+    "HttpUrl": "url",
+    "merge_query_params": "url",
+    "canonicalize_query_key": "url",
+    "HttpClient": "http",
+    "HttpResponse": "http",
+    "RetryConfig": "http",
+    "SecretRegistry": "secrets",
+    "Secret": "secrets",
+    "default_registry": "secrets",
+}
+
+__all__ = list(_EXPORTS)
+
+
+def __getattr__(name):
+    if name in _EXPORTS:
+        return getattr(import_module(f"{__name__}.{_EXPORTS[name]}"), name)
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -67,7 +67,7 @@ from pyspark.sql.types import StructType
 
 from erpl_web_spark.core.http import HttpClient
 from erpl_web_spark.core.secrets import auth_headers_from_options
-from erpl_web_spark.odata.client import ODataClient
+from erpl_web_spark.odata.client import HttpStatusError, ODataClient
 from erpl_web_spark.odata.edm import EdmModel
 from erpl_web_spark.odata.expand import parse_expand
 from erpl_web_spark.odata.filters import translate_filters
@@ -129,8 +129,10 @@ class ODataDataSource(DataSource):
                 top=32,
             ).build()
             http = HttpClient(auth_headers=auth_headers_from_options(self.options))
-            doc = http.get(url, headers={"Accept": "application/json"}).json()
-            rows = extract_rows_payload(doc)
+            resp = http.get(url, headers={"Accept": "application/json"})
+            if resp.status >= 400:
+                raise HttpStatusError(resp.status, url)
+            rows = extract_rows_payload(resp.json())
             if not rows:
                 # A valid-but-empty aggregation cannot be type-inferred;
                 # Spark only calls schema() when the user supplied none.

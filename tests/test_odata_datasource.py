@@ -335,6 +335,21 @@ def test_apply_rejected_on_v2_service(registered, fixture_server):
         df.collect()
 
 
+def test_apply_schema_probe_reports_http_error(fixture_server):
+    """The $apply inference probe raises the status-carrying error on a
+    404 instead of parsing the error body as JSON (no Spark)."""
+    from erpl_web_spark.odata.client import HttpStatusError
+    from erpl_web_spark.odata.datasource import ODataDataSource
+
+    src = ODataDataSource(
+        {"url": fixture_server.base_url + "/v4/NoSuchSet", "groupby": "FirstName"}
+    )
+    with pytest.raises(HttpStatusError, match="HTTP 404") as err:
+        src.schema()
+    assert err.value.status == 404
+    assert "/v4/NoSuchSet" in err.value.url
+
+
 def test_v2_customers_with_legacy_dates(registered, fixture_server):
     df = (
         registered.read.format("odata")
