@@ -4,7 +4,7 @@ driver (probe/metadata) and inside executors (page fetches).
 
 The names below resolve on first access, so importing a light submodule
 (``core.pyworker``, which the package ``__init__`` imports in every Python
-worker) does not pull in ``requests``."""
+worker) does not pull in urllib3 or the rest of the HTTP stack."""
 
 from importlib import import_module
 

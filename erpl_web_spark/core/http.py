@@ -13,18 +13,39 @@ Contract (see BASELINE.md and reference src/http_client.cpp):
   octet-stream/pdf/image/video/audio/font (http_client.cpp:875-900);
 - optional response cache keyed on (method, url) (http_client.hpp:291-330).
 
-Connection reuse comes from a per-client requests.Session (keep-alive),
-matching the reference's per-host client reuse. One HttpClient per
-executor task is the intended usage pattern.
+Transport is one urllib3 PoolManager per client: keep-alive connections
+per host, matching the reference's per-host httplib client reuse. The
+process environment is read once per client (and again after
+unpickling, in the process that unpickles it): proxies and NO_PROXY
+from ``urllib.request.getproxies()``, the CA bundle from
+REQUESTS_CA_BUNDLE / CURL_CA_BUNDLE or certifi. Every request sends
+``Accept: */*`` and ``Accept-Encoding: gzip, deflate`` unless the caller
+sets them, and gzip bodies are decoded. There is no cookie jar and no
+~/.netrc lookup; ``user:pass@`` in a URL becomes a Basic Authorization
+header. Transport failures raise the builtin TimeoutError (connect or
+read timeout) or ConnectionError (refused, reset, TLS, proxy), both
+OSError subclasses. One HttpClient per executor task is the intended
+usage pattern.
 """
 
 from __future__ import annotations
 
 import base64
+import ipaddress
+import os
 import time
-from dataclasses import dataclass, field
+import urllib.request
+from dataclasses import dataclass
+from urllib.parse import unquote, urlsplit
 
-import requests
+import urllib3
+from urllib3.exceptions import (
+    ConnectTimeoutError,
+    NewConnectionError,
+    ProtocolError,
+    ProxyError,
+    SSLError,
+)
 
 from erpl_web_spark.core.url import HttpUrl
 
@@ -36,6 +57,11 @@ _BINARY_TYPES = (
 )
 _SENSITIVE_HEADERS = {"authorization", "cookie", "proxy-authorization", "www-authenticate"}
 _KNOWN_CHARSETS = {"utf-8", "iso-8859-1", "iso-8859-15", "windows-1252"}
+_DEFAULT_HEADERS = {"Accept-Encoding": "gzip, deflate", "Accept": "*/*"}
+# urllib3 failures that mean the request did not complete on the wire.
+# NewConnectionError (refused, DNS) subclasses ConnectTimeoutError, and
+# urllib3.exceptions.TimeoutError covers both connect and read timeouts.
+_TRANSPORT_ERRORS = (urllib3.exceptions.TimeoutError, ProtocolError, SSLError, ProxyError)
 
 # Magic-byte signatures (reference pattern_matcher.cpp:11-50): used when
 # the server sends no usable Content-Type — content wins over headers.
@@ -125,19 +151,82 @@ class HttpResponse:
         return json.loads(self.text)
 
 
+def _basic_auth(userinfo: str) -> str:
+    """``user:pass`` (percent-encoded, as in a URL) -> Basic credentials."""
+    user, _, password = userinfo.partition(":")
+    token = f"{unquote(user)}:{unquote(password)}".encode("latin-1")
+    return "Basic " + base64.b64encode(token).decode("ascii")
+
+
+class _Environment:
+    """Proxy and TLS settings read from the process environment once."""
+
+    def __init__(self):
+        proxies = urllib.request.getproxies()
+        self.no_proxy = proxies.pop("no", "")
+        self.proxies = {
+            k: v if "://" in v else "http://" + v for k, v in proxies.items() if v
+        }
+        self.no_proxy_nets = []
+        for entry in self.no_proxy.split(","):
+            try:
+                self.no_proxy_nets.append(ipaddress.ip_network(entry.strip(), strict=False))
+            except ValueError:
+                pass
+        ca = os.environ.get("REQUESTS_CA_BUNDLE") or os.environ.get("CURL_CA_BUNDLE")
+        if not ca:
+            try:
+                import certifi
+
+                ca = certifi.where()
+            except ImportError:  # urllib3 falls back to the system store
+                ca = None
+        self.tls = {"cert_reqs": "CERT_REQUIRED"}
+        if ca:
+            self.tls["ca_cert_dir" if os.path.isdir(ca) else "ca_certs"] = ca
+
+    def proxy_for(self, url: str) -> str | None:
+        if not self.proxies:
+            return None
+        parts = urlsplit(url)
+        host = parts.hostname or ""
+        proxy = self.proxies.get(parts.scheme) or self.proxies.get("all")
+        if proxy is None or urllib.request.proxy_bypass_environment(
+            host, {"no": self.no_proxy}
+        ):
+            return None
+        try:
+            ip = ipaddress.ip_address(host)
+        except ValueError:
+            return proxy
+        return None if any(ip in net for net in self.no_proxy_nets) else proxy
+
+
 class HttpClient:
     def __init__(
         self,
         retry: RetryConfig | None = None,
         auth_headers: dict[str, str] | None = None,
         cache_responses: bool = False,
-        session: requests.Session | None = None,
     ):
         self.retry = retry or RetryConfig()
         self.auth_headers = dict(auth_headers or {})
         self.cache_responses = cache_responses
         self._cache: dict[tuple[str, str], HttpResponse] = {}
-        self._session = session or requests.Session()
+        self._env = _Environment()
+        self._pools: dict[str | None, urllib3.PoolManager] = {}
+
+    def __getstate__(self):
+        # Pools hold locks and sockets; the unpickling process reads its
+        # own environment and opens its own connections on first use.
+        state = self.__dict__.copy()
+        del state["_env"], state["_pools"]
+        return state
+
+    def __setstate__(self, state):
+        self.__dict__.update(state)
+        self._env = _Environment()
+        self._pools = {}
 
     # -- public verbs ------------------------------------------------------
 
@@ -192,60 +281,84 @@ class HttpClient:
             return resp
         raise RuntimeError(f"redirect limit ({self.retry.max_redirects}) exceeded for {url}")
 
+    def _pool(self, url: str) -> urllib3.PoolManager:
+        proxy = self._env.proxy_for(url)
+        pool = self._pools.get(proxy)
+        if pool is None:
+            # maxsize: idle keep-alive connections kept per host, as
+            # requests' HTTPAdapter did for concurrent callers.
+            if proxy is None:
+                pool = urllib3.PoolManager(maxsize=10, **self._env.tls)
+            else:
+                userinfo = urlsplit(proxy).netloc.rpartition("@")[0]
+                auth = {"Proxy-Authorization": _basic_auth(userinfo)} if userinfo else None
+                pool = urllib3.ProxyManager(
+                    proxy, maxsize=10, proxy_headers=auth, **self._env.tls
+                )
+            self._pools[proxy] = pool
+        return pool
+
     def _request_with_retries(self, method, url, headers, body, content_type, send_auth):
-        hdrs = dict(headers)
+        hdrs = urllib3.HTTPHeaderDict(_DEFAULT_HEADERS)
         if send_auth:
+            hdrs.update(headers)
             hdrs.update(self.auth_headers)
         else:
-            hdrs = {k: v for k, v in hdrs.items() if k.lower() not in _SENSITIVE_HEADERS}
+            hdrs.update({k: v for k, v in headers.items() if k.lower() not in _SENSITIVE_HEADERS})
         if content_type:
             hdrs["Content-Type"] = content_type
+        userinfo = urlsplit(url).netloc.rpartition("@")[0] if "@" in url else ""
+        if userinfo:
+            hdrs["Authorization"] = _basic_auth(userinfo)
+        if isinstance(body, str):
+            body = body.encode("utf-8")
+        pool = self._pool(url)
 
         attempt = 0
         while True:
             attempt += 1
             try:
-                r = self._session.request(
+                r = pool.urlopen(
                     method,
                     url,
+                    body=body,
                     headers=hdrs,
-                    data=body,
                     timeout=self.retry.timeout_s,
-                    allow_redirects=False,
+                    redirect=False,
+                    retries=False,
                 )
-                status = r.status_code
-            except requests.ConnectTimeout:
-                # The connection never opened — nothing was delivered, so
-                # every method is safe to retry with the backoff ladder.
-                if attempt > self.retry.retries:
-                    raise
-                self._sleep(attempt)
-                continue
-            except (requests.ConnectionError, requests.Timeout):
-                # A read timeout (or mid-flight connection drop) means the
-                # server may already have processed the request; retrying
-                # a mutation would duplicate its side effects. Retry only
-                # idempotent methods (reference timeout_http_client.cpp
+            except _TRANSPORT_ERRORS as e:
+                # A connect timeout means nothing was delivered, so every
+                # method is safe to retry with the backoff ladder. A read
+                # timeout, refusal or dropped connection may follow a
+                # request the server already processed; retrying a
+                # mutation would duplicate its side effects. Those retry
+                # only idempotent methods (reference timeout_http_client.cpp
                 # wraps requests in a deadline for the hung-server case),
                 # unless the caller opted in via retry_non_idempotent.
+                refused = isinstance(e, NewConnectionError)  # DNS failures too
+                timed_out = isinstance(e, urllib3.exceptions.TimeoutError) and not refused
                 retryable = (
-                    method.upper() in _IDEMPOTENT_METHODS
+                    (timed_out and isinstance(e, ConnectTimeoutError))
+                    or method.upper() in _IDEMPOTENT_METHODS
                     or self.retry.retry_non_idempotent
                 )
                 if not retryable or attempt > self.retry.retries:
-                    raise
+                    raise (TimeoutError if timed_out else ConnectionError)(
+                        f"{method} {url}: {e}"
+                    ) from e
                 self._sleep(attempt)
                 continue
-            if status in RETRY_STATUSES and attempt <= self.retry.retries:
+            if r.status in RETRY_STATUSES and attempt <= self.retry.retries:
                 self._sleep(attempt)
                 continue
             return HttpResponse(
                 method=method,
-                status=status,
+                status=r.status,
                 url=url,
-                headers={k: v for k, v in r.headers.items()},
+                headers=dict(r.headers.itermerged()),
                 content_type=r.headers.get("Content-Type", ""),
-                raw=r.content if method != "HEAD" else b"",
+                raw=r.data if method != "HEAD" else b"",
             )
 
     def _sleep(self, attempt: int) -> None:

@@ -450,8 +450,9 @@ def sharepoint_list_write(
     ``$batch`` envelopes (``graph_batch_execute``) under a dual budget
     of ``batch_size`` requests / ``batch_max_bytes`` serialized bytes
     per HTTP call; ``batch_size=1`` degrades to the reference's per-row
-    POSTs (B3)."""
+    POSTs (B3). Returns the number of rows written."""
     cols = df.columns
+    written = df.sparkSession.sparkContext.accumulator(0)
 
     def write_partition(rows):
         client = client_factory()
@@ -472,9 +473,10 @@ def sharepoint_list_write(
             graph_batch_execute(
                 client, reqs, max_requests=batch_size, max_bytes=batch_max_bytes
             )
+        written.add(len(reqs))
 
     df.foreachPartition(write_partition)
-    return len(cols)
+    return written.value
 
 
 def sharepoint_list_update(
@@ -705,15 +707,17 @@ def graph_excel_delete_rows(
 
 def excel_table_write(df: DataFrame, client_factory, file_id: str, table: str) -> int:
     """``df.write``-style bulk append: collect per partition on executors,
-    batch rows/add calls."""
+    batch rows/add calls. Returns the number of rows written."""
+    written = df.sparkSession.sparkContext.accumulator(0)
+
     def write_partition(rows):
         client = client_factory()
         buf = [list(r) for r in rows]
         if buf:
-            excel_table_append(client, file_id, table, buf)
+            written.add(excel_table_append(client, file_id, table, buf))
 
     df.foreachPartition(write_partition)
-    return len(df.columns)
+    return written.value
 
 
 # -- Teams (A20) ------------------------------------------------------------

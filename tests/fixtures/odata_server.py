@@ -9,6 +9,7 @@ pushdown reached the server ($filter/$select/$top observable in the log).
 
 from __future__ import annotations
 
+import gzip
 import json
 import re
 import threading
@@ -364,7 +365,10 @@ def _make_handler(state: FixtureState):
             self.send_response(status)
             self.send_header("Content-Type", content_type)
             self.send_header("Content-Length", str(len(body)))
-            for k, v in (extra_headers or {}).items():
+            # A list of (name, value) pairs may repeat a header name.
+            if isinstance(extra_headers, dict):
+                extra_headers = extra_headers.items()
+            for k, v in extra_headers or ():
                 self.send_header(k, v)
             self.end_headers()
             if self.command != "HEAD":
@@ -496,6 +500,20 @@ def _make_handler(state: FixtureState):
                 return self._send(200, b"\x89PNG\r\n\x1a\n....", "image/png")
             if route == "/http/notfound":
                 return self._send(404, b"nope", "text/plain")
+            if route == "/http/gzip":
+                body = gzip.compress(json.dumps({"ok": True, "text": "zipped " * 50}).encode())
+                return self._send(200, body, "application/json",
+                                  {"Content-Encoding": "gzip"})
+            if route == "/http/links":
+                # Three pages of two items; each page carries TWO Link
+                # headers (rel="first" before rel="next"), which a client
+                # must join into one value to find the next link.
+                page = int(q.get("page", 1))
+                links = [("Link", '</http/links?page=1>; rel="first"')]
+                if page < 3:
+                    links.append(("Link", f'</http/links?page={page + 1}>; rel="next"'))
+                items = [{"item_id": 2 * (page - 1) + i} for i in range(2)]
+                return self._json(200, items, links)
 
             # ---- ODP CDC --------------------------------------------------
             if route == "/odp/$metadata":

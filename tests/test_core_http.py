@@ -30,10 +30,9 @@ def test_post_read_timeout_not_retried(fixture_server):
     mutation — retrying would duplicate side effects (bulk graphql_call
     mutations, OAuth one-time code exchange). Default: raise instead."""
     import pytest
-    import requests
 
     c = HttpClient(retry=RetryConfig(wait_ms=10, timeout_s=0.5, retries=2))
-    with pytest.raises(requests.Timeout):
+    with pytest.raises(TimeoutError):
         c.request(
             "POST",
             fixture_server.base_url + "/http/slow-once-post/default",
@@ -139,3 +138,195 @@ def test_untyped_binary_sniffed_by_magic_bytes():
     assert sniff_binary(b"\x00\x00\x00 ftypisom")  # MP4 at offset 4
     assert not sniff_binary(b'{"plain": "json without header"}')
     assert not sniff_binary(b"")
+
+
+# -- transport: retry matrix, wire behaviour, pickling, proxies -------------
+
+
+def _count_sleeps(monkeypatch) -> list[int]:
+    sleeps: list[int] = []
+    monkeypatch.setattr(HttpClient, "_sleep", lambda self, attempt: sleeps.append(attempt))
+    return sleeps
+
+
+def _closed_port() -> int:
+    import socket
+
+    with socket.socket() as s:
+        s.bind(("127.0.0.1", 0))
+        return s.getsockname()[1]
+
+
+def test_connection_refused_retries_idempotent_only(monkeypatch):
+    import pytest
+
+    sleeps = _count_sleeps(monkeypatch)
+    url = f"http://127.0.0.1:{_closed_port()}/x"
+    c = HttpClient(retry=RetryConfig(retries=3))
+    with pytest.raises(ConnectionError):
+        c.get(url)
+    assert sleeps == [1, 2, 3]  # 4 attempts: the first plus 3 retries
+
+    sleeps.clear()
+    with pytest.raises(ConnectionError):
+        c.request("POST", url, body=b"{}")
+    assert sleeps == []  # may have been delivered: never re-sent
+
+    sleeps.clear()
+    opt_in = HttpClient(retry=RetryConfig(retries=2, retry_non_idempotent=True))
+    with pytest.raises(ConnectionError):
+        opt_in.request("POST", url, body=b"{}")
+    assert sleeps == [1, 2]
+
+
+def test_connect_timeout_retries_every_method(monkeypatch):
+    """A connect timeout means nothing reached the server, so even a POST
+    takes the backoff ladder; it surfaces as the builtin TimeoutError."""
+    import pytest
+    from urllib3.exceptions import ConnectTimeoutError
+
+    class Unreachable:
+        def urlopen(self, *args, **kwargs):
+            raise ConnectTimeoutError("connect timed out")
+
+    sleeps = _count_sleeps(monkeypatch)
+    c = HttpClient(retry=RetryConfig(retries=2))
+    c._pools[None] = Unreachable()
+    with pytest.raises(TimeoutError):
+        c.request("POST", "http://127.0.0.1:9/x", body=b"{}")
+    assert sleeps == [1, 2]
+
+
+def test_malformed_url_raises_without_retry(monkeypatch):
+    import pytest
+
+    sleeps = _count_sleeps(monkeypatch)
+    c = HttpClient()
+    for url in ("http:///no-host", "ftp://127.0.0.1/file"):
+        with pytest.raises(ValueError):
+            c.get(url)
+    assert sleeps == []
+
+
+def test_default_request_headers(fixture_server):
+    c = client()
+    sent = c.get(fixture_server.base_url + "/http/echo").json()["headers"]
+    assert sent["Accept"] == "*/*"
+    assert sent["Accept-Encoding"] == "gzip, deflate"
+    # a caller's header replaces the default whatever its case
+    sent = c.get(
+        fixture_server.base_url + "/http/echo", headers={"accept": "application/json"}
+    ).json()["headers"]
+    assert [v for k, v in sent.items() if k.lower() == "accept"] == ["application/json"]
+
+
+def test_gzip_body_decoded(fixture_server):
+    resp = client().get(fixture_server.base_url + "/http/gzip")
+    assert resp.headers["Content-Encoding"] == "gzip"
+    assert resp.json() == {"ok": True, "text": "zipped " * 50}
+
+
+def test_repeated_link_headers_joined(fixture_server):
+    from erpl_web_spark.sources.rest import RestPager
+
+    resp = client().get(fixture_server.base_url + "/http/links")
+    assert resp.headers["Link"] == (
+        '</http/links?page=1>; rel="first", </http/links?page=2>; rel="next"'
+    )
+    pager = RestPager(client(), {"url": fixture_server.base_url + "/http/links",
+                                 "paginate": "link"})
+    pages = list(pager.pages())
+    assert [[r["item_id"] for r in p] for p in pages] == [[0, 1], [2, 3], [4, 5]]
+
+
+def test_non_ascii_str_body_sent_as_utf8(fixture_server):
+    body = '{"name": "Grüße ☃"}'
+    resp = client().request(
+        "POST", fixture_server.base_url + "/http/echo",
+        body=body, content_type="application/json",
+    )
+    assert resp.json()["received"] == body
+    logged = fixture_server.state.requests_for("/http/echo")[-1]
+    assert logged["body"] == body
+    assert int(logged["headers"]["Content-Length"]) == len(body.encode("utf-8"))
+
+
+def test_url_credentials_become_basic_auth(fixture_server):
+    import base64
+
+    url = fixture_server.base_url.replace("://", "://svc:p%40ss@") + "/http/echo"
+    sent = client().get(url).json()["headers"]
+    assert sent["Authorization"] == "Basic " + base64.b64encode(b"svc:p@ss").decode()
+
+
+def test_client_pickles_and_resolves_proxies_once(monkeypatch, fixture_server):
+    import os
+    import pickle
+
+    import urllib3
+
+    c = client(auth_headers={"X-Key": "k"})
+    c.get(fixture_server.base_url + "/http/echo")  # a live pool holds locks
+    c = pickle.loads(pickle.dumps(c))
+    sent = c.get(fixture_server.base_url + "/http/echo").json()["headers"]
+    assert sent["X-Key"] == "k"
+
+    for name in list(os.environ):
+        if name.lower().endswith("_proxy"):
+            monkeypatch.delenv(name)
+    monkeypatch.setenv("HTTP_PROXY", "http://u:pw@proxy.invalid:3128")
+    monkeypatch.setenv("NO_PROXY", "127.0.0.1,localhost,10.0.0.0/8")
+    c = client()
+    loopback = fixture_server.base_url + "/http/echo"
+
+    def routes():
+        return [
+            getattr(c._pool(u), "proxy", None) and c._pool(u).proxy.host
+            for u in (loopback, "http://localhost:1/x", "http://10.1.2.3/x",
+                      "http://example.com/x")
+        ]
+
+    assert routes() == [None, None, None, "proxy.invalid"]
+    proxied = c._pool("http://example.com/x")
+    assert isinstance(proxied, urllib3.ProxyManager)
+    assert proxied.proxy_headers == {"Proxy-Authorization": "Basic dTpwdw=="}  # u:pw
+    assert c.get(loopback).status == 200  # loopback really goes direct
+
+    monkeypatch.setenv("HTTP_PROXY", "http://other.invalid:3128")
+    monkeypatch.delenv("NO_PROXY")
+    assert routes() == [None, None, None, "proxy.invalid"]
+
+
+def test_http_core_does_not_import_requests():
+    """The package talks HTTP through urllib3 only: importing the HTTP core
+    must not load ``requests``, and no module may import it."""
+    import ast
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    probe = "import sys, erpl_web_spark.core.http; print('requests' in sys.modules)"
+    out = subprocess.run(
+        [sys.executable, "-c", probe], cwd=repo, capture_output=True, text=True, check=True
+    )
+    assert out.stdout.strip() == "False"
+
+    offenders = []
+    for root, _dirs, files in os.walk(os.path.join(repo, "erpl_web_spark")):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            with open(path, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read(), path)
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Import):
+                    mods = [a.name for a in node.names]
+                elif isinstance(node, ast.ImportFrom) and node.level == 0:
+                    mods = [node.module or ""]
+                else:
+                    continue
+                if any(m == "requests" or m.startswith("requests.") for m in mods):
+                    offenders.append(f"{os.path.relpath(path, repo)}:{node.lineno}")
+    assert offenders == []

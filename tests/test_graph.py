@@ -125,6 +125,29 @@ def test_sharepoint_write_batch_coalescing(spark, fixture_server):
     del fixture_server.state.sp_items[n0:]
 
 
+def test_graph_bulk_writers_return_rows_written(spark, fixture_server):
+    """Both bulk writers report rows written (summed over partitions and
+    over both write paths), not the DataFrame's column count."""
+    from erpl_web_spark.sources.graph import excel_table_write, sharepoint_list_write
+
+    base = fixture_server.base_url + "/graph"
+    factory = lambda: GraphClient(base, HttpClient())  # noqa: E731
+    df = spark.createDataFrame(
+        [(f"rw-{i}", float(i)) for i in range(5)], "Title string, Amount double"
+    ).repartition(2)
+
+    n0 = len(fixture_server.state.sp_items)
+    assert sharepoint_list_write(df, factory, "s1", "l1", batch_size=20) == 5
+    assert sharepoint_list_write(df, factory, "s1", "l1", batch_size=1) == 5
+    assert len(fixture_server.state.sp_items) == n0 + 10
+    del fixture_server.state.sp_items[n0:]
+
+    e0 = len(fixture_server.state.excel_appended)
+    assert excel_table_write(df, factory, "f1", "T1") == 5
+    assert len(fixture_server.state.excel_appended) == e0 + 5
+    del fixture_server.state.excel_appended[e0:]
+
+
 def test_graph_batch_throttled_subrequests_retry(fixture_server):
     """Graph throttles PER SUBREQUEST inside a 200 envelope: 429'd
     subrequests must be re-issued in a follow-up envelope (honoring
