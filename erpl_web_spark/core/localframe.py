@@ -1,5 +1,12 @@
 """Driver-local rows -> DataFrame without the pickled-RDD execution path.
 
+The package's single place for driver-built frames. ``local_rows``
+takes Python tuples; ``local_batches`` takes Arrow record batches, the
+form every driver-side web-API read (Graph entities, the Excel grid,
+ODP batches) gets from ``odata.json_decode.ColumnDecoders``. Both land
+as a JVM local relation (``LocalTableScan``) instead of a pickled-RDD
+scan; ``local_rows`` only where the exactness guards below allow.
+
 ``spark.createDataFrame(list, schema)`` parallelizes the rows into
 defaultParallelism pickle partitions, so every downstream action forks
 one Python worker PER PARTITION just to unpickle a handful of rows —
@@ -26,6 +33,7 @@ import math
 from collections.abc import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def local_rows(spark: SparkSession, rows, schema: str) -> DataFrame:
@@ -56,3 +64,16 @@ def local_rows(spark: SparkSession, rows, schema: str) -> DataFrame:
         # pandas/Arrow conversion surprise falls back to the classic
         # (value-defining) path.
         return spark.createDataFrame(rows, schema)
+
+
+def local_batches(spark: SparkSession, batches, schema: StructType) -> DataFrame:
+    """Build a DataFrame from driver-local Arrow ``batches`` with PySpark's
+    Arrow schema for ``schema`` (``ColumnDecoders`` output; any number,
+    none included). One Arrow table goes to ``createDataFrame``: a JVM
+    local relation whose timestamps are the batches' UTC instants,
+    whatever the driver's ``TZ``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_batches(batches, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)

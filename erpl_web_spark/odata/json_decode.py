@@ -21,13 +21,21 @@ Payload row extraction handles both v4 (``value`` array) and v2
 v2 ``__metadata``/``__deferred`` exclusions (odata_read_functions.cpp:
 43-54).
 
-Pages decode a column at a time (``ColumnDecoders``): a column whose
-cells all already have the target's native JSON type (str, bool, float,
-an int within range) is taken as is, and offset-carrying ISO-8601
-timestamp strings are cast by Arrow; any other column goes through
-``decode_value`` cell by cell, so the lenient semantics live in one
-place. ``decode_rows`` returns Python tuples, ``decode_batch`` a
-``pyarrow.RecordBatch`` matching PySpark's Arrow schema for the scan.
+Every web-API read (OData, REST, GraphQL, Microsoft Graph, ODP) decodes
+through ``ColumnDecoders`` and nothing else, so the lenient semantics and
+the UTC-instant rule live in this module. Pages decode a column at a
+time: a column whose cells all already have the target's native JSON
+type (str, bool, float, an int within range) is taken as is, and
+offset-carrying ISO-8601 timestamp strings are cast by Arrow; any other
+column goes through ``decode_value`` cell by cell. Two entry points build
+a ``pyarrow.RecordBatch`` matching PySpark's Arrow schema, with
+timestamps as UTC instants whatever the process time zone:
+``batch(doc)`` extracts the row objects of a response document (or a
+list of row objects) and looks each field up by name;
+``columns_batch(cells)`` takes cells already extracted, one list per
+schema field in schema order (Graph's projected JSON paths, the Excel
+grid's positional columns, whose headers may repeat). ``decode_rows``
+returns Python tuples, the reference the parity tests compare against.
 """
 
 from __future__ import annotations
@@ -406,15 +414,20 @@ class ColumnDecoders:
         return list(zip(*(c.values(c.cells(objs)) for c in self._columns)))
 
     def batch(self, doc: Any):
+        objs = _row_objects(doc)
+        return self.columns_batch([col.cells(objs) for col in self._columns])
+
+    def columns_batch(self, cells: list[list]):
+        """Decode pre-extracted JSON cells, one equal-length list per
+        schema field in schema order, into one record batch."""
         import pyarrow as pa
 
         if self._arrow is None:
             self._arrow = self._arrow_plan()
         arrow_schema, converters = self._arrow
-        objs = _row_objects(doc)
         arrays = [
-            col.arrow(col.cells(objs), arrow_schema.field(i).type, converters[i])
-            for i, col in enumerate(self._columns)
+            col.arrow(col_cells, arrow_schema.field(i).type, converters[i])
+            for i, (col, col_cells) in enumerate(zip(self._columns, cells, strict=True))
         ]
         return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 

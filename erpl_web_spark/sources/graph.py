@@ -16,20 +16,35 @@ Shapes reproduced from the reference:
 - writers are per-row API calls (B1/B2) or batched rows/add with a
   workbook session (B4, graph_excel_client.cpp:103-111).
 
-Discovery/catalog results are small -> driver-built DataFrames. Bulk
-item reads use Graph's sequential opaque skiptoken, so the page chain is
-protocol-bound (same as the reference); large fan-out writes go through
-``http_call`` (executor-parallel).
+Every collection read is one row of ``GRAPH_ENTITIES``: the route its
+items come from and its ``(out_name, type, JSON path)`` fields, a path
+being a tuple of keys (an int indexes a list) or, for a derived column
+such as ``is_folder``, a callable of the item. ``_graph_frame`` projects
+the items through that table and decodes the cells with
+``odata.json_decode.ColumnDecoders`` (lenient: an absent field is NULL,
+timestamps are UTC instants); SharePoint list items build the same kind
+of table from the list's column facets (``sharepoint_list_schema``). The
+``/delta`` reads and the ``graph_delta`` stream reuse those tables, a
+tombstone keeping only its id.
+
+Discovery/catalog results are small -> driver-built DataFrames, each one
+Arrow table handed to ``core.localframe.local_batches`` (a JVM local
+relation, no pickled-RDD scan). Bulk item reads use Graph's sequential
+opaque skiptoken, so the page chain is protocol-bound (same as the
+reference); large fan-out writes go through ``http_call``
+(executor-parallel).
 """
 
 from __future__ import annotations
 
 import json
-from typing import Any
+from collections.abc import Iterable
+from typing import TYPE_CHECKING, Any, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     BooleanType,
+    DataType,
     DoubleType,
     StringType,
     StructField,
@@ -38,9 +53,13 @@ from pyspark.sql.types import (
 )
 
 from erpl_web_spark.core.http import HttpClient
+from erpl_web_spark.core.localframe import local_batches
 from erpl_web_spark.core.secrets import default_registry
 from erpl_web_spark.odata.client import HttpStatusError
-from erpl_web_spark.odata.json_decode import decode_value
+from erpl_web_spark.odata.json_decode import ColumnDecoders
+
+if TYPE_CHECKING:
+    import pyarrow
 
 MAX_GRAPH_PAGES = 10000
 DEFAULT_GRAPH_BASE = "https://graph.microsoft.com/v1.0"
@@ -57,7 +76,7 @@ class GraphClient:
         url = self.base_url + path
         resp = self.http.get(url, headers={"Accept": "application/json"})
         if resp.status >= 400:
-            raise RuntimeError(f"Graph HTTP {resp.status} from {url}")
+            raise HttpStatusError(resp.status, url)
         return resp.json()
 
     def _absolute(self, link: str) -> str:
@@ -226,142 +245,31 @@ def graph_batch_execute(
     return results  # type: ignore[return-value]
 
 
-def _ts(v):
-    return decode_value(v, TimestampType())
+class GraphEntity(NamedTuple):
+    """One Graph collection read: the route its items come from (a
+    ``str.format`` template over the reader's ids) and its field table,
+    ``(out_name, type, path)`` per output column."""
+
+    route: str
+    fields: tuple
+
+    @property
+    def schema(self) -> StructType:
+        return graph_items_schema(self.fields)
 
 
-def _rows_df(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:
-    return spark.createDataFrame(rows, schema)
+_S, _B, _T = StringType(), BooleanType(), TimestampType()
+_CHANGE_OP = StructField("change_op", StringType(), True)
 
 
-def _schema(*fields: tuple[str, Any]) -> StructType:
-    return StructType([StructField(n, t, True) for n, t in fields])
-
-
-# -- Entra ID (A17) ---------------------------------------------------------
-
-USERS_SCHEMA = _schema(
-    ("id", StringType()), ("display_name", StringType()),
-    ("user_principal_name", StringType()), ("mail", StringType()),
-    ("job_title", StringType()), ("department", StringType()),
-    ("account_enabled", BooleanType()),
-)
-
-
-def graph_users(spark: SparkSession, client: GraphClient) -> DataFrame:
-    items = client.get_paged_values("/users")
-    rows = [
-        (i.get("id"), i.get("displayName"), i.get("userPrincipalName"),
-         i.get("mail"), i.get("jobTitle"), i.get("department"),
-         i.get("accountEnabled"))
-        for i in items
-    ]
-    return _rows_df(spark, rows, USERS_SCHEMA)
-
-
-GROUPS_SCHEMA = _schema(
-    ("id", StringType()), ("display_name", StringType()),
-    ("description", StringType()), ("mail", StringType()),
-    ("mail_enabled", BooleanType()), ("security_enabled", BooleanType()),
-)
-
-
-def graph_groups(spark: SparkSession, client: GraphClient) -> DataFrame:
-    items = client.get_paged_values("/groups")
-    rows = [
-        (i.get("id"), i.get("displayName"), i.get("description"), i.get("mail"),
-         i.get("mailEnabled"), i.get("securityEnabled"))
-        for i in items
-    ]
-    return _rows_df(spark, rows, GROUPS_SCHEMA)
-
-
-DEVICES_SCHEMA = _schema(
-    ("id", StringType()), ("display_name", StringType()),
-    ("operating_system", StringType()), ("os_version", StringType()),
-    ("trust_type", StringType()), ("account_enabled", BooleanType()),
-)
-
-
-def graph_devices(spark: SparkSession, client: GraphClient) -> DataFrame:
-    items = client.get_paged_values("/devices")
-    rows = [
-        (i.get("id"), i.get("displayName"), i.get("operatingSystem"),
-         i.get("operatingSystemVersion"), i.get("trustType"), i.get("accountEnabled"))
-        for i in items
-    ]
-    return _rows_df(spark, rows, DEVICES_SCHEMA)
-
-
-SIGNIN_SCHEMA = _schema(
-    ("id", StringType()), ("user_display_name", StringType()),
-    ("user_principal_name", StringType()), ("app_display_name", StringType()),
-    ("ip_address", StringType()), ("created_datetime", TimestampType()),
-    ("status", StringType()),
-)
-
-
-def graph_signin_logs(spark: SparkSession, client: GraphClient) -> DataFrame:
-    items = client.get_paged_values("/auditLogs/signIns")
-    rows = [
-        (i.get("id"), i.get("userDisplayName"), i.get("userPrincipalName"),
-         i.get("appDisplayName"), i.get("ipAddress"), _ts(i.get("createdDateTime")),
-         json.dumps(i.get("status")) if i.get("status") is not None else None)
-        for i in items
-    ]
-    return _rows_df(spark, rows, SIGNIN_SCHEMA)
-
-
-# -- SharePoint (A18, B2) ---------------------------------------------------
-
-SITES_SCHEMA = _schema(
-    ("id", StringType()), ("name", StringType()), ("display_name", StringType()),
-    ("web_url", StringType()), ("created_at", TimestampType()),
-)
-
-
-def graph_show_sites(spark: SparkSession, client: GraphClient) -> DataFrame:
-    items = client.get_paged_values("/sites?search=*")
-    rows = [
-        (i.get("id"), i.get("name"), i.get("displayName"), i.get("webUrl"),
-         _ts(i.get("createdDateTime")))
-        for i in items
-    ]
-    return _rows_df(spark, rows, SITES_SCHEMA)
-
-
-DRIVES_SCHEMA = _schema(
-    ("id", StringType()), ("name", StringType()), ("drive_type", StringType()),
-    ("web_url", StringType()), ("created_at", TimestampType()),
-    ("modified_at", TimestampType()),
-)
-
-
-def graph_show_drives(spark: SparkSession, client: GraphClient, site_id: str) -> DataFrame:
-    items = client.get_paged_values(f"/sites/{site_id}/drives")
-    rows = [
-        (i.get("id"), i.get("name"), i.get("driveType"), i.get("webUrl"),
-         _ts(i.get("createdDateTime")), _ts(i.get("lastModifiedDateTime")))
-        for i in items
-    ]
-    return _rows_df(spark, rows, DRIVES_SCHEMA)
-
-
-LISTS_SCHEMA = _schema(
-    ("id", StringType()), ("name", StringType()), ("display_name", StringType()),
-    ("description", StringType()), ("web_url", StringType()),
-    ("created_at", TimestampType()), ("modified_at", TimestampType()),
-)
-
-
-def graph_show_lists(spark: SparkSession, client: GraphClient, site_id: str) -> DataFrame:
-    items = client.get_paged_values(f"/sites/{site_id}/lists")
-    rows = [
-        (i.get("id"), i.get("name"), i.get("displayName"), i.get("description"),
-         i.get("webUrl"), _ts(i.get("createdDateTime")), _ts(i.get("lastModifiedDateTime")))
-        for i in items
-    ]
-    return _rows_df(spark, rows, LISTS_SCHEMA)
+def _entity(route: str, *fields: tuple[str, DataType, Any]) -> GraphEntity:
+    """A ``GraphEntity`` whose dotted JSON paths ("from.user.displayName",
+    "emailAddresses.0.address") become key tuples; callables stay."""
+    return GraphEntity(route, tuple(
+        (name, dtype, path if callable(path)
+         else tuple(int(k) if k.isdigit() else k for k in path.split(".")))
+        for name, dtype, path in fields
+    ))
 
 
 def sharepoint_column_type(col: dict):
@@ -375,44 +283,247 @@ def sharepoint_column_type(col: dict):
     return StringType()
 
 
+_ID, _NAME = ("id", _S, "id"), ("name", _S, "name")
+_DISPLAY_NAME, _DESCRIPTION = ("display_name", _S, "displayName"), ("description", _S, "description")
+_WEB_URL, _CREATED_AT = ("web_url", _S, "webUrl"), ("created_at", _T, "createdDateTime")
+_MODIFIED_AT = ("modified_at", _T, "lastModifiedDateTime")
+
+GRAPH_ENTITIES: dict[str, GraphEntity] = {
+    # -- Entra ID (A17)
+    "users": _entity(
+        "/users", _ID, _DISPLAY_NAME, ("user_principal_name", _S, "userPrincipalName"),
+        ("mail", _S, "mail"), ("job_title", _S, "jobTitle"), ("department", _S, "department"),
+        ("account_enabled", _B, "accountEnabled"),
+    ),
+    "groups": _entity(
+        "/groups", _ID, _DISPLAY_NAME, _DESCRIPTION, ("mail", _S, "mail"),
+        ("mail_enabled", _B, "mailEnabled"), ("security_enabled", _B, "securityEnabled"),
+    ),
+    "devices": _entity(
+        "/devices", _ID, _DISPLAY_NAME, ("operating_system", _S, "operatingSystem"),
+        ("os_version", _S, "operatingSystemVersion"), ("trust_type", _S, "trustType"),
+        ("account_enabled", _B, "accountEnabled"),
+    ),
+    "signin_logs": _entity(
+        "/auditLogs/signIns", _ID, ("user_display_name", _S, "userDisplayName"),
+        ("user_principal_name", _S, "userPrincipalName"),
+        ("app_display_name", _S, "appDisplayName"), ("ip_address", _S, "ipAddress"),
+        ("created_datetime", _T, "createdDateTime"), ("status", _S, "status"),
+    ),
+    # -- SharePoint (A18)
+    "sites": _entity("/sites?search=*", _ID, _NAME, _DISPLAY_NAME, _WEB_URL, _CREATED_AT),
+    "drives": _entity(
+        "/sites/{site_id}/drives", _ID, _NAME, ("drive_type", _S, "driveType"), _WEB_URL,
+        _CREATED_AT, _MODIFIED_AT,
+    ),
+    "lists": _entity(
+        "/sites/{site_id}/lists", _ID, _NAME, _DISPLAY_NAME, _DESCRIPTION, _WEB_URL,
+        _CREATED_AT, _MODIFIED_AT,
+    ),
+    "list_columns": _entity(
+        "/sites/{site_id}/lists/{list_id}/columns", _NAME, _DISPLAY_NAME,
+        ("column_type", _S, lambda c: sharepoint_column_type(c).simpleString()),
+        _DESCRIPTION, ("required", _B, "required"),
+    ),
+    # -- Excel over Graph (A19)
+    "files": _entity(
+        "/me/drive/root/children", _ID, _NAME, _WEB_URL, ("size", _S, "size"),
+        _CREATED_AT, _MODIFIED_AT, ("mime_type", _S, "file.mimeType"),
+        ("is_folder", _B, lambda i: "folder" in i),
+    ),
+    "worksheets": _entity(
+        "/me/drive/items/{file_id}/workbook/worksheets", _NAME, _ID,
+        ("position", _S, "position"), ("visibility", _S, "visibility"),
+    ),
+    "tables": _entity(
+        "/me/drive/items/{file_id}/workbook/tables", _NAME, _ID,
+        ("show_headers", _B, "showHeaders"), ("show_totals", _B, "showTotals"),
+    ),
+    # -- Teams (A20)
+    "teams": _entity("/me/joinedTeams", _ID, _DISPLAY_NAME, _DESCRIPTION),
+    "channels": _entity(
+        "/teams/{team_id}/channels", _ID, _DISPLAY_NAME, _DESCRIPTION,
+        ("membership_type", _S, "membershipType"),
+    ),
+    "members": _entity(
+        "/teams/{team_id}/members", _ID, _DISPLAY_NAME, ("email", _S, "email"),
+        ("roles", _S, "roles"),
+    ),
+    "channel_messages": _entity(
+        "/teams/{team_id}/channels/{channel_id}/messages", _ID,
+        ("from_user", _S, "from.user.displayName"), _CREATED_AT,
+        ("content", _S, "body.content"),
+    ),
+    # -- Outlook (A21)
+    "calendars": _entity(
+        "/me/calendars", _ID, _NAME, ("owner", _S, "owner.address"),
+        ("can_edit", _B, "canEdit"),
+    ),
+    "events": _entity(
+        "/me/events", _ID, ("subject", _S, "subject"), ("start_at", _T, "start.dateTime"),
+        ("end_at", _T, "end.dateTime"), ("organizer", _S, "organizer.emailAddress.address"),
+        ("location", _S, "location.displayName"),
+    ),
+    "contacts": _entity(
+        "/me/contacts", _ID, _DISPLAY_NAME, ("email", _S, "emailAddresses.0.address"),
+        ("company", _S, "companyName"),
+    ),
+    "mail_folders": _entity(
+        "/me/mailFolders", _ID, _DISPLAY_NAME, ("total_items", _S, "totalItemCount"),
+        ("unread_items", _S, "unreadItemCount"),
+    ),
+    "messages": _entity(
+        "/me/messages", _ID, ("subject", _S, "subject"),
+        ("from_address", _S, "from.emailAddress.address"),
+        ("received_at", _T, "receivedDateTime"), ("is_read", _B, "isRead"),
+        ("body_preview", _S, "bodyPreview"),
+    ),
+    # -- Planner (A22)
+    "planner_plans": _entity(
+        "/groups/{group_id}/planner/plans", _ID, ("title", _S, "title"),
+        ("owner_group_id", _S, "owner"), _CREATED_AT,
+    ),
+    "planner_buckets": _entity(
+        "/planner/plans/{plan_id}/buckets", _ID, _NAME, ("plan_id", _S, "planId"),
+        ("order_hint", _S, "orderHint"),
+    ),
+    "planner_tasks": _entity(
+        "/planner/plans/{plan_id}/tasks", _ID, ("title", _S, "title"),
+        ("bucket_id", _S, "bucketId"), ("plan_id", _S, "planId"),
+        ("percent_complete", _S, "percentComplete"), ("priority", _S, "priority"),
+        ("due_at", _T, "dueDateTime"),
+    ),
+}
+
+
+def graph_items_schema(fields: tuple, delta: bool = False) -> StructType:
+    """The Spark schema of a field table, closed by ``change_op`` for a
+    ``/delta`` read."""
+    return StructType(
+        [StructField(name, dtype, True) for name, dtype, _ in fields]
+        + ([_CHANGE_OP] if delta else [])
+    )
+
+
+def _at(item: Any, path) -> Any:
+    """The value at ``path`` (key tuple or callable) in one item; None
+    where a key is missing or a step is not a dict/list."""
+    if callable(path):
+        return path(item)
+    for key in path:
+        if isinstance(item, dict) and isinstance(key, str):
+            item = item.get(key)
+        elif isinstance(item, list) and isinstance(key, int) and key < len(item):
+            item = item[key]
+        else:
+            return None
+    return item
+
+
+def graph_items_batch(
+    items: list[dict], fields: tuple, delta: bool = False
+) -> pyarrow.RecordBatch:
+    """Project ``items`` through the field table and decode the cells
+    into one record batch. ``delta`` reads a ``/delta`` walk: a
+    tombstone (``@removed``) keeps only its id, and a ``change_op``
+    column ('D' for a tombstone, else 'U') closes the row."""
+    removed = [delta and "@removed" in i for i in items]
+    cells = [
+        [None if gone and name != "id" else _at(i, path) for i, gone in zip(items, removed)]
+        for name, _dtype, path in fields
+    ]
+    if delta:
+        cells.append(["D" if gone else "U" for gone in removed])
+    return ColumnDecoders(graph_items_schema(fields, delta)).columns_batch(cells)
+
+
+def _graph_frame(
+    spark: SparkSession, items: list[dict], fields: tuple, delta: bool = False
+) -> DataFrame:
+    batch = graph_items_batch(items, fields, delta)
+    return local_batches(spark, [batch], graph_items_schema(fields, delta))
+
+
+def _graph_read(spark: SparkSession, client: GraphClient, entity: str, **ids) -> DataFrame:
+    spec = GRAPH_ENTITIES[entity]
+    return _graph_frame(spark, client.get_paged_values(spec.route.format(**ids)), spec.fields)
+
+
+def sharepoint_list_schema(client: GraphClient, site_id: str, list_id: str) -> StructType:
+    """The list's readable columns (not read-only, or Title), each typed
+    from its facets — the schema of an item's ``fields``."""
+    cols = client.get_paged_values(f"/sites/{site_id}/lists/{list_id}/columns")
+    return StructType([
+        StructField(c["name"], sharepoint_column_type(c), True)
+        for c in cols
+        if not c.get("readOnly") or c.get("name") == "Title"
+    ])
+
+
+def sharepoint_item_fields(columns: Iterable[StructField]) -> tuple:
+    """Field table of SharePoint list items: the item id, then each
+    column read from the item's ``fields``."""
+    return (("id", _S, ("id",)),) + tuple(
+        (c.name, c.dataType, ("fields", c.name)) for c in columns
+    )
+
+
+# -- Entra ID (A17) ---------------------------------------------------------
+
+USERS_SCHEMA = GRAPH_ENTITIES["users"].schema
+GROUPS_SCHEMA = GRAPH_ENTITIES["groups"].schema
+DEVICES_SCHEMA = GRAPH_ENTITIES["devices"].schema
+SIGNIN_SCHEMA = GRAPH_ENTITIES["signin_logs"].schema
+
+
+def graph_users(spark: SparkSession, client: GraphClient) -> DataFrame:
+    return _graph_read(spark, client, "users")
+
+
+def graph_groups(spark: SparkSession, client: GraphClient) -> DataFrame:
+    return _graph_read(spark, client, "groups")
+
+
+def graph_devices(spark: SparkSession, client: GraphClient) -> DataFrame:
+    return _graph_read(spark, client, "devices")
+
+
+def graph_signin_logs(spark: SparkSession, client: GraphClient) -> DataFrame:
+    return _graph_read(spark, client, "signin_logs")
+
+
+# -- SharePoint (A18, B2) ---------------------------------------------------
+
+SITES_SCHEMA = GRAPH_ENTITIES["sites"].schema
+DRIVES_SCHEMA = GRAPH_ENTITIES["drives"].schema
+LISTS_SCHEMA = GRAPH_ENTITIES["lists"].schema
+
+
+def graph_show_sites(spark: SparkSession, client: GraphClient) -> DataFrame:
+    return _graph_read(spark, client, "sites")
+
+
+def graph_show_drives(spark: SparkSession, client: GraphClient, site_id: str) -> DataFrame:
+    return _graph_read(spark, client, "drives", site_id=site_id)
+
+
+def graph_show_lists(spark: SparkSession, client: GraphClient, site_id: str) -> DataFrame:
+    return _graph_read(spark, client, "lists", site_id=site_id)
+
+
 def graph_describe_list(
     spark: SparkSession, client: GraphClient, site_id: str, list_id: str
 ) -> DataFrame:
-    cols = client.get_paged_values(f"/sites/{site_id}/lists/{list_id}/columns")
-    schema = _schema(
-        ("name", StringType()), ("display_name", StringType()),
-        ("column_type", StringType()), ("description", StringType()),
-        ("required", BooleanType()),
-    )
-    rows = [
-        (c.get("name"), c.get("displayName"),
-         sharepoint_column_type(c).simpleString(), c.get("description"),
-         c.get("required"))
-        for c in cols
-    ]
-    return _rows_df(spark, rows, schema)
+    return _graph_read(spark, client, "list_columns", site_id=site_id, list_id=list_id)
 
 
 def graph_list_items(
     spark: SparkSession, client: GraphClient, site_id: str, list_id: str
 ) -> DataFrame:
     """Typed list items: columns from facets, values from fields."""
-    cols = client.get_paged_values(f"/sites/{site_id}/lists/{list_id}/columns")
-    cols = [c for c in cols if not c.get("readOnly") or c.get("name") == "Title"]
-    fields = [StructField("id", StringType(), True)] + [
-        StructField(c["name"], sharepoint_column_type(c), True) for c in cols
-    ]
-    schema = StructType(fields)
+    fields = sharepoint_item_fields(sharepoint_list_schema(client, site_id, list_id))
     items = client.get_paged_values(f"/sites/{site_id}/lists/{list_id}/items?expand=fields")
-    rows = []
-    for it in items:
-        f = it.get("fields", {})
-        rows.append(
-            (it.get("id"),)
-            + tuple(decode_value(f.get(c["name"]), fl.dataType)
-                    for c, fl in zip(cols, fields[1:]))
-        )
-    return _rows_df(spark, rows, schema)
+    return _graph_frame(spark, items, fields)
 
 
 def graph_sharepoint_create_item(
@@ -557,42 +668,21 @@ def sharepoint_list_delete(
 
 # -- Excel over Graph (A19, B4-B6) -----------------------------------------
 
-FILES_SCHEMA = _schema(
-    ("id", StringType()), ("name", StringType()), ("web_url", StringType()),
-    ("size", StringType()), ("created_at", TimestampType()),
-    ("modified_at", TimestampType()), ("mime_type", StringType()),
-    ("is_folder", BooleanType()),
-)
+FILES_SCHEMA = GRAPH_ENTITIES["files"].schema
 
 
 def graph_list_files(spark: SparkSession, client: GraphClient, path: str = "") -> DataFrame:
-    route = f"/me/drive/root/children" if not path else f"/me/drive/root:/{path}:/children"
-    items = client.get_paged_values(route)
-    rows = [
-        (i.get("id"), i.get("name"), i.get("webUrl"), str(i.get("size")),
-         _ts(i.get("createdDateTime")), _ts(i.get("lastModifiedDateTime")),
-         (i.get("file") or {}).get("mimeType"), "folder" in i)
-        for i in items
-    ]
-    return _rows_df(spark, rows, FILES_SCHEMA)
+    spec = GRAPH_ENTITIES["files"]
+    route = spec.route if not path else f"/me/drive/root:/{path}:/children"
+    return _graph_frame(spark, client.get_paged_values(route), spec.fields)
 
 
 def graph_excel_worksheets(spark: SparkSession, client: GraphClient, file_id: str) -> DataFrame:
-    items = client.get_paged_values(f"/me/drive/items/{file_id}/workbook/worksheets")
-    schema = _schema(("name", StringType()), ("id", StringType()),
-                     ("position", StringType()), ("visibility", StringType()))
-    rows = [(i.get("name"), i.get("id"), str(i.get("position")), i.get("visibility"))
-            for i in items]
-    return _rows_df(spark, rows, schema)
+    return _graph_read(spark, client, "worksheets", file_id=file_id)
 
 
 def graph_excel_tables(spark: SparkSession, client: GraphClient, file_id: str) -> DataFrame:
-    items = client.get_paged_values(f"/me/drive/items/{file_id}/workbook/tables")
-    schema = _schema(("name", StringType()), ("id", StringType()),
-                     ("show_headers", BooleanType()), ("show_totals", BooleanType()))
-    rows = [(i.get("name"), i.get("id"), i.get("showHeaders"), i.get("showTotals"))
-            for i in items]
-    return _rows_df(spark, rows, schema)
+    return _graph_read(spark, client, "tables", file_id=file_id)
 
 
 _DATE_FORMAT_HINTS = ("yy", "mm", "dd", "h:", "hh")
@@ -600,10 +690,11 @@ _DATE_FORMAT_HINTS = ("yy", "mm", "dd", "h:", "hh")
 
 def _excel_grid_to_df(spark: SparkSession, doc: dict) -> DataFrame:
     """usedRange grid -> DataFrame: row 0 = headers, types inferred from
-    valueTypes + numberFormat (dates detected via format string)."""
+    valueTypes + numberFormat (dates detected via format string). Cells
+    decode by position (``columns_batch``): headers may repeat."""
     values = doc.get("values") or []
     if not values:
-        return spark.createDataFrame([], StructType([]))
+        return local_batches(spark, [], StructType([]))
     headers = [str(h) for h in values[0]]
     vtypes = doc.get("valueTypes") or []
     formats = doc.get("numberFormat") or []
@@ -621,14 +712,11 @@ def _excel_grid_to_df(spark: SparkSession, doc: dict) -> DataFrame:
             return BooleanType()
         return StringType()
 
-    types = [col_type(i) for i in range(len(headers))]
     schema = StructType(
-        [StructField(h or f"col{i}", t, True) for i, (h, t) in enumerate(zip(headers, types))]
+        [StructField(h or f"col{i}", col_type(i), True) for i, h in enumerate(headers)]
     )
-    rows = []
-    for r in values[1:]:
-        rows.append(tuple(decode_value(v, t) for v, t in zip(r, types)))
-    return spark.createDataFrame(rows, schema)
+    cells = [[r[ci] if ci < len(r) else None for r in values[1:]] for ci in range(len(headers))]
+    return local_batches(spark, [ColumnDecoders(schema).columns_batch(cells)], schema)
 
 
 def graph_excel_table_data(
@@ -723,162 +811,71 @@ def excel_table_write(df: DataFrame, client_factory, file_id: str, table: str) -
 # -- Teams (A20) ------------------------------------------------------------
 
 def graph_my_teams(spark: SparkSession, client: GraphClient) -> DataFrame:
-    items = client.get_paged_values("/me/joinedTeams")
-    schema = _schema(("id", StringType()), ("display_name", StringType()),
-                     ("description", StringType()))
-    return _rows_df(
-        spark,
-        [(i.get("id"), i.get("displayName"), i.get("description")) for i in items],
-        schema,
-    )
+    return _graph_read(spark, client, "teams")
 
 
 def graph_team_channels(spark: SparkSession, client: GraphClient, team_id: str) -> DataFrame:
-    items = client.get_paged_values(f"/teams/{team_id}/channels")
-    schema = _schema(("id", StringType()), ("display_name", StringType()),
-                     ("description", StringType()), ("membership_type", StringType()))
-    return _rows_df(
-        spark,
-        [(i.get("id"), i.get("displayName"), i.get("description"),
-          i.get("membershipType")) for i in items],
-        schema,
-    )
+    return _graph_read(spark, client, "channels", team_id=team_id)
 
 
 def graph_team_members(spark: SparkSession, client: GraphClient, team_id: str) -> DataFrame:
-    items = client.get_paged_values(f"/teams/{team_id}/members")
-    schema = _schema(("id", StringType()), ("display_name", StringType()),
-                     ("email", StringType()), ("roles", StringType()))
-    return _rows_df(
-        spark,
-        [(i.get("id"), i.get("displayName"), i.get("email"),
-          json.dumps(i.get("roles", []))) for i in items],
-        schema,
-    )
+    return _graph_read(spark, client, "members", team_id=team_id)
 
 
 def graph_channel_messages(
     spark: SparkSession, client: GraphClient, team_id: str, channel_id: str
 ) -> DataFrame:
-    items = client.get_paged_values(f"/teams/{team_id}/channels/{channel_id}/messages")
-    schema = _schema(("id", StringType()), ("from_user", StringType()),
-                     ("created_at", TimestampType()), ("content", StringType()))
-    rows = [
-        (i.get("id"),
-         ((i.get("from") or {}).get("user") or {}).get("displayName"),
-         _ts(i.get("createdDateTime")),
-         (i.get("body") or {}).get("content"))
-        for i in items
-    ]
-    return _rows_df(spark, rows, schema)
+    return _graph_read(
+        spark, client, "channel_messages", team_id=team_id, channel_id=channel_id
+    )
 
 
 # -- Outlook (A21) ----------------------------------------------------------
 
 def graph_calendars(spark: SparkSession, client: GraphClient) -> DataFrame:
-    items = client.get_paged_values("/me/calendars")
-    schema = _schema(("id", StringType()), ("name", StringType()),
-                     ("owner", StringType()), ("can_edit", BooleanType()))
-    rows = [(i.get("id"), i.get("name"),
-             (i.get("owner") or {}).get("address"), i.get("canEdit")) for i in items]
-    return _rows_df(spark, rows, schema)
+    return _graph_read(spark, client, "calendars")
 
 
 def graph_calendar_events(
     spark: SparkSession, client: GraphClient,
     start_date: str | None = None, end_date: str | None = None,
 ) -> DataFrame:
+    spec = GRAPH_ENTITIES["events"]
     if start_date and end_date:
         path = f"/me/calendarView?startDateTime={start_date}&endDateTime={end_date}"
     else:
-        path = "/me/events"
-    items = client.get_paged_values(path)
-    schema = _schema(("id", StringType()), ("subject", StringType()),
-                     ("start_at", TimestampType()), ("end_at", TimestampType()),
-                     ("organizer", StringType()), ("location", StringType()))
-    rows = [
-        (i.get("id"), i.get("subject"),
-         _ts((i.get("start") or {}).get("dateTime")),
-         _ts((i.get("end") or {}).get("dateTime")),
-         (((i.get("organizer") or {}).get("emailAddress")) or {}).get("address"),
-         (i.get("location") or {}).get("displayName"))
-        for i in items
-    ]
-    return _rows_df(spark, rows, schema)
+        path = spec.route
+    return _graph_frame(spark, client.get_paged_values(path), spec.fields)
 
 
 def graph_contacts(spark: SparkSession, client: GraphClient) -> DataFrame:
-    items = client.get_paged_values("/me/contacts")
-    schema = _schema(("id", StringType()), ("display_name", StringType()),
-                     ("email", StringType()), ("company", StringType()))
-    rows = [
-        (i.get("id"), i.get("displayName"),
-         (i.get("emailAddresses") or [{}])[0].get("address"),
-         i.get("companyName"))
-        for i in items
-    ]
-    return _rows_df(spark, rows, schema)
+    return _graph_read(spark, client, "contacts")
 
 
 def graph_mail_folders(spark: SparkSession, client: GraphClient) -> DataFrame:
-    items = client.get_paged_values("/me/mailFolders")
-    schema = _schema(("id", StringType()), ("display_name", StringType()),
-                     ("total_items", StringType()), ("unread_items", StringType()))
-    rows = [(i.get("id"), i.get("displayName"), str(i.get("totalItemCount")),
-             str(i.get("unreadItemCount"))) for i in items]
-    return _rows_df(spark, rows, schema)
+    return _graph_read(spark, client, "mail_folders")
 
 
 def graph_messages(
     spark: SparkSession, client: GraphClient, folder: str | None = None
 ) -> DataFrame:
-    path = f"/me/mailFolders/{folder}/messages" if folder else "/me/messages"
-    items = client.get_paged_values(path)
-    schema = _schema(("id", StringType()), ("subject", StringType()),
-                     ("from_address", StringType()), ("received_at", TimestampType()),
-                     ("is_read", BooleanType()), ("body_preview", StringType()))
-    rows = [
-        (i.get("id"), i.get("subject"),
-         (((i.get("from") or {}).get("emailAddress")) or {}).get("address"),
-         _ts(i.get("receivedDateTime")), i.get("isRead"), i.get("bodyPreview"))
-        for i in items
-    ]
-    return _rows_df(spark, rows, schema)
+    spec = GRAPH_ENTITIES["messages"]
+    path = f"/me/mailFolders/{folder}/messages" if folder else spec.route
+    return _graph_frame(spark, client.get_paged_values(path), spec.fields)
 
 
 # -- Planner (A22, B1) ------------------------------------------------------
 
 def graph_planner_plans(spark: SparkSession, client: GraphClient, group_id: str) -> DataFrame:
-    items = client.get_paged_values(f"/groups/{group_id}/planner/plans")
-    schema = _schema(("id", StringType()), ("title", StringType()),
-                     ("owner_group_id", StringType()), ("created_at", TimestampType()))
-    rows = [(i.get("id"), i.get("title"), i.get("owner"),
-             _ts(i.get("createdDateTime"))) for i in items]
-    return _rows_df(spark, rows, schema)
+    return _graph_read(spark, client, "planner_plans", group_id=group_id)
 
 
 def graph_planner_buckets(spark: SparkSession, client: GraphClient, plan_id: str) -> DataFrame:
-    items = client.get_paged_values(f"/planner/plans/{plan_id}/buckets")
-    schema = _schema(("id", StringType()), ("name", StringType()),
-                     ("plan_id", StringType()), ("order_hint", StringType()))
-    rows = [(i.get("id"), i.get("name"), i.get("planId"), i.get("orderHint"))
-            for i in items]
-    return _rows_df(spark, rows, schema)
+    return _graph_read(spark, client, "planner_buckets", plan_id=plan_id)
 
 
 def graph_planner_tasks(spark: SparkSession, client: GraphClient, plan_id: str) -> DataFrame:
-    items = client.get_paged_values(f"/planner/plans/{plan_id}/tasks")
-    schema = _schema(("id", StringType()), ("title", StringType()),
-                     ("bucket_id", StringType()), ("plan_id", StringType()),
-                     ("percent_complete", StringType()), ("priority", StringType()),
-                     ("due_at", TimestampType()))
-    rows = [
-        (i.get("id"), i.get("title"), i.get("bucketId"), i.get("planId"),
-         str(i.get("percentComplete")), str(i.get("priority")),
-         _ts(i.get("dueDateTime")))
-        for i in items
-    ]
-    return _rows_df(spark, rows, schema)
+    return _graph_read(spark, client, "planner_tasks", plan_id=plan_id)
 
 
 def graph_planner_create_task(
@@ -983,16 +980,7 @@ def graph_users_delta(
     to maintain a directory snapshot.
     """
     items = _delta_sync(client, "/users/delta", "graph_users_delta", state_dir)
-    rows = [
-        (i.get("id"), i.get("displayName"), i.get("userPrincipalName"),
-         i.get("mail"), i.get("jobTitle"), i.get("department"),
-         i.get("accountEnabled"), "D" if "@removed" in i else "U")
-        for i in items
-    ]
-    schema = StructType(
-        USERS_SCHEMA.fields + [StructField("change_op", StringType())]
-    )
-    return _rows_df(spark, rows, schema)
+    return _graph_frame(spark, items, GRAPH_ENTITIES["users"].fields, delta=True)
 
 
 def graph_groups_delta(
@@ -1001,16 +989,7 @@ def graph_groups_delta(
     """Incremental Entra groups via ``/groups/delta`` — same token
     machinery and change_op convention as ``graph_users_delta``."""
     items = _delta_sync(client, "/groups/delta", "graph_groups_delta", state_dir)
-    rows = [
-        (i.get("id"), i.get("displayName"), i.get("description"),
-         i.get("mail"), i.get("mailEnabled"), i.get("securityEnabled"),
-         "D" if "@removed" in i else "U")
-        for i in items
-    ]
-    schema = StructType(
-        GROUPS_SCHEMA.fields + [StructField("change_op", StringType())]
-    )
-    return _rows_df(spark, rows, schema)
+    return _graph_frame(spark, items, GRAPH_ENTITIES["groups"].fields, delta=True)
 
 
 def graph_list_items_delta(
@@ -1026,28 +1005,11 @@ def graph_list_items_delta(
     facets exactly as ``graph_list_items``; tombstones carry only the
     id. Feed ``operators.cdc.apply_cdc_changes`` keyed on id to
     maintain a list snapshot without re-reading the whole list."""
-    cols = client.get_paged_values(f"/sites/{site_id}/lists/{list_id}/columns")
-    cols = [c for c in cols if not c.get("readOnly") or c.get("name") == "Title"]
-    fields = [StructField("id", StringType(), True)] + [
-        StructField(c["name"], sharepoint_column_type(c), True) for c in cols
-    ]
+    fields = sharepoint_item_fields(sharepoint_list_schema(client, site_id, list_id))
     items = _delta_sync(
         client,
         f"/sites/{site_id}/lists/{list_id}/items/delta?expand=fields",
         f"graph_list_items_delta_{site_id}_{list_id}",
         state_dir,
     )
-    rows = []
-    for it in items:
-        removed = "@removed" in it
-        f = it.get("fields", {})
-        rows.append(
-            (it.get("id"),)
-            + tuple(
-                None if removed else decode_value(f.get(c["name"]), fl.dataType)
-                for c, fl in zip(cols, fields[1:])
-            )
-            + ("D" if removed else "U",)
-        )
-    schema = StructType(fields + [StructField("change_op", StringType())])
-    return _rows_df(spark, rows, schema)
+    return _graph_frame(spark, items, fields, delta=True)

@@ -8,8 +8,9 @@ scan lifecycle (SURVEY.md §3.1):
               from the result objects (typed first-rows inference — an
               upgrade over the reference's all-VARCHAR first-row rule,
               ``odata_read_functions.cpp:107-121``);
-- execute  -> ``read()``: POST query pages, decode JSON objects with the
-              same lenient PERMISSIVE decoder the OData scan uses.
+- execute  -> ``read()``: POST query pages, decode each page into one
+              Arrow record batch with the OData scan's lenient
+              PERMISSIVE ``ColumnDecoders``.
 
 Pagination modes (option ``paginate``):
 
@@ -43,6 +44,7 @@ from __future__ import annotations
 
 import json
 from collections.abc import Iterator, Sequence
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
@@ -51,7 +53,10 @@ from pyspark.sql.types import BooleanType, StringType, StructField, StructType
 from erpl_web_spark.core.http import HttpClient
 from erpl_web_spark.core.infer import infer_struct as _infer_struct
 from erpl_web_spark.core.secrets import auth_headers_from_options as _auth_headers
-from erpl_web_spark.odata.json_decode import decode_value
+from erpl_web_spark.odata.json_decode import ColumnDecoders
+
+if TYPE_CHECKING:
+    import pyarrow
 
 
 class GraphQLError(RuntimeError):
@@ -198,18 +203,13 @@ class GraphQLReader(DataSourceReader):
     def partitions(self) -> Sequence[InputPartition]:
         return [_OnePartition()]
 
-    def read(self, partition) -> Iterator[tuple]:
+    def read(self, partition) -> Iterator[pyarrow.RecordBatch]:
         client = GraphQLClient(
             self._options["url"], HttpClient(auth_headers=self._auth)
         )
         query = self._options["query"]
         variables = json.loads(self._options.get("variables", "{}"))
         data_path = self._options.get("data_path", "data")
-        fields = self._schema.fields
-
-        def to_tuple(obj: dict) -> tuple:
-            return tuple(decode_value(obj.get(f.name), f.dataType) for f in fields)
-
         if self._options.get("paginate", "none") == "cursor":
             pages = client.fetch_connection_pages(
                 query,
@@ -219,12 +219,11 @@ class GraphQLReader(DataSourceReader):
                 size_var=self._options.get("size_var", "first"),
                 cursor_var=self._options.get("cursor_var", "after"),
             )
-            for page in pages:
-                for obj in page:
-                    yield to_tuple(obj)
         else:
-            for obj in client.fetch_rows(query, variables, data_path):
-                yield to_tuple(obj)
+            pages = [client.fetch_rows(query, variables, data_path)]
+        decoders = ColumnDecoders(self._schema)
+        for page in pages:
+            yield decoders.batch(page)
 
 
 def ensure_registered(spark) -> None:

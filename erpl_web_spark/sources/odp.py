@@ -19,10 +19,11 @@ Reference (SURVEY.md §2.I, src/odp_*.cpp):
 Spark mapping: state is a JSON file per subscription + a JSONL audit log
 under a state dir (the checkpoint-dir analogue) addressed through
 ``pyarrow.fs`` — a local path or any ``file://``/``s3://``/``gs://`` URI;
-``odp_read`` returns the batch as a DataFrame. Pages are fetched driver-side (the reference's scan
-is also a single page-chain); for huge initial loads, do the first load
-through the parallel ``odata`` data source and seed the subscription with
-``import_delta_token``. A Structured Streaming wrapper lives in
+every page decodes into one Arrow record batch (``ColumnDecoders``) and
+``odp_read`` returns the batches as a local DataFrame. Pages are fetched
+driver-side (the reference's scan is also a single page-chain); for huge
+initial loads, do the first load through the parallel ``odata`` data
+source and seed the subscription with ``import_delta_token``. A Structured Streaming wrapper lives in
 ``erpl_web_spark.streaming.odp_stream``.
 """
 
@@ -34,15 +35,20 @@ import os
 import re
 import time
 from dataclasses import asdict, dataclass, field
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from erpl_web_spark.core.http import HttpClient, HttpResponse
+from erpl_web_spark.core.localframe import local_batches, local_rows
 from erpl_web_spark.core.secrets import default_registry
 from erpl_web_spark.core.url import HttpUrl
 from erpl_web_spark.odata.client import HttpStatusError, ODataClient
-from erpl_web_spark.odata.json_decode import decode_rows
+from erpl_web_spark.odata.json_decode import ColumnDecoders
+
+if TYPE_CHECKING:
+    import pyarrow
 
 DEFAULT_STATE_DIR = os.environ.get(
     "ERPL_WEB_ODP_STATE_DIR", os.path.expanduser("~/.erpl_web_spark/odp")
@@ -204,25 +210,31 @@ class OdpReader:
         client = ODataClient(self.url, self.http)
         return client.get_model().schema_for_entity_set(client.entity_set_name())
 
-    def fetch(self, url: str, schema: StructType) -> tuple[list[tuple], HttpResponse, dict]:
-        """Decoded rows of every page from ``url`` on (the
-        ``ODataClient.pages`` walk, the track-changes ``Prefer`` header
-        on every page), the first response and the last document. The
-        delta link appears only on the LAST page, so the token commit
+    def fetch(
+        self, url: str, schema: StructType
+    ) -> tuple[list[pyarrow.RecordBatch], HttpResponse, dict]:
+        """One decoded record batch per non-empty page from ``url`` on
+        (the ``ODataClient.pages`` walk, the track-changes ``Prefer``
+        header on every page), the first response and the last document.
+        The delta link appears only on the LAST page, so the token commit
         waits for it (I4)."""
-        rows: list[tuple] = []
+        batches = []
         first = None
+        decoders = ColumnDecoders(schema)
         walk = ODataClient(self.url, self.http).pages(url, self._prefer_header())
         for resp, doc in walk:
             if first is None:
                 first = resp
-            rows.extend(decode_rows(doc, schema))
-        return rows, first, doc
+            batch = decoders.batch(doc)
+            if batch.num_rows:
+                batches.append(batch)
+        return batches, first, doc
 
     def run_batch(
         self, force_full_load: bool = False, import_delta_token: str | None = None
-    ) -> tuple[list[tuple], StructType, OdpSubscription, str]:
-        """Execute one CDC batch; returns (rows, schema, subscription, phase)."""
+    ) -> tuple[list[pyarrow.RecordBatch], StructType, OdpSubscription, str]:
+        """Execute one CDC batch; returns (record batches, schema,
+        subscription, phase)."""
         sub_id = self.repo.subscription_id_for(self.url)
         sub = self.repo.load(sub_id) or OdpSubscription(sub_id, self.url)
         if import_delta_token:
@@ -234,16 +246,16 @@ class OdpReader:
 
         if force_full_load or not sub.delta_link:
             phase = "INITIAL_LOAD"
-            rows, sub = self._initial_load(sub, schema)
+            batches, sub = self._initial_load(sub, schema)
         else:
             phase = "DELTA_FETCH"
             try:
-                rows, sub = self._delta_fetch(sub, schema)
+                batches, sub = self._delta_fetch(sub, schema)
             except HttpStatusError as e:
                 if e.status in (400, 404, 410):
                     # expired/invalid token -> automatic full reload (I5)
                     phase = "INITIAL_LOAD(token-fallback)"
-                    rows, sub = self._initial_load(sub, schema)
+                    batches, sub = self._initial_load(sub, schema)
                 else:
                     sub.status = "ERROR"
                     self.repo.save(sub)
@@ -253,12 +265,12 @@ class OdpReader:
             sub_id,
             {
                 "phase": phase,
-                "rows": len(rows),
+                "rows": sum(b.num_rows for b in batches),
                 "duration_s": round(time.time() - t0, 3),
                 "token_after": sub.delta_token,
             },
         )
-        return rows, schema, sub, phase
+        return batches, schema, sub, phase
 
     def _prefer_header(self) -> dict[str, str]:
         prefer = "odata.track-changes"
@@ -267,7 +279,7 @@ class OdpReader:
         return {"Accept": "application/json", "Prefer": prefer}
 
     def _initial_load(self, sub: OdpSubscription, schema: StructType):
-        rows, first, last = self.fetch(self.url, schema)
+        batches, first, last = self.fetch(self.url, schema)
         sub.preference_applied = "track-changes" in first.headers.get(
             "Preference-Applied", first.headers.get("preference-applied", "")
         )
@@ -276,15 +288,15 @@ class OdpReader:
             sub.delta_token = token
             sub.delta_link = HttpUrl.parse(self.url).resolve(delta_link).to_string()
         sub.status = "ACTIVE"
-        return rows, sub
+        return batches, sub
 
     def _delta_fetch(self, sub: OdpSubscription, schema: StructType):
-        rows, _first, last = self.fetch(sub.delta_link, schema)
+        batches, _first, last = self.fetch(sub.delta_link, schema)
         token, delta_link = extract_delta_token(last)
         if delta_link:  # advance token only after the last page (I4)
             sub.delta_token = token
             sub.delta_link = HttpUrl.parse(sub.delta_link).resolve(delta_link).to_string()
-        return rows, sub
+        return batches, sub
 
 
 # -- public API -------------------------------------------------------------
@@ -299,8 +311,8 @@ def odp_read(
 ) -> DataFrame:
     """One CDC batch as a DataFrame (reference A8 ``odp_odata_read``)."""
     reader = OdpReader(url, state_dir, max_page_size)
-    rows, schema, _sub, _phase = reader.run_batch(force_full_load, import_delta_token)
-    return spark.createDataFrame(rows, schema)
+    batches, schema, _sub, _phase = reader.run_batch(force_full_load, import_delta_token)
+    return local_batches(spark, batches, schema)
 
 
 def odp_list_subscriptions(spark: SparkSession, state_dir: str = DEFAULT_STATE_DIR) -> DataFrame:
@@ -309,7 +321,8 @@ def odp_list_subscriptions(spark: SparkSession, state_dir: str = DEFAULT_STATE_D
         (s.subscription_id, s.url, s.delta_token, s.status, s.preference_applied)
         for s in repo.list_all()
     ]
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         rows,
         "subscription_id string, url string, delta_token string, "
         "status string, preference_applied boolean",

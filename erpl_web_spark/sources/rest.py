@@ -22,9 +22,10 @@ with the four pagination conventions that cover most public APIs:
 
 Rows live at ``data_path`` (dot path into the response document; empty
 for a top-level array). Schema: explicit ``schema_json``, else typed
-inference from the first page. Decoding reuses the OData scan's lenient
-PERMISSIVE decoder. Auth matches the other connectors (inline options or
-the file-backed secret registry).
+inference from the first page. Each page decodes into one Arrow record
+batch through the OData scan's lenient PERMISSIVE ``ColumnDecoders``.
+Auth matches the other connectors (inline options or the file-backed
+secret registry).
 
 Cursor/link chains are sequential by nature — one partition, page-at-a-
 time laziness (reference E1). Offset mode with a known total is the
@@ -37,6 +38,7 @@ import json
 import logging
 import re
 from collections.abc import Iterator, Sequence
+from typing import TYPE_CHECKING
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -52,7 +54,11 @@ from erpl_web_spark.core.http import HttpClient
 from erpl_web_spark.core.infer import infer_struct
 from erpl_web_spark.core.secrets import auth_headers_from_options as _auth_headers
 from erpl_web_spark.core.url import HttpUrl
-from erpl_web_spark.odata.json_decode import decode_value
+from erpl_web_spark.odata.client import HttpStatusError
+from erpl_web_spark.odata.json_decode import ColumnDecoders
+
+if TYPE_CHECKING:
+    import pyarrow
 
 _LINK_NEXT_RE = re.compile(r'<([^>]+)>\s*;\s*rel="?next"?')
 
@@ -100,7 +106,7 @@ class RestPager:
     def _get(self, url: str):
         resp = self.http.get(url, headers={"Accept": "application/json"})
         if resp.status >= 400:
-            raise RuntimeError(f"HTTP {resp.status} fetching {url}")
+            raise HttpStatusError(resp.status, url)
         return resp
 
     def pages(
@@ -273,12 +279,11 @@ class RestReader(DataSourceReader):
                 ]
         return [_RangePartition(0, None, None)]
 
-    def read(self, partition: _RangePartition) -> Iterator[tuple]:
+    def read(self, partition: _RangePartition) -> Iterator[pyarrow.RecordBatch]:
         pager = RestPager(HttpClient(auth_headers=self._auth), self._options)
-        fields = self._schema.fields
+        decoders = ColumnDecoders(self._schema)
         for page in pager.pages(partition.start, partition.limit):
-            for obj in page:
-                yield tuple(decode_value(obj.get(f.name), f.dataType) for f in fields)
+            yield decoders.batch(page)
 
 
 def ensure_registered(spark) -> None:

@@ -6,7 +6,8 @@ contract: **offset == delta link**. This wraps the ODP orchestrator in a
 ``SimpleDataSourceStreamReader`` (driver-side reads, appropriate for CDC
 delta volumes; Spark checkpoints the offsets, giving exactly-once
 delivery into the sink — the reference's deferred-token-commit semantics
-fall out of Spark's offset protocol for free).
+fall out of Spark's offset protocol for free). Each micro-batch is the
+orchestrator's Arrow record batches, one per non-empty page.
 
 Usage::
 
@@ -20,11 +21,15 @@ Usage::
 from __future__ import annotations
 
 from collections.abc import Iterator
+from typing import TYPE_CHECKING
 
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import StructType
 
 from erpl_web_spark.sources.odp import DEFAULT_STATE_DIR, OdpReader
+
+if TYPE_CHECKING:
+    import pyarrow
 
 
 class OdpStreamDataSource(DataSource):
@@ -59,29 +64,31 @@ class OdpStreamReader(SimpleDataSourceStreamReader):
     def initialOffset(self) -> dict:
         return {"delta_link": "", "batch": 0}
 
-    def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
+    def read(self, start: dict) -> tuple[Iterator[pyarrow.RecordBatch], dict]:
         reader = self._reader()
         if not start.get("delta_link"):
-            rows, _schema, sub, _phase = reader.run_batch(force_full_load=True)
+            batches, _schema, sub, _phase = reader.run_batch(force_full_load=True)
         else:
-            rows, _schema, sub, _phase = reader.run_batch(
+            batches, _schema, sub, _phase = reader.run_batch(
                 import_delta_token=None  # state repo already holds the link
             )
-        return iter(rows), {"delta_link": sub.delta_link or "", "batch": start.get("batch", 0) + 1}
+        return iter(batches), {
+            "delta_link": sub.delta_link or "", "batch": start.get("batch", 0) + 1
+        }
 
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
+    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[pyarrow.RecordBatch]:
         # Failure replay: re-fetch from the start offset's delta link. ODP
         # servers replay a delta until the next token is requested, so this
         # is deterministic within the server's retention window.
         reader = self._reader()
         link = start.get("delta_link")
         if not link:
-            rows, _sch, _sub, _ph = reader.run_batch(force_full_load=True)
-            return iter(rows)
+            batches, _sch, _sub, _ph = reader.run_batch(force_full_load=True)
+            return iter(batches)
         # An HTTP error (a 503 after retries, an expired token) raises:
         # an empty replay would silently drop the batch's rows.
-        rows, _first, _last = reader.fetch(link, self._schema)
-        return iter(rows)
+        batches, _first, _last = reader.fetch(link, self._schema)
+        return iter(batches)
 
     def commit(self, end: dict) -> None:
         pass  # durable state already advanced by the repo on each batch

@@ -29,6 +29,20 @@ def secrets_file():
     if os.path.exists(path):
         os.remove(path)
 
+@pytest.fixture()
+def tz(monkeypatch):
+    """Set the process time zone (``TZ`` + ``time.tzset``) for one test."""
+    import time
+
+    def set_tz(name):
+        monkeypatch.setenv("TZ", name)
+        time.tzset()
+
+    yield set_tz
+    monkeypatch.undo()
+    time.tzset()
+
+
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 

@@ -240,8 +240,14 @@ EDMX_ODP = """<?xml version="1.0" encoding="utf-8"?>
         <Property Name="CALMONTH" Type="Edm.String" MaxLength="6"/>
         <Property Name="Amount" Type="Edm.Decimal" Precision="33" Scale="2"/>
       </EntityType>
+      <EntityType Name="Stamp">
+        <Key><PropertyRef Name="StampID"/></Key>
+        <Property Name="StampID" Type="Edm.Int32" Nullable="false"/>
+        <Property Name="At" Type="Edm.DateTimeOffset"/>
+      </EntityType>
       <EntityContainer Name="C">
         <EntitySet Name="Facts" EntityType="ODP.Fact"/>
+        <EntitySet Name="Stamps" EntityType="ODP.Stamp"/>
       </EntityContainer>
     </Schema>
   </edmx:DataServices>
@@ -296,6 +302,34 @@ GRAPH_LIST_COLUMNS = [
     {"name": "DueDate", "displayName": "Due", "dateTime": {}, "required": False},
     {"name": "Status", "displayName": "Status", "choice": {}, "required": False},
 ]
+
+# One instant, 2024-01-01T10:30:00Z, served by every web-API surface
+# (REST, GraphQL, a SharePoint list, ODP, an Excel date column): a
+# reader that shifts it by the process time zone reads a different value.
+INSTANT = "2024-01-01T10:30:00Z"
+
+REST_ITEMS = [
+    {"item_id": i, "name": f"item-{i}", "score": round(0.5 * i, 2)}
+    for i in range(23)
+]
+
+GQL_PRODUCTS = [
+    {
+        "id": i,
+        "name": f"widget-{i}",
+        "price": round(1.5 * i, 2),
+        "inStock": i % 3 != 0,
+        "tags": [f"t{i % 2}", f"t{i % 5}"],
+        "vendor": {"name": f"vendor-{i % 4}", "rating": i % 5},
+    }
+    for i in range(25)
+]
+
+EXCEL_STAMPS_DOC = {
+    "values": [["Name", "When"], ["tz", INSTANT]],
+    "valueTypes": [["String", "String"], ["String", "String"]],
+    "numberFormat": [["General", "General"], ["General", "yyyy-mm-dd hh:mm"]],
+}
 
 EXCEL_RANGE_DOC = {
     "values": [
@@ -391,10 +425,9 @@ def _make_handler(state: FixtureState):
             # ---- generic REST pagination ---------------------------------
             # 23 items {item_id, name, score}; four pagination dialects.
             if route.startswith("/rest/"):
-                items = [
-                    {"item_id": i, "name": f"item-{i}", "score": round(0.5 * i, 2)}
-                    for i in range(23)
-                ]
+                items = REST_ITEMS
+                if route == "/rest/instants":
+                    return self._json(200, [{"id": 1, "at": INSTANT}])
                 if route == "/rest/offset-items":
                     limit = int(q.get("limit", 10))
                     offset = int(q.get("offset", 0))
@@ -520,6 +553,13 @@ def _make_handler(state: FixtureState):
                 return self._send(200, EDMX_ODP.encode(), "application/xml")
             if route == "/odp/Facts":
                 return self._serve_odp(q)
+            if route == "/odp/Stamps":
+                # one-row initial load, then empty deltas
+                rows = [] if any(k.startswith("!deltatoken") for k in q) else [
+                    {"StampID": 1, "At": INSTANT}]
+                return self._json(200, {
+                    "value": rows, "@odata.deltaLink": "/odp/Stamps?!deltatoken='S1'",
+                }, {"OData-Version": "4.0", "Preference-Applied": "odata.track-changes"})
 
             # ---- Microsoft Graph -----------------------------------------
             if route == "/graph/users/delta":
@@ -624,11 +664,15 @@ def _make_handler(state: FixtureState):
                     {"id": "f1", "name": "book.xlsx", "webUrl": "https://sp/f1",
                      "size": 1234, "createdDateTime": "2024-01-01T00:00:00Z",
                      "lastModifiedDateTime": "2024-01-03T00:00:00Z",
-                     "file": {"mimeType": "application/vnd.ms-excel"}}]})
+                     "file": {"mimeType": "application/vnd.ms-excel"}},
+                    # a folder: no size, no file facet
+                    {"id": "d1", "name": "docs", "webUrl": "https://sp/d1",
+                     "folder": {"childCount": 0}}]})
             if route == "/graph/me/drive/items/f1/workbook/worksheets":
                 return self._json(200, {"value": [
                     {"name": "Sheet1", "id": "ws1", "position": 0,
-                     "visibility": "Visible"}]})
+                     "visibility": "Visible"},
+                    {"name": "Sheet2", "id": "ws2", "visibility": "Hidden"}]})
             if route == "/graph/me/drive/items/f1/workbook/tables":
                 return self._json(200, {"value": [
                     {"name": "T1", "id": "t1", "showHeaders": True,
@@ -636,6 +680,8 @@ def _make_handler(state: FixtureState):
             if route in ("/graph/me/drive/items/f1/workbook/tables/T1/range",
                          "/graph/me/drive/items/f1/workbook/worksheets/Sheet1/usedRange"):
                 return self._json(200, EXCEL_RANGE_DOC)
+            if route == "/graph/me/drive/items/f1/workbook/worksheets/Stamps/usedRange":
+                return self._json(200, EXCEL_STAMPS_DOC)
             if route == "/graph/me/drive/items/f1/workbook/tables/T1/rows":
                 return self._json(200, {"value": [
                     {"index": i, "values": [row]}
@@ -647,6 +693,11 @@ def _make_handler(state: FixtureState):
                 return self._json(200, {"value": [
                     {"id": "c1", "displayName": "General", "description": "",
                      "membershipType": "standard"}]})
+            if route == "/graph/teams/t1/members":
+                return self._json(200, {"value": [
+                    {"id": "mb1", "displayName": "User 0", "email": "u0@x.example",
+                     "roles": ["owner"]},
+                    {"id": "mb2", "displayName": "User 1", "email": "u1@x.example"}]})
             if route == "/graph/teams/t1/channels/c1/messages":
                 return self._json(200, {"value": [
                     {"id": "m1", "from": {"user": {"displayName": "User 0"}},
@@ -666,7 +717,8 @@ def _make_handler(state: FixtureState):
             if route == "/graph/me/mailFolders":
                 return self._json(200, {"value": [
                     {"id": "inbox", "displayName": "Inbox", "totalItemCount": 2,
-                     "unreadItemCount": 1}]})
+                     "unreadItemCount": 1},
+                    {"id": "drafts", "displayName": "Drafts"}]})
             if route in ("/graph/me/messages", "/graph/me/mailFolders/inbox/messages"):
                 return self._json(200, {"value": [
                     {"id": "msg1", "subject": "Hi",
@@ -684,7 +736,8 @@ def _make_handler(state: FixtureState):
                 return self._json(200, {"value": [
                     {"id": "tk1", "title": "Task 1", "bucketId": "b1", "planId": "p1",
                      "percentComplete": 50, "priority": 5,
-                     "dueDateTime": "2024-03-01T00:00:00Z"}]})
+                     "dueDateTime": "2024-03-01T00:00:00Z"},
+                    {"id": "tk2", "title": "Task 2", "bucketId": "b1", "planId": "p1"}]})
 
             # ---- Datasphere / Business Central (OData-backed) -------------
             if route == "/dsp/api/v1/dwc/catalog/spaces":
@@ -793,17 +846,9 @@ def _make_handler(state: FixtureState):
                 variables = doc.get("variables") or {}
                 if "boom" in q:
                     return self._json(200, {"errors": [{"message": "boom"}]})
-                products = [
-                    {
-                        "id": i,
-                        "name": f"widget-{i}",
-                        "price": round(1.5 * i, 2),
-                        "inStock": i % 3 != 0,
-                        "tags": [f"t{i % 2}", f"t{i % 5}"],
-                        "vendor": {"name": f"vendor-{i % 4}", "rating": i % 5},
-                    }
-                    for i in range(25)
-                ]
+                products = GQL_PRODUCTS
+                if "instants" in q:
+                    return self._json(200, {"data": {"instants": [{"id": 1, "at": INSTANT}]}})
                 if "addProduct" in q:
                     if not variables.get("name"):
                         return self._json(200, {"errors": [

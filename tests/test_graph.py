@@ -383,8 +383,8 @@ def test_graph_delta_page_cap_resumes(spark, fixture_server, tmp_path, monkeypat
 
         def sync():
             nonlocal offset
-            rows, offset = reader.read(offset)
-            return [(r[0], r[-1]) for r in rows]
+            batches, offset = reader.read(offset)
+            return [(r["id"], r["change_op"]) for b in batches for r in b.to_pylist()]
 
     # page cap of 1: the 5-user 2-page initial load arrives over two syncs
     first = sync()
@@ -520,3 +520,41 @@ def test_graph_list_items_delta_sync(spark, fixture_server, tmp_path):
     snap = apply_cdc_changes(full.drop("change_op"), delta, ["id"], op_col="change_op")
     final = {r["id"]: r["Title"] for r in snap.collect()}
     assert final == {"2": "Row2 edited"}
+
+
+def test_graph_get_json_error_status_carries_status(gclient, fixture_server):
+    """An error status on ``GraphClient.get_json`` raises
+    ``HttpStatusError`` (a ``RuntimeError``) with the status and URL."""
+    from erpl_web_spark.odata.client import HttpStatusError
+
+    with pytest.raises(HttpStatusError) as err:
+        gclient.get_json("/no/such/route")
+    assert err.value.status == 404
+    assert str(err.value) == (
+        f"HTTP 404 fetching {fixture_server.base_url}/graph/no/such/route"
+    )
+
+
+def test_absent_graph_fields_read_null(spark, gclient):
+    """A field the item omits reads NULL, never the string "None"; a
+    number in a string column still reads as its digits."""
+    from erpl_web_spark.sources.graph import graph_team_members
+
+    files = {r["id"]: r for r in graph_list_files(spark, gclient).collect()}
+    assert files["f1"]["size"] == "1234" and files["f1"]["is_folder"] is False
+    assert files["d1"]["size"] is None and files["d1"]["mime_type"] is None
+    assert files["d1"]["is_folder"] is True
+    sheets = {r["id"]: r["position"] for r in graph_excel_worksheets(spark, gclient, "f1").collect()}
+    assert sheets == {"ws1": "0", "ws2": None}
+    folders = {
+        r["id"]: (r["total_items"], r["unread_items"])
+        for r in graph_mail_folders(spark, gclient).collect()
+    }
+    assert folders == {"inbox": ("2", "1"), "drafts": (None, None)}
+    tasks = {
+        r["id"]: (r["percent_complete"], r["priority"])
+        for r in graph_planner_tasks(spark, gclient, "p1").collect()
+    }
+    assert tasks == {"tk1": ("50", "5"), "tk2": (None, None)}
+    roles = {r["id"]: r["roles"] for r in graph_team_members(spark, gclient, "t1").collect()}
+    assert roles == {"mb1": '["owner"]', "mb2": None}

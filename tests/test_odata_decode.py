@@ -95,8 +95,6 @@ def test_payload_shapes_and_links():
 # Column-wise Arrow decoding (pure pyarrow, no SparkSession)
 # ---------------------------------------------------------------------------
 
-import time  # noqa: E402
-
 import pytest  # noqa: E402
 
 from pyspark.sql.types import (  # noqa: E402
@@ -106,19 +104,6 @@ from pyspark.sql.types import (  # noqa: E402
     DoubleType,
     ShortType,
 )
-
-
-@pytest.fixture()
-def tz(monkeypatch):
-    """Set the process time zone (``TZ`` + ``time.tzset``) for one test."""
-
-    def set_tz(name):
-        monkeypatch.setenv("TZ", name)
-        time.tzset()
-
-    yield set_tz
-    monkeypatch.undo()
-    time.tzset()
 
 
 _MIXED = StructType([
@@ -192,15 +177,48 @@ _NATIVE_DOC = {"value": [
 ]}
 
 
-def _tuple_path(doc, schema):
-    """The tuple reader's Arrow: decode_rows + PySpark's converter."""
+def _tuple_path(rows, schema):
+    """The tuple reader's Arrow: decoded tuples + PySpark's converter."""
     from pyspark.sql.worker.plan_data_source_read import records_to_arrow_batches
 
     from erpl_web_spark.odata.datasource import ODataDataSource
 
-    rows = decode_rows(doc, schema)
     batches = list(records_to_arrow_batches(iter(rows), 10_000, schema, ODataDataSource({})))
     return batches[0] if batches else None
+
+
+def _st(*fields):
+    return StructType([StructField(n, t) for n, t in fields])
+
+
+def _fixture_docs():
+    """REST, GraphQL and Graph fixture documents, plus an Excel grid whose
+    columns arrive pre-extracted (a tuple of cell lists) under a repeated
+    header — the shape ``columns_batch`` decodes by position."""
+    from fixtures.odata_server import (
+        EXCEL_RANGE_DOC,
+        GQL_PRODUCTS,
+        GRAPH_USERS,
+        REST_ITEMS,
+        FixtureState,
+    )
+
+    s, d, b, ts = StringType(), DoubleType(), BooleanType(), TimestampType()
+    grid = [r[:2] + r[1:] for r in EXCEL_RANGE_DOC["values"][1:]]  # "Qty" twice
+    return [
+        (REST_ITEMS, _st(("item_id", LongType()), ("name", s), ("score", d))),
+        (GQL_PRODUCTS, _st(
+            ("id", LongType()), ("name", s), ("price", d), ("inStock", b),
+            ("tags", ArrayType(s)),
+            ("vendor", _st(("name", s), ("rating", IntegerType()))))),
+        ({"value": GRAPH_USERS}, _st(
+            ("id", s), ("displayName", s), ("mail", s), ("accountEnabled", b))),
+        ({"value": FixtureState().sp_items}, _st(
+            ("id", s),
+            ("fields", _st(("Title", s), ("Amount", d), ("Active", b), ("DueDate", ts))))),
+        (tuple(map(list, zip(*grid))), _st(
+            ("Name", s), ("Qty", d), ("Qty", d), ("Price", d), ("Done", b), ("When", ts))),
+    ]
 
 
 @pytest.mark.parametrize(
@@ -211,20 +229,29 @@ def _tuple_path(doc, schema):
         (_NATIVE_DOC, _NATIVE),
         ({"value": [{"id": 2**63}, {"qty": 2**31}, {"ok": 1}, {"price": 2}, {"name": 1},
                     {"at": "2023-01-15T10:30:00.1234567Z"}, {"at": "2023-01-15"}]}, _NATIVE),
-    ],
-    ids=["lenient", "v2", "native", "native-fallbacks"],
+    ] + _fixture_docs(),
+    ids=["lenient", "v2", "native", "native-fallbacks",
+         "rest", "graphql", "graph-users", "graph-list-items", "excel-columns"],
 )
 def test_decode_batch_matches_tuple_path(tz, doc, schema):
     pa = pytest.importorskip("pyarrow")
-    from erpl_web_spark.odata.json_decode import decode_batch
+    from erpl_web_spark.odata.json_decode import ColumnDecoders, decode_batch
 
     tz("UTC")  # the tuple path reads naive timestamps as local time
-    got = decode_batch(doc, schema)
-    want = _tuple_path(doc, schema)
+    if isinstance(doc, tuple):  # pre-extracted columns, decoded by position
+        got = ColumnDecoders(schema).columns_batch(list(doc))
+        rows = [
+            tuple(decode_value(v, f.dataType) for v, f in zip(row, schema.fields))
+            for row in zip(*doc)
+        ]
+    else:
+        got = decode_batch(doc, schema)
+        rows = decode_rows(doc, schema)
+    want = _tuple_path(rows, schema)
     assert isinstance(got, pa.RecordBatch)
     assert got.schema == want.schema
     assert got.to_pylist() == want.to_pylist()
-    assert got.num_rows == len(decode_rows(doc, schema))
+    assert got.num_rows == len(rows)
 
 
 def test_decode_batch_lenient_values():
@@ -325,4 +352,29 @@ def test_one_page_walker_per_web_api_family():
                 and rel != "sources/graph.py"
             ):
                 offenders.append(f'{rel}:{node.lineno} reads .get("@odata.nextLink")')
+    assert not offenders, offenders
+
+
+def test_one_decode_path_per_web_api_read():
+    """Cells decode only inside ``odata/json_decode.py`` (no
+    ``decode_value(`` call elsewhere in the package), and the Graph and
+    ODP sources build no frame themselves (no ``createDataFrame(``):
+    driver-side reads go through ``core.localframe``."""
+    import ast
+    from pathlib import Path
+
+    import erpl_web_spark
+
+    root = Path(erpl_web_spark.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for node in ast.walk(ast.parse(path.read_text(), filename=rel)):
+            if not isinstance(node, ast.Call):
+                continue
+            name = getattr(node.func, "id", None) or getattr(node.func, "attr", None)
+            if name == "decode_value" and rel != "odata/json_decode.py":
+                offenders.append(f"{rel}:{node.lineno} calls decode_value(")
+            if name == "createDataFrame" and rel in ("sources/graph.py", "sources/odp.py"):
+                offenders.append(f"{rel}:{node.lineno} calls createDataFrame(")
     assert not offenders, offenders

@@ -3,6 +3,7 @@ offset partitioning, against the fixture server's /rest/* endpoints."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql.types import DoubleType, LongType
 
 from erpl_web_spark.sources.rest import rest_read
@@ -198,3 +199,19 @@ def test_rest_stream_writer_posts_each_microbatch(spark, fixture_server, tmp_pat
         for d in fixture_server.state.rest_collected[before:]
     }
     assert got == {100, 101}
+
+
+def test_rest_error_status_carries_status(fixture_server):
+    """An error status on a page GET raises ``HttpStatusError`` (a
+    ``RuntimeError``) with the status and URL."""
+    from erpl_web_spark.core.http import HttpClient
+    from erpl_web_spark.odata.client import HttpStatusError
+    from erpl_web_spark.sources.rest import RestPager
+
+    url = fixture_server.base_url + "/rest/no-such-route"
+    pager = RestPager(HttpClient(), {"url": url})
+    with pytest.raises(HttpStatusError) as err:
+        next(pager.pages())
+    assert err.value.status == 404
+    assert isinstance(err.value, RuntimeError)
+    assert str(err.value) == f"HTTP 404 fetching {url}"
