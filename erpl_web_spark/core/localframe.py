@@ -1,69 +1,60 @@
-"""Driver-local rows -> DataFrame without the pickled-RDD execution path.
+"""Driver-local rows -> DataFrame as a JVM local relation.
 
-The package's single place for driver-built frames. ``local_rows``
-takes Python tuples; ``local_batches`` takes Arrow record batches, the
-form every driver-side web-API read (Graph entities, the Excel grid,
-ODP batches) gets from ``odata.json_decode.ColumnDecoders``. Both land
-as a JVM local relation (``LocalTableScan``) instead of a pickled-RDD
-scan; ``local_rows`` only where the exactness guards below allow.
+The package's one place for driver-built frames: no other module calls
+``createDataFrame``. ``local_rows`` takes Python rows, ``local_batches``
+Arrow record batches (what ``odata.json_decode.ColumnDecoders`` yields
+for the Graph, Excel and ODP reads). Both hand one Arrow table to
+``createDataFrame``, which plans as ``LocalTableScan``. The classic
+``createDataFrame(list, schema)`` plans a pickled-RDD scan instead, so
+every action on the frame forks Python workers to unpickle its rows.
 
-``spark.createDataFrame(list, schema)`` parallelizes the rows into
-defaultParallelism pickle partitions, so every downstream action forks
-one Python worker PER PARTITION just to unpickle a handful of rows —
-measured 2.8 s per action for a 12-row frame on this runtime (32
-concurrent worker forks, guide §4 fork tax), paid again by every bench
-rep of every collect-then-rebuild query. Routing the same rows through
-a pandas DataFrame + Arrow lands them as a JVM-side relation: identical
-rows and schema, zero Python workers at execution (measured 0.13 s).
-
-Exactness guards — fall back to the classic path whenever the Arrow
-conversion could diverge: NaN doubles (Arrow's from_pandas reads NaN as
-null — the one measured value divergence), empty row sets (pandas loses
-the column count), nested cells (list/tuple/dict under dtype=object),
-mapping rows (``tuple(row)`` would be the keys; the classic path maps
-them by field name) and ragged rows (pandas pads short rows with NULL
-where the classic path raises).
-dtype=object preserves int64 exactly (no float64 widening), None stays
-null, naive datetimes stay NTZ — pinned by tests/test_local_rows.py.
+``local_rows`` runs the classic path's own driver-side steps — PySpark's
+schema verifier, field converter and ``toInternal`` — and builds one
+``pa.array`` per field from the internal values instead of pickling
+them. So bad input raises the classic error (``pa.array`` alone would
+truncate 1.5 in an int field to 1), Mapping rows map by field name and
+a naive datetime in a ``timestamp`` field is driver-local wall time.
+The classic path runs only when Arrow rejects a verified value (a
+decimal beyond its field's scale, which the JVM rounds HALF_UP).
 """
 
 from __future__ import annotations
 
-import math
-from collections.abc import Mapping
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    StructType,
+    _create_converter,
+    _make_type_verifier,
+    _parse_datatype_string,
+)
 
 
-def local_rows(spark: SparkSession, rows, schema: str) -> DataFrame:
-    """Build a DataFrame from driver-local ``rows`` with the DDL
-    ``schema`` — value-identical to ``spark.createDataFrame(rows,
-    schema)``, but executed as a JVM local relation (no Python workers)
-    whenever the rows are flat, NaN-free scalars."""
+def local_rows(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
+    """Build a DataFrame from driver-local ``rows`` with ``schema`` (a DDL
+    string or a ``StructType``): value- and schema-identical to
+    ``spark.createDataFrame(rows, schema)``, executed as a JVM local
+    relation (no Python workers)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    def _safe(v) -> bool:
-        if isinstance(v, float) and math.isnan(v):
-            return False
-        return not isinstance(v, (list, tuple, dict, set))
-
-    if (
-        not rows
-        or any(isinstance(r, Mapping) for r in rows)
-        or len({len(r) for r in rows}) > 1
-        or not all(_safe(v) for r in rows for v in r)
-    ):
-        return spark.createDataFrame(rows, schema)
+    struct = _parse_datatype_string(schema) if isinstance(schema, str) else schema
+    verify, convert = _make_type_verifier(struct), _create_converter(struct)
+    rows = list(rows)
+    internal = []
+    for row in rows:
+        verify(row)
+        internal.append(struct.toInternal(convert(row)))
+    arrow_schema = to_arrow_schema(struct)
     try:
-        import pandas as pd
-
-        pdf = pd.DataFrame([tuple(r) for r in rows], dtype=object)
-        return spark.createDataFrame(pdf, schema=schema)
-    except Exception:
-        # The fast path is an optimization, never a dependency: any
-        # pandas/Arrow conversion surprise falls back to the classic
-        # (value-defining) path.
+        columns = [
+            pa.array([r[i] for r in internal], type=field.type)
+            for i, field in enumerate(arrow_schema)
+        ]
+    except pa.ArrowException:
         return spark.createDataFrame(rows, schema)
+    return local_batches(
+        spark, [pa.RecordBatch.from_arrays(columns, schema=arrow_schema)], struct
+    )
 
 
 def local_batches(spark: SparkSession, batches, schema: StructType) -> DataFrame:

@@ -17,6 +17,7 @@ from pyspark.sql.types import (
 )
 
 from erpl_web_spark.core.http import HttpClient
+from erpl_web_spark.core.localframe import local_rows
 from erpl_web_spark.core.secrets import default_registry
 from erpl_web_spark.odata.client import ODataClient
 
@@ -83,4 +84,4 @@ def odata_describe(spark: SparkSession, url: str) -> DataFrame:
             for n in (model._nav_of(type_name) if type_name else [])
         ]
         row = (url, "entity_set", version, set_name, type_name, props, navs, sets)
-    return spark.createDataFrame([row], DESCRIBE_SCHEMA)
+    return local_rows(spark, [row], DESCRIBE_SCHEMA)

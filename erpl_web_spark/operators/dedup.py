@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from erpl_web_spark.core.localframe import local_rows
 from erpl_web_spark.operators._cache import track_persist
 from erpl_web_spark.operators.text import tokens_expr
 
@@ -1360,7 +1361,7 @@ def dedup_index_apply(
                 .agg(F.min("old_id").alias("dup_of"))
             )
         else:
-            index_dups = spark.createDataFrame([], f"new_id long, dup_of long")
+            index_dups = local_rows(spark, [], "new_id long, dup_of long")
 
         index_dups = index_dups.persist(StorageLevel.MEMORY_AND_DISK)
         own.append(index_dups)

@@ -33,6 +33,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from erpl_web_spark.core.localframe import local_rows
+
 MEDIA_META_TYPE = StructType(
     [
         StructField("media_type", StringType()),  # image | audio | video
@@ -582,7 +584,7 @@ def media_index_apply(
             .agg(F.min("old_id").alias("dup_of"))
         )
     else:
-        index_dups = spark.createDataFrame([], "new_id long, dup_of long")
+        index_dups = local_rows(spark, [], "new_id long, dup_of long")
     index_dups = index_dups.persist(StorageLevel.MEMORY_AND_DISK)
 
     keepers = survivors.join(

@@ -127,9 +127,7 @@ def logbucket_quantiles(
     )
     from erpl_web_spark.core.localframe import local_rows
 
-    qdf = local_rows(
-        spark, [(int(q),) for q in qs_permille], "q_permille int"
-    )
+    qdf = local_rows(spark, [(int(q),) for q in qs_permille], "q_permille int")
     # integer ceil division: ceil(q*n/1000) = (q*n + 999) div 1000
     r = F.expr("(CAST(q_permille AS BIGINT) * n + 999) div 1000")
     hit = (
@@ -264,9 +262,7 @@ def logbucket_equidepth(
     )
     from erpl_web_spark.core.localframe import local_rows
 
-    kdf = local_rows(
-        spark, [(int(k),) for k in range(1, n_buckets)], "k int"
-    )
+    kdf = local_rows(spark, [(int(k),) for k in range(1, n_buckets)], "k int")
     bounds = (
         cum.crossJoin(F.broadcast(kdf))
         .where(

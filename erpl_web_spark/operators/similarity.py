@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from erpl_web_spark.core.localframe import local_rows
+
 
 def dot_expr(a: Column, b: Column, dim: int | None = None) -> Column:
     """Fold-ordered dot product. With ``dim`` given, the fold is
@@ -565,7 +567,7 @@ def ivf_train_centroids(
     # float matches the embeddings column dtype (the ANN search path);
     # "double" preserves the trainer's exact fp64 centroids (the
     # planted-centroid oracle entry needs the full mantissa).
-    return spark.createDataFrame(center_rows, f"cell long, centroid_vec array<{vec_dtype}>")
+    return local_rows(spark, center_rows, f"cell long, centroid_vec array<{vec_dtype}>")
 
 
 def ivf_cell_profile(
@@ -1403,7 +1405,7 @@ def embedding_index_apply(
             .agg(F.min("old_id").alias("dup_of"))
         )
     else:
-        index_dups = spark.createDataFrame([], "new_id long, dup_of long")
+        index_dups = local_rows(spark, [], "new_id long, dup_of long")
     index_dups = index_dups.persist(StorageLevel.MEMORY_AND_DISK)
 
     keepers = survivors.join(

@@ -747,12 +747,8 @@ def bpe_train(
         spark.conf.set(aqe_key, aqe_before)
     from erpl_web_spark.core.localframe import local_rows
 
-    # local_rows: the merge table is driver-sized — build it as a JVM
-    # local relation instead of defaultParallelism pickle partitions
-    # whose every action forks a Python worker apiece (r15).
     return local_rows(
-        spark, merges,
-        "merge_rank int, left_sym string, right_sym string, pair_count long",
+        spark, merges, "merge_rank int, left_sym string, right_sym string, pair_count long"
     )
 
 

@@ -34,6 +34,8 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from erpl_web_spark.core.localframe import local_rows
+
 # Stage-boundary lineage truncation interval — see materialize() in
 # curate(). Measured per-stage analyzed-plan growth is up to ~7x (the
 # bigram stage references its input four times), so a window of 3
@@ -620,7 +622,7 @@ def curate(
             comp.unpersist()
 
         counts.append(("output", n))
-        report = df.sparkSession.createDataFrame(counts, "stage string, n long")
+        report = local_rows(df.sparkSession, counts, "stage string, n long")
         if not (cur.storageLevel.useMemory or cur.storageLevel.useDisk):
             # the last stage landed on a lineage barrier (checkpointed,
             # not persisted) — re-persist so the caller contract holds:

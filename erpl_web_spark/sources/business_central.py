@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from erpl_web_spark.core.http import HttpClient
+from erpl_web_spark.core.localframe import local_rows
 from erpl_web_spark.core.secrets import default_registry
 from erpl_web_spark.odata.client import ODataClient
 from erpl_web_spark.odata.datasource import ensure_registered
@@ -43,14 +44,14 @@ def bc_show_companies(spark: SparkSession, client: BusinessCentralClient) -> Dat
         raise RuntimeError(f"Business Central HTTP {resp.status}")
     items = resp.json().get("value", [])
     rows = [(i.get("id"), i.get("name"), i.get("displayName")) for i in items]
-    return spark.createDataFrame(rows, "id string, name string, display_name string")
+    return local_rows(spark, rows, "id string, name string, display_name string")
 
 
 def bc_show_entities(spark: SparkSession, client: BusinessCentralClient) -> DataFrame:
     """Entity sets from the service EDMX."""
     model = ODataClient(client.base_url + "/", client.http).get_model()
     rows = [(name, es.entity_type) for name, es in sorted(model.entity_sets.items())]
-    return spark.createDataFrame(rows, "name string, entity_type string")
+    return local_rows(spark, rows, "name string, entity_type string")
 
 
 def bc_describe(
@@ -78,7 +79,8 @@ def bc_describe(
         (p.name, p.type, bool(p.nullable), p.name in keys)
         for p in model._flattened_properties(es.entity_type)
     ]
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         rows,
         "property_name string, property_type string, nullable boolean, is_key boolean",
     )

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from erpl_web_spark.core.http import HttpClient
+from erpl_web_spark.core.localframe import local_rows
 from erpl_web_spark.core.secrets import default_registry
 from erpl_web_spark.odata.datasource import ensure_registered
 
@@ -53,7 +54,7 @@ class DatasphereClient:
 def datasphere_show_spaces(spark: SparkSession, client: DatasphereClient) -> DataFrame:
     items = client.get_values(client.catalog_url("/spaces"))
     rows = [(i.get("name"), i.get("label")) for i in items]
-    return spark.createDataFrame(rows, "name string, label string")
+    return local_rows(spark, rows, "name string, label string")
 
 
 def datasphere_show_assets(
@@ -68,8 +69,8 @@ def datasphere_show_assets(
          or bool(i.get("supportsAnalyticalQueries")))
         for i in items
     ]
-    return spark.createDataFrame(
-        rows, "name string, space_name string, relational boolean, analytical boolean"
+    return local_rows(
+        spark, rows, "name string, space_name string, relational boolean, analytical boolean"
     )
 
 
@@ -84,7 +85,7 @@ def datasphere_describe_space(
     url = client.catalog_url("/spaces") + f"?$filter=name eq '{space_id}'"
     items = client.get_values(url)
     rows = [(i.get("name"), i.get("label")) for i in items]
-    return spark.createDataFrame(rows, "name string, label string")
+    return local_rows(spark, rows, "name string, label string")
 
 
 _ASSET_DESCRIBE_SCHEMA = (
@@ -141,7 +142,7 @@ def datasphere_describe_asset(
         )
         for i in items
     ]
-    return spark.createDataFrame(rows, _ASSET_DESCRIBE_SCHEMA)
+    return local_rows(spark, rows, _ASSET_DESCRIBE_SCHEMA)
 
 
 def datasphere_read_relational(

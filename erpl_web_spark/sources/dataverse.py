@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from erpl_web_spark.core.http import HttpClient
+from erpl_web_spark.core.localframe import local_rows
 from erpl_web_spark.core.secrets import default_registry
 from erpl_web_spark.odata.client import ODataClient
 from erpl_web_spark.odata.datasource import ensure_registered
@@ -27,7 +28,7 @@ class DataverseClient:
 def crm_show_entities(spark: SparkSession, client: DataverseClient) -> DataFrame:
     model = ODataClient(client.base_url + "/", client.http).get_model()
     rows = [(name, es.entity_type) for name, es in sorted(model.entity_sets.items())]
-    return spark.createDataFrame(rows, "name string, entity_type string")
+    return local_rows(spark, rows, "name string, entity_type string")
 
 
 def crm_describe(spark: SparkSession, client: DataverseClient, entity: str) -> DataFrame:

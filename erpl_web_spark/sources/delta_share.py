@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from erpl_web_spark.core.http import HttpClient
+from erpl_web_spark.core.localframe import local_rows
 
 
 @dataclass
@@ -111,7 +112,7 @@ def delta_share_scan(
     client = DeltaShareClient(prof)
     table_schema, files = client.query_table(share, schema, table)
     if not files:
-        return spark.createDataFrame([], table_schema)
+        return local_rows(spark, [], table_schema)
     return spark.read.schema(table_schema).parquet(*files)
 
 
@@ -124,7 +125,7 @@ def delta_share_show(spark: SparkSession, profile: str | DeltaShareProfile) -> D
         for sc in client.list_schemas(sh):
             for t in client.list_tables(sh, sc):
                 rows.append((sh, sc, t))
-    return spark.createDataFrame(rows, "share string, schema string, table string")
+    return local_rows(spark, rows, "share string, schema string, table string")
 
 
 def _prof(profile: str | DeltaShareProfile) -> DeltaShareProfile:
@@ -136,7 +137,8 @@ def delta_share_show_shares(
 ) -> DataFrame:
     """Reference ``delta_share_show_shares(profile)`` parity
     (delta_share_client.cpp:283-332): one row per share name."""
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(s,) for s in DeltaShareClient(_prof(profile)).list_shares()],
         "share_name string",
     )
@@ -146,7 +148,8 @@ def delta_share_show_schemas(
     spark: SparkSession, profile: str | DeltaShareProfile, share: str
 ) -> DataFrame:
     """Reference ``delta_share_show_schemas(profile, share)`` parity."""
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(share, s) for s in DeltaShareClient(_prof(profile)).list_schemas(share)],
         "share_name string, schema_name string",
     )
@@ -156,7 +159,8 @@ def delta_share_show_tables(
     spark: SparkSession, profile: str | DeltaShareProfile, share: str, schema: str
 ) -> DataFrame:
     """Reference ``delta_share_show_tables(profile, share, schema)`` parity."""
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(share, schema, t)
          for t in DeltaShareClient(_prof(profile)).list_tables(share, schema)],
         "share_name string, schema_name string, table_name string",

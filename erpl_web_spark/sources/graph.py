@@ -37,6 +37,7 @@ reference); large fan-out writes go through ``http_call``
 
 from __future__ import annotations
 
+import datetime
 import json
 from collections.abc import Iterable
 from typing import TYPE_CHECKING, Any, NamedTuple
@@ -686,6 +687,19 @@ def graph_excel_tables(spark: SparkSession, client: GraphClient, file_id: str) -
 
 
 _DATE_FORMAT_HINTS = ("yy", "mm", "dd", "h:", "hh")
+_EXCEL_EPOCH = datetime.datetime(1899, 12, 30)
+
+
+def _excel_serial(v):
+    """A numeric cell of a date-formatted column is an Excel serial date
+    (days since 1899-12-30, the time of day as the fraction): as naive
+    ISO-8601 for the timestamp decoder. Other cells pass unchanged."""
+    if isinstance(v, (int, float)) and not isinstance(v, bool):
+        try:
+            return (_EXCEL_EPOCH + datetime.timedelta(days=v)).isoformat()
+        except (OverflowError, ValueError):
+            return None
+    return v
 
 
 def _excel_grid_to_df(spark: SparkSession, doc: dict) -> DataFrame:
@@ -716,6 +730,9 @@ def _excel_grid_to_df(spark: SparkSession, doc: dict) -> DataFrame:
         [StructField(h or f"col{i}", col_type(i), True) for i, h in enumerate(headers)]
     )
     cells = [[r[ci] if ci < len(r) else None for r in values[1:]] for ci in range(len(headers))]
+    for ci, field in enumerate(schema.fields):
+        if isinstance(field.dataType, TimestampType):
+            cells[ci] = [_excel_serial(v) for v in cells[ci]]
     return local_batches(spark, [ColumnDecoders(schema).columns_batch(cells)], schema)
 
 

@@ -28,6 +28,7 @@ from pyspark.sql.types import (
 )
 
 from erpl_web_spark.core.http import HttpClient, RetryConfig
+from erpl_web_spark.core.localframe import local_rows
 from erpl_web_spark.core.secrets import default_registry
 
 HTTP_RESPONSE_SCHEMA = StructType(
@@ -68,7 +69,7 @@ def _single(spark: SparkSession, method: str, url: str, headers=None, body=None,
         auth_headers=default_registry.auth_headers_for_url(url),
     )
     row = _do_request(client, method, url, headers, body, content_type)
-    return spark.createDataFrame([row], HTTP_RESPONSE_SCHEMA)
+    return local_rows(spark, [row], HTTP_RESPONSE_SCHEMA)
 
 
 def http_get(spark, url, headers=None, timeout: float = 30.0) -> DataFrame:

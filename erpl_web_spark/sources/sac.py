@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from erpl_web_spark.core.localframe import local_rows
 from erpl_web_spark.odata.datasource import ensure_registered
 
 
@@ -20,22 +21,22 @@ def sac_base_url(tenant: str, data_center: str = "eu10") -> str:
 
 def sac_show_models(spark: SparkSession, base_url: str | None = None) -> DataFrame:
     """Stub returning an empty result (reference parity: README.md:560)."""
-    return spark.createDataFrame([], "model_id string, name string, description string")
+    return local_rows(spark, [], "model_id string, name string, description string")
 
 
 def sac_show_stories(spark: SparkSession, base_url: str | None = None) -> DataFrame:
     """Stub returning an empty result (reference parity)."""
-    return spark.createDataFrame([], "story_id string, name string, description string")
+    return local_rows(spark, [], "story_id string, name string, description string")
 
 
 def sac_get_model_info(spark: SparkSession, model_id: str) -> DataFrame:
     """Stub returning an empty result (reference parity)."""
-    return spark.createDataFrame([], "model_id string, info string")
+    return local_rows(spark, [], "model_id string, info string")
 
 
 def sac_get_story_info(spark: SparkSession, story_id: str) -> DataFrame:
     """Stub returning an empty result (reference parity)."""
-    return spark.createDataFrame([], "story_id string, info string")
+    return local_rows(spark, [], "story_id string, info string")
 
 
 def _odata_read(spark: SparkSession, url: str, top=None, skip=None, select=None) -> DataFrame:

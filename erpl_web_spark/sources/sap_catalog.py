@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import BooleanType, StringType, StructField, StructType
 
 from erpl_web_spark.core.http import HttpClient
+from erpl_web_spark.core.localframe import local_rows
 from erpl_web_spark.core.secrets import default_registry
 
 V2_CATALOG_PATH = "/sap/opu/odata/iwfnd/catalogservice;v=2/ServiceCollection"
@@ -111,7 +112,7 @@ def odata_sap_show(
             errors.append(str(exc))
     if not rows and len(errors) == 2:
         raise RuntimeError("both SAP catalog endpoints failed: " + "; ".join(errors))
-    return spark.createDataFrame(rows, SAP_SHOW_SCHEMA)
+    return local_rows(spark, rows, SAP_SHOW_SCHEMA)
 
 
 def odp_odata_show(
@@ -142,4 +143,4 @@ def odp_odata_show(
             rows.append(
                 (service_id, service_desc, es_id, es.get("Description") or "", es_url, True)
             )
-    return spark.createDataFrame(rows, ODP_SHOW_SCHEMA)
+    return local_rows(spark, rows, ODP_SHOW_SCHEMA)

@@ -172,7 +172,7 @@ def load(spark: SparkSession, sf_dir: str, table: str, spread: bool = False) -> 
 
 
 # Re-export: suite entries build their collect-then-rebuild results
-# through this (see core/localframe.py for the why and the guards).
+# through this (see core/localframe.py for the why).
 from erpl_web_spark.core.localframe import local_rows  # noqa: E402, F401
 
 

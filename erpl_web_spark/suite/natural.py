@@ -755,9 +755,7 @@ def pipeline_hll_index_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return local_rows(spark, 
-        rows, "g long, n_exact bigint, n_zero_regs long, hll_est_r double"
-    )
+    return local_rows(spark, rows, "g long, n_exact bigint, n_zero_regs long, hll_est_r double")
 
 
 @register(

@@ -552,9 +552,7 @@ def pipeline_url_index_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = read_kept_batches(spark, path).collect()
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return local_rows(spark, 
-        rows, "doc_id long, url string, canonical_url string"
-    )
+    return local_rows(spark, rows, "doc_id long, url string, canonical_url string")
 
 
 @register(
@@ -636,9 +634,7 @@ def pipeline_url_index_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = read_kept_batches(spark, path).collect()
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return local_rows(spark, 
-        rows, "doc_id long, url string, canonical_url string"
-    )
+    return local_rows(spark, rows, "doc_id long, url string, canonical_url string")
 
 
 @register("dedup_simhash", oracle=None)
@@ -793,9 +789,7 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     vacuity audit)."""
     docs = load(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
     base = docs.agg((F.max("doc_id") + F.lit(1)).alias("_b"))
-    bad = local_rows(spark, 
-        [(0, "87 55 13"), (1, "a b"), (2, "!! ?? ,,")], "off long, t string"
-    )
+    bad = local_rows(spark, [(0, "87 55 13"), (1, "a b"), (2, "!! ?? ,,")], "off long, t string")
     planted = bad.crossJoin(F.broadcast(base)).select(
         (F.col("off") + F.col("_b")).alias("doc_id"), F.col("t").alias("text")
     )
@@ -2879,9 +2873,7 @@ def pipeline_curate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = docs.agg((F.max("doc_id") + F.lit(1)).alias("_b"))
     bad = (
-        local_rows(spark, 
-            [(0, "87 55 13"), (1, "a b"), (2, "!! ?? ,,")], "off long, t string"
-        )
+        local_rows(spark, [(0, "87 55 13"), (1, "a b"), (2, "!! ?? ,,")], "off long, t string")
         .crossJoin(F.broadcast(base))
         .select((F.col("_b") + F.col("off")).alias("doc_id"), F.col("t").alias("text"))
     )
@@ -3191,7 +3183,7 @@ def quality_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
-    dirty = local_rows(spark, 
+    dirty = local_rows(spark,
         [
             (-1, None, "O", 10.0),
             (-2, 999999991, "O", 10.0),
@@ -3331,7 +3323,7 @@ def quality_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return local_rows(spark, 
+    return local_rows(spark,
         rows,
         "curr_batch long, metric string, prev_value double, curr_value double, "
         "delta_r double, mode string, max_delta double, passed int",
@@ -3424,7 +3416,7 @@ def quality_drift_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return local_rows(spark, 
+    return local_rows(spark,
         rows,
         "curr_batch long, metric string, prev_value double, curr_value double, "
         "delta_r double, mode string, max_delta double, passed int",
@@ -3524,7 +3516,7 @@ def quality_drift_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return local_rows(spark, 
+    return local_rows(spark,
         rows,
         "curr_batch long, metric string, prev_value double, curr_value double, "
         "delta_r double, mode string, max_delta double, passed int",
@@ -3981,9 +3973,7 @@ def text_countmin_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("exact_n"), F.asc("tok"))
         .limit(10)
         .unionAll(
-            local_rows(spark, 
-                [("__cms_unseen__", 0)], "tok string, exact_n bigint"
-            )
+            local_rows(spark, [("__cms_unseen__", 0)], "tok string, exact_n bigint")
         )
     )
     sketch = countmin_sketch(docs, depth=3, width=16)
@@ -4029,9 +4019,7 @@ def pipeline_cms_index_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("exact_n"), F.asc("tok"))
         .limit(10)
         .unionAll(
-            local_rows(spark, 
-                [("__cms_unseen__", 0)], "tok string, exact_n bigint"
-            )
+            local_rows(spark, [("__cms_unseen__", 0)], "tok string, exact_n bigint")
         )
     )
     src = tempfile.mkdtemp(prefix="cmsidx-suite-")
@@ -4055,9 +4043,7 @@ def pipeline_cms_index_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(dest, ignore_errors=True)
-    return local_rows(spark, 
-        rows, "tok string, exact_n bigint, est_n bigint, overcount bigint"
-    )
+    return local_rows(spark, rows, "tok string, exact_n bigint, est_n bigint, overcount bigint")
 
 
 # shared by agg_quantile_sketch and pipeline_qsketch_index_batches (the
@@ -4245,7 +4231,7 @@ def pipeline_qsketch_index_batches(spark: SparkSession, sf_dir: str) -> DataFram
     finally:
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(dest, ignore_errors=True)
-    return local_rows(spark, 
+    return local_rows(spark,
         rows,
         "q_permille int, rank_r bigint, est_edge bigint, "
         "bucket_width bigint, n_below bigint, n_through bigint",
@@ -5273,7 +5259,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "text"
     )
     base = docs.agg((F.max("doc_id") + F.lit(1)).alias("_b"))
-    bad = local_rows(spark, 
+    bad = local_rows(spark,
         [(i, f"{_KB_BASE} {t}") for i, t in enumerate(_KB_TAILS)],
         "off long, t string",
     )
@@ -6473,7 +6459,7 @@ def text_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     corpus = load(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
     base = corpus.agg((F.max("doc_id") + F.lit(1)).alias("_b"))
-    bad = local_rows(spark, 
+    bad = local_rows(spark,
         [
             (0, "## ## ## ## ##"),
             (1, "- a\n- b\n- c\n- d"),
@@ -6656,9 +6642,7 @@ def pipeline_line_index_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = read_clean_batches(spark, path).collect()
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return local_rows(spark, 
-        rows, "doc_id long, n_lines int, n_lines_kept int, clean_text string"
-    )
+    return local_rows(spark, rows, "doc_id long, n_lines int, n_lines_kept int, clean_text string")
 
 
 @register(
@@ -6742,9 +6726,7 @@ def pipeline_line_index_repave(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = read_clean_batches(spark, path).collect()
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return local_rows(spark, 
-        rows, "doc_id long, n_lines int, n_lines_kept int, clean_text string"
-    )
+    return local_rows(spark, rows, "doc_id long, n_lines int, n_lines_kept int, clean_text string")
 
 
 @register(

@@ -331,6 +331,13 @@ EXCEL_STAMPS_DOC = {
     "numberFormat": [["General", "General"], ["General", "yyyy-mm-dd hh:mm"]],
 }
 
+# The same instant as an Excel serial date: days since 1899-12-30.
+EXCEL_SERIALS_DOC = {
+    "values": [["Name", "When"], ["tz", 45292.4375]],
+    "valueTypes": [["String", "String"], ["String", "Double"]],
+    "numberFormat": [["General", "General"], ["General", "yyyy-mm-dd hh:mm"]],
+}
+
 EXCEL_RANGE_DOC = {
     "values": [
         ["Name", "Qty", "Price", "Done", "When"],
@@ -390,6 +397,10 @@ class FixtureState:
 def _make_handler(state: FixtureState):
     class Handler(BaseHTTPRequestHandler):
         protocol_version = "HTTP/1.1"
+        # Headers and body go out as separate small writes on a kept-alive
+        # connection: with Nagle on, each response waits for the client's
+        # delayed ACK (~40 ms).
+        disable_nagle_algorithm = True
 
         def log_message(self, *args):  # silence
             pass
@@ -682,6 +693,8 @@ def _make_handler(state: FixtureState):
                 return self._json(200, EXCEL_RANGE_DOC)
             if route == "/graph/me/drive/items/f1/workbook/worksheets/Stamps/usedRange":
                 return self._json(200, EXCEL_STAMPS_DOC)
+            if route == "/graph/me/drive/items/f1/workbook/worksheets/Serials/usedRange":
+                return self._json(200, EXCEL_SERIALS_DOC)
             if route == "/graph/me/drive/items/f1/workbook/tables/T1/rows":
                 return self._json(200, {"value": [
                     {"index": i, "values": [row]}

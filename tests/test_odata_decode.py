@@ -357,9 +357,9 @@ def test_one_page_walker_per_web_api_family():
 
 def test_one_decode_path_per_web_api_read():
     """Cells decode only inside ``odata/json_decode.py`` (no
-    ``decode_value(`` call elsewhere in the package), and the Graph and
-    ODP sources build no frame themselves (no ``createDataFrame(``):
-    driver-side reads go through ``core.localframe``."""
+    ``decode_value(`` call elsewhere in the package), and no module but
+    ``core/localframe.py`` builds a frame itself (no ``createDataFrame(``):
+    every driver-side frame goes through ``core.localframe``."""
     import ast
     from pathlib import Path
 
@@ -375,6 +375,6 @@ def test_one_decode_path_per_web_api_read():
             name = getattr(node.func, "id", None) or getattr(node.func, "attr", None)
             if name == "decode_value" and rel != "odata/json_decode.py":
                 offenders.append(f"{rel}:{node.lineno} calls decode_value(")
-            if name == "createDataFrame" and rel in ("sources/graph.py", "sources/odp.py"):
+            if name == "createDataFrame" and rel != "core/localframe.py":
                 offenders.append(f"{rel}:{node.lineno} calls createDataFrame(")
     assert not offenders, offenders

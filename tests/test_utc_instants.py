@@ -3,14 +3,19 @@ time zone.
 
 The fixture server serves 2024-01-01T10:30:00Z from REST, GraphQL, a
 SharePoint list (plain and ``/delta``, batch and stream), ODP (batch and
-stream) and an Excel date column. Executor-side readers are called
-in-process and their record batches checked in int64 microseconds;
-driver-side frames are checked as ``cast(... as string)`` under session
-time zone UTC. A reader that hands naive datetimes to PySpark reads them
-as process-local time and shifts the instant by the zone's offset.
+stream) and an Excel date column (ISO string and serial day number).
+Executor-side readers are called in-process and their record batches
+checked in int64 microseconds; driver-side frames are checked as
+``cast(... as string)`` under session time zone UTC. A reader that hands
+naive datetimes to PySpark reads them as process-local time and shifts
+the instant by the zone's offset. ``core.localframe.local_rows`` keeps
+the classic ``createDataFrame`` rule for driver rows: there a naive
+datetime in a ``timestamp`` field IS process-local wall time.
 """
 
 from __future__ import annotations
+
+import datetime
 
 import pytest
 
@@ -149,6 +154,36 @@ def test_excel_date_column_frame(tz, spark, fixture_server, zone):
     df = graph_excel_range(spark, _gclient(fixture_server), "f1", "Stamps")
     assert isinstance(df.schema["When"].dataType, TimestampType)
     assert _as_utc_string(spark, df, "When") == [WANT_STR]
+
+
+@pytest.mark.parametrize("zone", ZONES)
+def test_excel_serial_date_column_frame(tz, spark, fixture_server, zone):
+    """Graph grids carry dates as Excel serial day numbers (45292.4375),
+    not epoch seconds."""
+    from erpl_web_spark.sources.graph import graph_excel_range
+
+    tz(zone)
+    df = graph_excel_range(spark, _gclient(fixture_server), "f1", "Serials")
+    assert isinstance(df.schema["When"].dataType, TimestampType)
+    assert _as_utc_string(spark, df, "When") == [WANT_STR]
+
+
+@pytest.mark.parametrize("zone", ZONES)
+@pytest.mark.parametrize("shape", ["scalar", "array"])
+def test_local_rows_naive_ltz_is_local_wall_time(tz, spark, zone, shape):
+    """A naive datetime in a ``timestamp`` (LTZ) field is driver-local wall
+    time in ``local_rows``, as in ``spark.createDataFrame(rows, schema)``."""
+    from erpl_web_spark.core.localframe import local_rows
+
+    tz(zone)
+    naive = datetime.datetime(2020, 1, 1, 12, 30, 15, 123456)
+    rows, schema = {
+        "scalar": ([(1, naive)], "a int, ts timestamp"),
+        "array": ([(1, [naive, None])], "a int, ts array<timestamp>"),
+    }[shape]
+    want = spark.createDataFrame(rows, schema).collect()
+    assert want == [(1, rows[0][1])]
+    assert local_rows(spark, rows, schema).collect() == want
 
 
 def test_driver_frames_plan_as_local_table_scan(spark, fixture_server, tmp_path):
