@@ -14,7 +14,8 @@ Shapes reproduced from the reference:
   numberFormat (date formats -> TIMESTAMP)
   (graph_excel_functions.cpp:455-515, 70);
 - writers are per-row API calls (B1/B2) or batched rows/add with a
-  workbook session (B4, graph_excel_client.cpp:103-111).
+  workbook session (B4, graph_excel_client.cpp:103-111); DataFrame bulk
+  writers run through ``sources.bulk`` and send through ``graph_send``.
 
 Every collection read is one row of ``GRAPH_ENTITIES``: the route its
 items come from and its ``(out_name, type, JSON path)`` fields, a path
@@ -31,14 +32,15 @@ Discovery/catalog results are small -> driver-built DataFrames, each one
 Arrow table handed to ``core.localframe.local_batches`` (a JVM local
 relation, no pickled-RDD scan). Bulk item reads use Graph's sequential
 opaque skiptoken, so the page chain is protocol-bound (same as the
-reference); large fan-out writes go through ``http_call``
-(executor-parallel).
+reference).
 """
 
 from __future__ import annotations
 
 import datetime
 import json
+import os
+import time
 from collections.abc import Iterable
 from typing import TYPE_CHECKING, Any, NamedTuple
 
@@ -53,11 +55,13 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from erpl_web_spark.core import jsonwire
 from erpl_web_spark.core.http import HttpClient
 from erpl_web_spark.core.localframe import local_batches
 from erpl_web_spark.core.secrets import default_registry
 from erpl_web_spark.odata.client import HttpStatusError
 from erpl_web_spark.odata.json_decode import ColumnDecoders
+from erpl_web_spark.sources.bulk import cut, fan_out, write_partitions
 
 if TYPE_CHECKING:
     import pyarrow
@@ -72,6 +76,7 @@ class GraphClient:
         self.http = http or HttpClient(
             auth_headers=default_registry.auth_headers_for_url(self.base_url)
         )
+        self.sent = 0  # ``request`` calls made, one HTTP exchange each
 
     def get_json(self, path: str) -> Any:
         url = self.base_url + path
@@ -123,9 +128,10 @@ class GraphClient:
 
     def request(self, method: str, path: str, body: dict | None = None) -> Any:
         url = self.base_url + path
+        self.sent += 1
         resp = self.http.request(
             method, url,
-            body=json.dumps(body) if body is not None else None,
+            body=jsonwire.dumps(body) if body is not None else None,
             content_type="application/json" if body is not None else None,
         )
         if resp.status >= 400:
@@ -149,66 +155,42 @@ def graph_batch_execute(
     to every Graph mutation surface).
 
     ``requests`` are dicts with ``method``, ``url`` (Graph-relative) and
-    optional ``body``. Envelopes are cut by a dual budget: at most
-    ``max_requests`` subrequests (Graph caps JSON batching at 20) AND at
-    most ``max_bytes`` of serialized subrequest JSON — whichever fills
-    first — so many small writes coalesce while a few huge ones don't
-    blow the service's body limit. Returns one response dict
-    ``{"id", "status", "body"}`` per input, in input order.
+    optional ``body``. Envelopes are cut by a dual budget (``bulk.cut``):
+    at most ``max_requests`` subrequests (Graph caps JSON batching at 20)
+    and at most ``max_bytes`` of subrequests encoded as they are sent,
+    so many small writes coalesce while a few huge ones don't blow the
+    service's body limit. Returns one response dict ``{"id", "status",
+    "body"}`` per input, in input order.
 
     Throttling: Graph applies 429/503 PER SUBREQUEST inside a 200
     envelope (the transport-level retry in core.http never sees them),
-    so throttled subrequests are collected and re-issued in follow-up
-    envelopes — honoring the largest subresponse ``Retry-After`` (capped
-    at 30 s) — up to ``throttle_retries`` rounds. Any other failed
-    subresponse raises immediately (id + status named) so partial
-    failures are attributable, never silent.
+    so throttled subrequests are sent again in follow-up envelopes after
+    the largest subresponse ``Retry-After`` (capped at 30 s), up to 3
+    rounds. Any other failed subresponse raises at once, id and status
+    named, so partial failures are attributable, never silent.
     """
-    import time as _time
-
+    subrequests = [
+        {"id": str(i), "method": r["method"], "url": r["url"]}
+        | ({} if r.get("body") is None
+           else {"body": r["body"], "headers": {"Content-Type": "application/json"}})
+        for i, r in enumerate(requests)
+    ]
+    sizes = [len(jsonwire.dumps(sub).encode()) for sub in subrequests]
     results: list[dict | None] = [None] * len(requests)
-
-    def run_round(todo: list[int]) -> tuple[list[int], float]:
-        """Send ``todo`` (input indices) in budget-cut envelopes; fill
-        ``results``; return (throttled indices, max retry-after sec)."""
-        throttled: list[int] = []
-        retry_after = 0.0
-        chunk: list[tuple[int, int]] = []  # (index, size)
-        chunk_bytes = 0
-
-        def flush():
-            nonlocal chunk, chunk_bytes, retry_after
-            if not chunk:
-                return
-            envelope = {
-                "requests": [
-                    {
-                        "id": str(i),
-                        "method": requests[i]["method"],
-                        "url": requests[i]["url"],
-                        **(
-                            {"body": requests[i]["body"],
-                             "headers": {"Content-Type": "application/json"}}
-                            if requests[i].get("body") is not None
-                            else {}
-                        ),
-                    }
-                    for i, _ in chunk
-                ]
-            }
-            doc = client.request("POST", "/$batch", envelope) or {}
-            got = {str(resp.get("id")): resp for resp in doc.get("responses", [])}
-            for i, _ in chunk:
+    todo, rounds = list(range(len(requests))), 3
+    for attempt in range(rounds + 1):
+        throttled, retry_after = [], 0.0
+        for chunk in cut(todo, max_requests, sizes.__getitem__, max_bytes):
+            doc = client.request("POST", "/$batch", {"requests": [subrequests[i] for i in chunk]})
+            got = {str(resp.get("id")): resp for resp in (doc or {}).get("responses", [])}
+            for i in chunk:
                 resp = got.get(str(i))
                 if resp is None:
                     raise RuntimeError(f"Graph $batch dropped response id={i}")
                 status = int(resp.get("status", 0))
                 if status in (429, 503):
                     throttled.append(i)
-                    headers = {
-                        str(k).lower(): v
-                        for k, v in (resp.get("headers") or {}).items()
-                    }
+                    headers = {str(k).lower(): v for k, v in (resp.get("headers") or {}).items()}
                     try:
                         retry_after = max(retry_after, float(headers.get("retry-after", 0)))
                     except (TypeError, ValueError):
@@ -220,30 +202,38 @@ def graph_batch_execute(
                     )
                 else:
                     results[i] = resp
-            chunk, chunk_bytes = [], 0
-
-        for i in todo:
-            size = len(json.dumps(requests[i], default=str))
-            if chunk and (len(chunk) >= max_requests or chunk_bytes + size > max_bytes):
-                flush()
-            chunk.append((i, size))
-            chunk_bytes += size
-        flush()
-        return throttled, retry_after
-
-    todo = list(range(len(requests)))
-    throttle_retries = 3
-    for attempt in range(throttle_retries + 1):
-        todo, retry_after = run_round(todo)
-        if not todo:
+        if not (todo := throttled):
             break
-        if attempt == throttle_retries:
+        if attempt == rounds:
             raise RuntimeError(
                 f"Graph $batch: {len(todo)} subrequests still throttled (429/503) "
-                f"after {throttle_retries} retry rounds"
+                f"after {rounds} retry rounds"
             )
-        _time.sleep(min(retry_after, 30.0))
+        time.sleep(min(retry_after, 30.0))
     return results  # type: ignore[return-value]
+
+
+def graph_send(
+    client: GraphClient, requests: list[dict], batch_size: int,
+    max_bytes: int = GRAPH_BATCH_MAX_BYTES,
+) -> list[Any]:
+    """The bulk writers' send: one direct request each at ``batch_size``
+    1 (the reference's per-row calls), else ``graph_batch_execute``.
+    Returns the response bodies in input order."""
+    if batch_size <= 1:
+        return [client.request(r["method"], r["url"], r.get("body")) for r in requests]
+    return [r.get("body") for r in graph_batch_execute(client, requests, batch_size, max_bytes)]
+
+
+def _graph_write(df, client_factory, request, batch_size, max_bytes, what) -> int:
+    """A bulk writer sending ``request(row)`` per row through ``graph_send``."""
+
+    def send(rows: list[dict]) -> int:
+        client = client_factory()
+        graph_send(client, [request(r) for r in rows], batch_size, max_bytes)
+        return client.sent
+
+    return write_partitions(df, send, what)
 
 
 class GraphEntity(NamedTuple):
@@ -553,42 +543,22 @@ def sharepoint_list_write(
     client_factory,
     site_id: str,
     list_id: str,
-    batch_log: bool = False,
     batch_size: int = GRAPH_BATCH_MAX_REQUESTS,
     batch_max_bytes: int = GRAPH_BATCH_MAX_BYTES,
 ) -> int:
     """Bulk copy into a SharePoint list (B3 COPY TO analogue), executed
-    on the executors via foreachPartition. Creates are coalesced into
-    ``$batch`` envelopes (``graph_batch_execute``) under a dual budget
-    of ``batch_size`` requests / ``batch_max_bytes`` serialized bytes
-    per HTTP call; ``batch_size=1`` degrades to the reference's per-row
-    POSTs (B3). Returns the number of rows written."""
-    cols = df.columns
-    written = df.sparkSession.sparkContext.accumulator(0)
-
-    def write_partition(rows):
-        client = client_factory()
-        reqs = [
-            {
-                "method": "POST",
-                "url": f"/sites/{site_id}/lists/{list_id}/items",
-                "body": {"fields": {c: r[c] for c in cols if r[c] is not None}},
-            }
-            for r in rows
-        ]
-        if not reqs:
-            return
-        if batch_size <= 1:
-            for r in reqs:
-                client.request(r["method"], r["url"], r["body"])
-        else:
-            graph_batch_execute(
-                client, reqs, max_requests=batch_size, max_bytes=batch_max_bytes
-            )
-        written.add(len(reqs))
-
-    df.foreachPartition(write_partition)
-    return written.value
+    on the executors. Creates are coalesced into ``$batch`` envelopes
+    under a dual budget of ``batch_size`` requests / ``batch_max_bytes``
+    encoded bytes per HTTP call; ``batch_size=1`` degrades to the
+    reference's per-row POSTs (B3). NULL cells are left out of the item.
+    Returns the number of rows written."""
+    url = f"/sites/{site_id}/lists/{list_id}/items"
+    return _graph_write(
+        df, client_factory,
+        lambda r: {"method": "POST", "url": url,
+                   "body": {"fields": {c: v for c, v in r.items() if v is not None}}},
+        batch_size, batch_max_bytes, "sharepoint_list_write",
+    )
 
 
 def sharepoint_list_update(
@@ -599,40 +569,25 @@ def sharepoint_list_update(
     id_col: str = "item_id",
     batch_size: int = GRAPH_BATCH_MAX_REQUESTS,
     batch_max_bytes: int = GRAPH_BATCH_MAX_BYTES,
-) -> None:
+) -> int:
     """Bulk field updates against a SharePoint list (B2 UPDATE as a
     distributed write): one PATCH per row, coalesced into ``$batch``
     envelopes exactly like ``sharepoint_list_write``; ``batch_size=1``
     degrades to the reference's per-item PATCH
-    (sharepoint_functions.cpp update path).
+    (sharepoint_functions.cpp update path). Returns the number of rows
+    written.
 
     Unlike create, a None value is SENT as an explicit JSON null —
     PATCH semantics distinguish "clear this field" from "leave it
     alone" (omit the column from the DataFrame to leave it alone);
     silently dropping Nones would make null cells unclearable."""
-    field_cols = [c for c in df.columns if c != id_col]
-
-    def update_partition(rows):
-        client = client_factory()
-        reqs = [
-            {
-                "method": "PATCH",
-                "url": f"/sites/{site_id}/lists/{list_id}/items/{r[id_col]}/fields",
-                "body": {c: r[c] for c in field_cols},
-            }
-            for r in rows
-        ]
-        if not reqs:
-            return
-        if batch_size <= 1:
-            for r in reqs:
-                client.request(r["method"], r["url"], r["body"])
-        else:
-            graph_batch_execute(
-                client, reqs, max_requests=batch_size, max_bytes=batch_max_bytes
-            )
-
-    df.foreachPartition(update_partition)
+    url = f"/sites/{site_id}/lists/{list_id}/items/{{}}/fields"
+    return _graph_write(
+        df, client_factory,
+        lambda r: {"method": "PATCH", "url": url.format(r[id_col]),
+                   "body": {c: v for c, v in r.items() if c != id_col}},
+        batch_size, batch_max_bytes, "sharepoint_list_update",
+    )
 
 
 def sharepoint_list_delete(
@@ -642,29 +597,17 @@ def sharepoint_list_delete(
     list_id: str,
     id_col: str = "item_id",
     batch_size: int = GRAPH_BATCH_MAX_REQUESTS,
-) -> None:
+) -> int:
     """Bulk deletes against a SharePoint list (B2 DELETE as a
     distributed write): one DELETE per id, coalesced into ``$batch``
-    envelopes; ``batch_size=1`` degrades to per-item DELETEs."""
-
-    def delete_partition(rows):
-        client = client_factory()
-        reqs = [
-            {
-                "method": "DELETE",
-                "url": f"/sites/{site_id}/lists/{list_id}/items/{r[id_col]}",
-            }
-            for r in rows
-        ]
-        if not reqs:
-            return
-        if batch_size <= 1:
-            for r in reqs:
-                client.request(r["method"], r["url"], None)
-        else:
-            graph_batch_execute(client, reqs, max_requests=batch_size)
-
-    df.foreachPartition(delete_partition)
+    envelopes; ``batch_size=1`` degrades to per-item DELETEs. Returns
+    the number of rows written."""
+    url = f"/sites/{site_id}/lists/{list_id}/items/{{}}"
+    return _graph_write(
+        df.select(id_col), client_factory,
+        lambda r: {"method": "DELETE", "url": url.format(r[id_col])},
+        batch_size, GRAPH_BATCH_MAX_BYTES, "sharepoint_list_delete",
+    )
 
 
 # -- Excel over Graph (A19, B4-B6) -----------------------------------------
@@ -764,8 +707,7 @@ def excel_table_append(
     session_id = (sess or {}).get("id", "")
     n = 0
     try:
-        for i in range(0, len(rows), batch_size):
-            batch = rows[i:i + batch_size]
+        for batch in cut(rows, batch_size):
             client.request(
                 "POST",
                 f"/me/drive/items/{file_id}/workbook/tables/{table}/rows/add",
@@ -811,18 +753,17 @@ def graph_excel_delete_rows(
 
 
 def excel_table_write(df: DataFrame, client_factory, file_id: str, table: str) -> int:
-    """``df.write``-style bulk append: collect per partition on executors,
-    batch rows/add calls. Returns the number of rows written."""
-    written = df.sparkSession.sparkContext.accumulator(0)
+    """``df.write``-style bulk append: each partition's rows go through
+    ``excel_table_append`` on the executors (one workbook session per
+    partition). Returns the number of rows written."""
 
-    def write_partition(rows):
+    def send(rows: list[dict]) -> int:
         client = client_factory()
-        buf = [list(r) for r in rows]
-        if buf:
-            written.add(excel_table_append(client, file_id, table, buf))
+        excel_table_append(client, file_id, table, [list(r.values()) for r in rows])
+        return client.sent
 
-    df.foreachPartition(write_partition)
-    return written.value
+    # positional column names: a repeated name must not drop its cells
+    return write_partitions(df.toDF(*map(str, range(len(df.columns)))), send, "excel_table_write")
 
 
 # -- Teams (A20) ------------------------------------------------------------
@@ -924,34 +865,26 @@ def planner_create_tasks(
     failures are attributable, not silent. ``client_factory`` must close
     over serializable config only.
     """
-    import pandas as pd
 
-    spark_cols = [title_col] + ([bucket_col] if bucket_col else [])
-    src = df.select(*spark_cols)
-
-    def create(batches):
+    def start():
         client = client_factory()
-        for pdf in batches:
-            reqs = []
-            for _, row in pdf.iterrows():
-                body: dict = {"planId": plan_id, "title": str(row[title_col])}
-                if bucket_col:
-                    body["bucketId"] = str(row[bucket_col])
-                reqs.append({"method": "POST", "url": "/planner/tasks", "body": body})
-            if batch_size <= 1:
-                docs = [client.request(r["method"], r["url"], r["body"]) for r in reqs]
-            else:
-                docs = [
-                    resp.get("body") or {}
-                    for resp in graph_batch_execute(client, reqs, max_requests=batch_size)
-                ]
-            ids = [d.get("id", "") for d in docs]
-            urls = [f"{client.base_url}/planner/tasks/{i}" for i in ids]
-            out = pd.DataFrame({"title": pdf[title_col].astype(str),
-                                "task_id": ids, "task_url": urls})
-            yield out
 
-    return src.mapInPandas(create, "title string, task_id string, task_url string")
+        def create(rows: list[dict]) -> list[tuple]:
+            bodies = [
+                {"planId": plan_id, "title": str(r[title_col])}
+                | ({"bucketId": str(r[bucket_col])} if bucket_col else {})
+                for r in rows
+            ]
+            reqs = [{"method": "POST", "url": "/planner/tasks", "body": b} for b in bodies]
+            ids = [(doc or {}).get("id", "") for doc in graph_send(client, reqs, batch_size)]
+            url = f"{client.base_url}/planner/tasks/"
+            return [(b["title"], i, url + i) for b, i in zip(bodies, ids)]
+
+        return create
+
+    cols = [title_col] + ([bucket_col] if bucket_col else [])
+    results = StructType([StructField(n, StringType()) for n in ("title", "task_id", "task_url")])
+    return fan_out(df.select(*cols), results, start)
 
 
 def _delta_sync(
@@ -961,15 +894,12 @@ def _delta_sync(
     ``GraphClient.walk`` from the stored cursor (else ``path``), the new
     cursor committed only after the walk, 410 on a stored link -> drop
     state and reload."""
-    import json as _json
-    import os
-
     os.makedirs(state_dir, exist_ok=True)
     state_path = os.path.join(state_dir, f"{state_key}.json")
     delta_link = None
     if os.path.exists(state_path):
         with open(state_path) as f:
-            delta_link = _json.load(f).get("delta_link")
+            delta_link = json.load(f).get("delta_link")
     try:
         items, cursor = client.walk(delta_link or path)
     except HttpStatusError as e:
@@ -979,7 +909,7 @@ def _delta_sync(
         raise
     if cursor:
         with open(state_path, "w") as f:
-            _json.dump({"delta_link": cursor}, f)
+            json.dump({"delta_link": cursor}, f)
     return items
 
 

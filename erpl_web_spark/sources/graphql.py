@@ -28,6 +28,11 @@ model as the reference's OData scan; parallelism across scans comes from
 Spark. Auth options match the OData source (``auth_type``/``token``/
 ``username`` inline, or the file-backed secret registry).
 
+Every operation body, including ``graphql_call``'s per-row variables, is
+encoded by ``core.jsonwire``: an ``int`` column stays an integer and a
+NULL is ``null``, timestamps are UTC ``Z`` instants, decimals strings,
+binary base64, and a NaN or ±inf variable fails that row.
+
 Usage::
 
     from erpl_web_spark.sources.graphql import ensure_registered
@@ -50,10 +55,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import BooleanType, StringType, StructField, StructType
 
+from erpl_web_spark.core import jsonwire
 from erpl_web_spark.core.http import HttpClient
 from erpl_web_spark.core.infer import infer_struct as _infer_struct
 from erpl_web_spark.core.secrets import auth_headers_from_options as _auth_headers
 from erpl_web_spark.odata.json_decode import ColumnDecoders
+from erpl_web_spark.sources.bulk import each_row, fan_out
 
 if TYPE_CHECKING:
     import pyarrow
@@ -83,7 +90,7 @@ class GraphQLClient:
         self.http = http or HttpClient()
 
     def execute(self, query: str, variables: dict | None = None) -> dict:
-        body = json.dumps({"query": query, "variables": variables or {}})
+        body = jsonwire.dumps({"query": query, "variables": variables or {}})
         resp = self.http.request(
             "POST",
             self.url,
@@ -142,42 +149,31 @@ class GraphQLClient:
 # -- data source -------------------------------------------------------------
 
 
+def _pages(options, auth: dict[str, str], max_pages: int = 10_000) -> Iterator[list[dict]]:
+    """The scan's row pages under ``options``: one POST, or the Relay
+    cursor walk of at most ``max_pages`` pages."""
+    client = GraphQLClient(options["url"], HttpClient(auth_headers=auth))
+    query, data_path = options["query"], options.get("data_path", "data")
+    variables = json.loads(options.get("variables", "{}"))
+    if options.get("paginate", "none") != "cursor":
+        return iter([client.fetch_rows(query, variables, data_path)])
+    return client.fetch_connection_pages(
+        query, variables, data_path, page_size=int(options.get("page_size", 100)),
+        size_var=options.get("size_var", "first"), cursor_var=options.get("cursor_var", "after"),
+        max_pages=max_pages,
+    )
+
+
 class GraphQLDataSource(DataSource):
     @classmethod
     def name(cls) -> str:
         return "graphql"
 
-    def _client(self) -> GraphQLClient:
-        return GraphQLClient(
-            self.options["url"], HttpClient(auth_headers=_auth_headers(self.options))
-        )
-
-    def _probe_rows(self) -> list[dict]:
-        client = self._client()
-        query = self.options["query"]
-        variables = json.loads(self.options.get("variables", "{}"))
-        data_path = self.options.get("data_path", "data")
-        if self.options.get("paginate", "none") == "cursor":
-            first_page = next(
-                client.fetch_connection_pages(
-                    query,
-                    variables,
-                    data_path,
-                    page_size=int(self.options.get("page_size", 100)),
-                    size_var=self.options.get("size_var", "first"),
-                    cursor_var=self.options.get("cursor_var", "after"),
-                    max_pages=1,
-                ),
-                [],
-            )
-            return first_page
-        return client.fetch_rows(query, variables, data_path)
-
     def schema(self) -> StructType:
         explicit = self.options.get("schema_json")
         if explicit:
             return StructType.fromJson(json.loads(explicit))
-        rows = self._probe_rows()
+        rows = next(_pages(self.options, _auth_headers(self.options), max_pages=1), [])
         if not rows:
             raise GraphQLError(
                 f"cannot infer schema: no rows at {self.options.get('url')}; "
@@ -189,11 +185,6 @@ class GraphQLDataSource(DataSource):
         return GraphQLReader(schema, dict(self.options), _auth_headers(self.options))
 
 
-class _OnePartition(InputPartition):
-    def __init__(self):
-        self.index = 0
-
-
 class GraphQLReader(DataSourceReader):
     def __init__(self, schema: StructType, options: dict, auth: dict[str, str]):
         self._schema = schema
@@ -201,28 +192,11 @@ class GraphQLReader(DataSourceReader):
         self._auth = auth
 
     def partitions(self) -> Sequence[InputPartition]:
-        return [_OnePartition()]
+        return [InputPartition(0)]
 
     def read(self, partition) -> Iterator[pyarrow.RecordBatch]:
-        client = GraphQLClient(
-            self._options["url"], HttpClient(auth_headers=self._auth)
-        )
-        query = self._options["query"]
-        variables = json.loads(self._options.get("variables", "{}"))
-        data_path = self._options.get("data_path", "data")
-        if self._options.get("paginate", "none") == "cursor":
-            pages = client.fetch_connection_pages(
-                query,
-                variables,
-                data_path,
-                page_size=int(self._options.get("page_size", 100)),
-                size_var=self._options.get("size_var", "first"),
-                cursor_var=self._options.get("cursor_var", "after"),
-            )
-        else:
-            pages = [client.fetch_rows(query, variables, data_path)]
         decoders = ColumnDecoders(self._schema)
-        for page in pages:
+        for page in _pages(self._options, self._auth):
             yield decoders.batch(page)
 
 
@@ -268,45 +242,23 @@ def graphql_call(
     input row, row columns -> operation variables. The write-side
     complement of ``format("graphql")`` reads, mirroring
     ``http_ds.http_call`` (the reference's lateral-join bulk idiom):
-    Arrow-batched mapInPandas, one keep-alive client per batch,
+    ``bulk.fan_out``, one keep-alive client per task,
     partition-parallel, optional per-task pacing. A row-level GraphQL
     error is captured in (ok, error), not raised — one bad record must
     not kill a 10^9-row write job.
     """
-    import time as _time
-
-    keep = keep_cols or []
-    out_schema = StructType(
-        [df.schema[c] for c in keep] + list(GRAPHQL_CALL_SCHEMA.fields)
-    )
     auth = dict(auth_headers or {})
-    min_interval = 1.0 / max_rps_per_task if max_rps_per_task else 0.0
 
-    def run(batches):
+    def start():
         client = GraphQLClient(url, HttpClient(auth_headers=auth))
-        next_slot = 0.0
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                if min_interval:
-                    now = _time.monotonic()
-                    if now < next_slot:
-                        _time.sleep(next_slot - now)
-                    next_slot = max(now, next_slot) + min_interval
-                variables = {c: _py(r[c]) for c in variable_cols}
-                try:
-                    doc = client.execute(query, variables)
-                    res = (True, json.dumps(doc.get("data"), sort_keys=True), None)
-                except Exception as e:  # row-level failure -> row-level error
-                    res = (False, None, str(e)[:500])
-                rows.append(tuple(r[c] for c in keep) + res)
-            import pandas as pd
 
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
+        def call(r: dict) -> tuple:
+            try:
+                doc = client.execute(query, {c: r[c] for c in variable_cols})
+                return (True, json.dumps(doc.get("data"), sort_keys=True), None)
+            except Exception as e:  # row-level failure -> row-level error
+                return (False, None, str(e)[:500])
 
-    return df.mapInPandas(run, schema=out_schema)
+        return each_row(call, max_rps_per_task)
 
-
-def _py(v):
-    """numpy scalar -> plain Python for JSON encoding."""
-    return v.item() if hasattr(v, "item") else v
+    return fan_out(df, GRAPHQL_CALL_SCHEMA, start, keep_cols)

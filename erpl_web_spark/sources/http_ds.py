@@ -6,19 +6,16 @@ the fixed 6-column schema {method, status, url, headers MAP, content_type,
 content} (src/http_client.cpp:825-840; registration
 src/erpl_web_extension.cpp:259-351). The reference's bulk idiom — LATERAL
 join over a table of request parameters (README.md:753-780) — maps to
-``http_call``: an Arrow-batched mapInPandas that issues one request per
+``http_call``: a ``sources.bulk.fan_out`` that sends one request per
 input row on the executors (partition-parallel fan-out, the scalable
-shape for millions of calls; per-executor Sessions reuse connections).
+shape for millions of calls; one keep-alive client per task). A body is
+sent as its ``body_col`` cell holds it; the JSON writers encode theirs
+with ``core.jsonwire`` (UTC ``Z`` instants, base64 binary, NaN rejected).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
     MapType,
@@ -30,6 +27,7 @@ from pyspark.sql.types import (
 from erpl_web_spark.core.http import HttpClient, RetryConfig
 from erpl_web_spark.core.localframe import local_rows
 from erpl_web_spark.core.secrets import default_registry
+from erpl_web_spark.sources.bulk import each_row, fan_out
 
 HTTP_RESPONSE_SCHEMA = StructType(
     [
@@ -111,7 +109,7 @@ def http_call(
     executors (the reference's LATERAL-join bulk-write idiom, B1/B2).
 
     Returns the input ``keep_cols`` plus the 6 response columns. One
-    HttpClient (keep-alive Session) per Arrow batch; partition-parallel.
+    keep-alive HttpClient per task; partition-parallel.
 
     ``max_rps_per_task`` throttles each task to that many requests per
     second (cluster-wide ceiling = value × number of concurrent tasks;
@@ -120,33 +118,17 @@ def http_call(
     target API — the retry ladder handles the resulting 429s, but
     pacing beats retrying.
     """
-    keep = keep_cols or []
-    out_schema = StructType(
-        [df.schema[c] for c in keep] + list(HTTP_RESPONSE_SCHEMA.fields)
-    )
     headers = dict(extra_headers or {})
     auth = dict(auth_headers or {})
-    min_interval = 1.0 / max_rps_per_task if max_rps_per_task else 0.0
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import time as _time
-
+    def start():
         client = HttpClient(auth_headers=auth)
-        next_slot = 0.0
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                if min_interval:
-                    now = _time.monotonic()
-                    if now < next_slot:
-                        _time.sleep(next_slot - now)
-                    next_slot = max(now, next_slot) + min_interval
-                body = r[body_col] if body_col else None
-                resp = _do_request(
-                    client, method, r[url_col], headers, body,
-                    content_type if body_col else None,
-                )
-                rows.append(tuple(r[c] for c in keep) + resp)
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
+        return each_row(
+            lambda r: _do_request(
+                client, method, r[url_col], headers,
+                r[body_col] if body_col else None, content_type if body_col else None,
+            ),
+            max_rps_per_task,
+        )
 
-    return df.mapInPandas(run, schema=out_schema)
+    return fan_out(df, HTTP_RESPONSE_SCHEMA, start, keep_cols)

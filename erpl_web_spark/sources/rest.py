@@ -42,14 +42,15 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql.datasource import (
     DataSource,
+    DataSourceArrowWriter,
     DataSourceReader,
-    DataSourceStreamWriter,
-    DataSourceWriter,
+    DataSourceStreamArrowWriter,
     InputPartition,
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
 
+from erpl_web_spark.core import jsonwire
 from erpl_web_spark.core.http import HttpClient
 from erpl_web_spark.core.infer import infer_struct
 from erpl_web_spark.core.secrets import auth_headers_from_options as _auth_headers
@@ -87,8 +88,6 @@ def _with_params(url: str, params: dict) -> str:
     u = HttpUrl.parse(url)
     merged = {**u.query_params(), **{k: str(v) for k, v in params.items()}}
     return u.with_query_params(merged).to_string()
-
-
 
 
 class RestPager:
@@ -312,12 +311,19 @@ class _RestWriteCommit(WriterCommitMessage):
         self.requests = requests
 
 
-class RestWriter(DataSourceWriter):
-    """Batch writer: rows serialize to JSON and POST (or PUT/PATCH) to
-    ``url`` in arrays of ``write_batch_size`` (1 posts bare objects) —
-    the idiomatic ``df.write`` twin of the reference's COPY TO surfaces
+class RestWriter(DataSourceArrowWriter):
+    """Batch writer: rows arrive as Arrow record batches, serialize to
+    JSON objects keyed by column name and POST (or PUT/PATCH) to ``url``
+    in arrays of ``write_batch_size`` (1 posts bare objects) — the
+    idiomatic ``df.write`` twin of the reference's COPY TO surfaces
     (SURVEY §2.B; the same row->request mapping as graph.py's bulk
     writers, minus Graph's $batch envelope).
+
+    Wire encoding (``core.jsonwire``): a ``timestamp`` is its UTC instant
+    as ISO-8601 with a ``Z`` suffix, a ``timestamp_ntz`` ISO-8601 with no
+    zone, a ``date`` an ISO date, a ``decimal`` its string, ``binary``
+    base64, a struct an object and a map an object; a NaN or ±inf
+    double fails the task instead of sending invalid JSON.
 
     Non-transactional like any REST sink: duplicates can arise from
     (a) Spark task retries re-sending already-posted batches, and
@@ -329,45 +335,28 @@ class RestWriter(DataSourceWriter):
     row payload)."""
 
     def __init__(self, schema: StructType, options: dict, auth: dict[str, str]):
-        self._schema = schema
         self._options = options
         self._auth = auth
 
     def write(self, iterator) -> _RestWriteCommit:
+        from erpl_web_spark.sources.bulk import batch_rows, cut  # pyarrow: executor-side
+
         o = self._options
         client = HttpClient(auth_headers=self._auth)
         url = o["url"]
         method = o.get("write_method", "POST").upper()
         batch = max(1, int(o.get("write_batch_size", 20)))
-        names = [f.name for f in self._schema.fields]
         rows = requests = 0
-        buf: list[dict] = []
-
-        def flush():
-            nonlocal requests
-            if not buf:
-                return
-            payload = buf[0] if batch == 1 else buf
-            resp = client.request(
-                method,
-                url,
-                body=json.dumps(payload, default=str),
-                content_type="application/json",
-            )
+        for chunk in cut((row for b in iterator for row in batch_rows(b)), batch):
+            body = jsonwire.dumps(chunk[0] if batch == 1 else chunk)
+            resp = client.request(method, url, body=body, content_type="application/json")
             if resp.status >= 300:
                 raise RuntimeError(
                     f"rest write failed: {method} {url} -> {resp.status} "
                     f"{resp.text[:200]}"
                 )
+            rows += len(chunk)
             requests += 1
-            buf.clear()
-
-        for row in iterator:
-            buf.append({n: v for n, v in zip(names, row)})
-            rows += 1
-            if len(buf) >= batch:
-                flush()
-        flush()
         return _RestWriteCommit(rows, requests)
 
     def commit(self, messages) -> None:
@@ -385,7 +374,7 @@ class RestWriter(DataSourceWriter):
         )
 
 
-class RestStreamWriter(DataSourceStreamWriter):
+class RestStreamWriter(DataSourceStreamArrowWriter):
     """``writeStream.format("rest")`` — the streaming twin of
     ``RestWriter``: every micro-batch's rows POST in the same budgeted
     JSON batches.
@@ -397,11 +386,8 @@ class RestStreamWriter(DataSourceStreamWriter):
     checkpoint-versioned parquet sinks (operators/cdc.py) and ship the
     snapshot instead."""
 
-    def __init__(self, schema: StructType, options: dict, auth: dict[str, str]):
-        self._delegate = RestWriter(schema, options, auth)
-
-    def write(self, iterator) -> _RestWriteCommit:
-        return self._delegate.write(iterator)
+    __init__ = RestWriter.__init__
+    write = RestWriter.write
 
     def commit(self, messages, batchId: int) -> None:
         logging.getLogger(__name__).info(

@@ -1,3 +1,5 @@
+import pytest
+
 from erpl_web_spark.core.http import BINARY_PREFIX, HttpClient, RetryConfig
 
 
@@ -330,3 +332,45 @@ def test_http_core_does_not_import_requests():
                 if any(m == "requests" or m.startswith("requests.") for m in mods):
                     offenders.append(f"{os.path.relpath(path, repo)}:{node.lineno}")
     assert offenders == []
+
+
+@pytest.mark.parametrize("zone", ["Europe/Berlin", "America/New_York"])
+def test_json_wire_encoding(tz, zone):
+    """The one request-body encoder: aware instants as UTC with a Z,
+    naive (NTZ) datetimes and dates as written, whatever the process
+    zone; Decimal as its string, bytes as base64, nested structs and
+    arrays recursively; NaN and ±inf raise."""
+    import datetime as dt
+    import json
+    from decimal import Decimal
+    from zoneinfo import ZoneInfo
+
+    from erpl_web_spark.core.jsonwire import dumps
+
+    tz(zone)
+    instant = dt.datetime(2024, 1, 1, 10, 30, tzinfo=dt.timezone.utc)
+    body = {
+        "local": instant.astimezone(),
+        "berlin": instant.astimezone(ZoneInfo("Europe/Berlin")),
+        "micros": instant.replace(microsecond=5),
+        "ntz": dt.datetime(2024, 1, 1, 10, 30),
+        "day": dt.date(2024, 1, 1),
+        "amount": Decimal("12.50"),
+        "blob": b"\x00\xff",
+        "nested": {"tags": ["a", None], "rows": [{"n": 1, "at": instant}], "x": 1.5},
+    }
+    assert json.loads(dumps(body)) == {
+        "local": "2024-01-01T10:30:00Z",
+        "berlin": "2024-01-01T10:30:00Z",
+        "micros": "2024-01-01T10:30:00.000005Z",
+        "ntz": "2024-01-01T10:30:00",
+        "day": "2024-01-01",
+        "amount": "12.50",
+        "blob": "AP8=",
+        "nested": {"tags": ["a", None], "rows": [{"n": 1, "at": "2024-01-01T10:30:00Z"}], "x": 1.5},
+    }
+    plain = {"id": 1, "sku": "SKU-00042", "qty": 7, "amount": 1234.5}
+    assert dumps(plain) == json.dumps(plain)  # plain rows: json.dumps' bytes
+    for bad in (float("nan"), float("inf"), -float("inf")):
+        with pytest.raises(ValueError):
+            dumps({"v": [bad]})

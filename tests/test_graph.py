@@ -1,6 +1,9 @@
 """Microsoft Graph family connector tests against the fixture server."""
 
 import datetime as dt
+import itertools
+import json
+from decimal import Decimal
 
 import pytest
 
@@ -39,6 +42,22 @@ from erpl_web_spark.sources.graph import (
 @pytest.fixture()
 def gclient(fixture_server):
     return GraphClient(fixture_server.base_url + "/graph", HttpClient())
+
+
+_JOB_GROUPS = itertools.count()
+
+
+def _jobs_of(spark, call):
+    """``call()``'s result and the number of Spark jobs it ran (the jobs
+    of a fresh job group, read through ``statusTracker``)."""
+    sc = spark.sparkContext
+    group = f"graph-bulk-{next(_JOB_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        result = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_users_pagination_merges_pages(spark, gclient, fixture_server):
@@ -112,6 +131,7 @@ def test_sharepoint_write_batch_coalescing(spark, fixture_server):
     sharepoint_list_write(df, factory, "s1", "l1", batch_size=20)
     assert len(fixture_server.state.requests_for("/graph/$batch")) == 1
     assert len(fixture_server.state.sp_items) == n0 + 14
+    sent = json.loads(fixture_server.state.requests_for("/graph/$batch")[0]["body"])
 
     # byte budget: each subrequest is ~120 bytes, so a 1-byte budget
     # degrades to one request per row (budget always admits >= 1)
@@ -121,30 +141,51 @@ def test_sharepoint_write_batch_coalescing(spark, fixture_server):
     assert len(fixture_server.state.sp_items) == n0 + 21
     created = [i["fields"]["Title"] for i in fixture_server.state.sp_items[n0:]]
     assert sorted(created) == sorted([f"bt-{i}" for i in range(7)] * 3)
+
+    # the byte budget counts the bytes sent: each subrequest as encoded
+    # inside the envelope (id and headers included), so a budget one
+    # byte short of two subrequests puts one in each envelope
+    first, second = (len(json.dumps(sub)) for sub in sent["requests"][:2])
+    fixture_server.state.log.clear()
+    sharepoint_list_write(
+        df, factory, "s1", "l1", batch_size=20, batch_max_bytes=first + second - 1
+    )
+    envelopes = fixture_server.state.requests_for("/graph/$batch")
+    assert [len(json.loads(e["body"])["requests"]) for e in envelopes] == [1] * 7
+    assert len(fixture_server.state.sp_items) == n0 + 28
     # restore shared fixture state for later tests
     del fixture_server.state.sp_items[n0:]
 
 
 def test_graph_bulk_writers_return_rows_written(spark, fixture_server):
     """Both bulk writers report rows written (summed over partitions and
-    over both write paths), not the DataFrame's column count."""
+    over both write paths), not the DataFrame's column count, in one
+    Spark job per call; typed cells go out in the JSON wire encoding
+    (a timestamp as its UTC instant with a Z, a decimal as a string)."""
     from erpl_web_spark.sources.graph import excel_table_write, sharepoint_list_write
 
     base = fixture_server.base_url + "/graph"
     factory = lambda: GraphClient(base, HttpClient())  # noqa: E731
+    due = dt.datetime(2024, 5, 1, 8, 0, tzinfo=dt.timezone.utc)
     df = spark.createDataFrame(
-        [(f"rw-{i}", float(i)) for i in range(5)], "Title string, Amount double"
-    ).repartition(2)
+        [(f"rw-{i}", float(i), due, Decimal("12.50")) for i in range(5)],
+        "Title string, Amount double, DueDate timestamp, Cost decimal(10,2)",
+    ).coalesce(2)  # two partitions, no shuffle job of their own
 
     n0 = len(fixture_server.state.sp_items)
-    assert sharepoint_list_write(df, factory, "s1", "l1", batch_size=20) == 5
-    assert sharepoint_list_write(df, factory, "s1", "l1", batch_size=1) == 5
+    for batch_size in (20, 1):
+        assert _jobs_of(
+            spark, lambda: sharepoint_list_write(df, factory, "s1", "l1", batch_size=batch_size)
+        ) == (5, 1)
     assert len(fixture_server.state.sp_items) == n0 + 10
+    stored = [i["fields"] for i in fixture_server.state.sp_items[n0:]]
+    assert {(f["DueDate"], f["Cost"]) for f in stored} == {("2024-05-01T08:00:00Z", "12.50")}
     del fixture_server.state.sp_items[n0:]
 
     e0 = len(fixture_server.state.excel_appended)
-    assert excel_table_write(df, factory, "f1", "T1") == 5
+    assert _jobs_of(spark, lambda: excel_table_write(df, factory, "f1", "T1")) == (5, 1)
     assert len(fixture_server.state.excel_appended) == e0 + 5
+    assert fixture_server.state.excel_appended[e0][2:] == ["2024-05-01T08:00:00Z", "12.50"]
     del fixture_server.state.excel_appended[e0:]
 
 
@@ -272,26 +313,26 @@ def test_sharepoint_bulk_update_delete_batched(spark, fixture_server):
         [(ids[i], 10.0 + i) for i in range(6)], "item_id string, Amount double"
     ).repartition(1)
     fixture_server.state.log.clear()
-    sharepoint_list_update(upd, factory, "s1", "l1", batch_size=4)
+    assert sharepoint_list_update(upd, factory, "s1", "l1", batch_size=4) == 6
     assert len(fixture_server.state.requests_for("/graph/$batch")) == 2
     got = {i["id"]: i["fields"]["Amount"] for i in fixture_server.state.sp_items[n0:]}
     assert got == {ids[i]: 10.0 + i for i in range(6)}
 
     # batch_size=1 degrades to per-item PATCHes (reference parity path)
     fixture_server.state.log.clear()
-    sharepoint_list_update(upd, factory, "s1", "l1", batch_size=1)
+    assert sharepoint_list_update(upd, factory, "s1", "l1", batch_size=1) == 6
     assert len(fixture_server.state.requests_for("/graph/$batch")) == 0
 
     # bulk delete, one envelope; then per-item path for the rest
     dels = spark.createDataFrame([(i,) for i in ids[:4]], "item_id string").repartition(1)
     fixture_server.state.log.clear()
-    sharepoint_list_delete(dels, factory, "s1", "l1", batch_size=20)
+    assert sharepoint_list_delete(dels, factory, "s1", "l1", batch_size=20) == 4
     assert len(fixture_server.state.requests_for("/graph/$batch")) == 1
     assert {i["id"] for i in fixture_server.state.sp_items[n0:]} == set(ids[4:])
 
     rest = spark.createDataFrame([(i,) for i in ids[4:]], "item_id string").repartition(1)
     fixture_server.state.log.clear()
-    sharepoint_list_delete(rest, factory, "s1", "l1", batch_size=1)
+    assert sharepoint_list_delete(rest, factory, "s1", "l1", batch_size=1) == 2
     assert len(fixture_server.state.requests_for("/graph/$batch")) == 0
     assert len(fixture_server.state.sp_items) == n0
 

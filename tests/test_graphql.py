@@ -150,20 +150,23 @@ def test_graphql_broken_cursor_terminates(fixture_server):
 
 
 def test_graphql_bulk_mutation_call(spark, fixture_server):
-    """graphql_call: one mutation per row, columns as variables, row-level
-    errors captured not raised (the write-side bulk idiom)."""
+    """graphql_call: one mutation per row, columns as variables (an int
+    stays an integer, a NULL is null), row-level errors captured not
+    raised (the write-side bulk idiom)."""
     import json as _json
 
     from erpl_web_spark.sources.graphql import graphql_call
 
     df = spark.createDataFrame(
-        [(1, "alpha"), (2, "beta"), (3, None)], "rid int, name string"
+        [(1, "alpha", 3, 1.5), (2, "beta", None, 2.25), (3, None, 4, 0.5)],
+        "rid int, name string, qty int, price double",
     )
     out = graphql_call(
         df.coalesce(1),
         fixture_server.base_url + "/graphql",
-        "mutation addProduct($name: String!) { addProduct(name: $name) { id name } }",
-        variable_cols=["name"],
+        "mutation addProduct($name: String!, $qty: Int, $price: Float) "
+        "{ addProduct(name: $name) { id name } }",
+        variable_cols=["name", "qty", "price"],
         keep_cols=["rid"],
     ).collect()
     by_rid = {r["rid"]: r for r in out}
@@ -172,3 +175,6 @@ def test_graphql_bulk_mutation_call(spark, fixture_server):
     assert not by_rid[3]["ok"] and "required" in by_rid[3]["error"]
     # server really recorded the two successful writes
     assert [v["name"] for v in fixture_server.state.gql_added] == ["alpha", "beta"]
+    assert [(type(v["qty"]), v["qty"], v["price"]) for v in fixture_server.state.gql_added] == [
+        (int, 3, 1.5), (type(None), None, 2.25)
+    ]

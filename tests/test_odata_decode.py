@@ -355,6 +355,41 @@ def test_one_page_walker_per_web_api_family():
     assert not offenders, offenders
 
 
+def test_one_write_path_per_web_api_sink():
+    """Executor-side writes in ``sources/`` run only through
+    ``sources/bulk.py``'s Arrow partition loop and encode JSON only
+    through ``core.jsonwire``: no module there calls ``foreachPartition``,
+    ``mapInPandas``, ``iterrows`` or ``.accumulator(``, imports pandas,
+    or passes ``default=str`` to a JSON encoder."""
+    import ast
+    from pathlib import Path
+
+    import erpl_web_spark
+
+    root = Path(erpl_web_spark.__file__).parent / "sources"
+    banned_calls = {"foreachPartition", "mapInPandas", "iterrows", "accumulator"}
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root.parent).as_posix()
+        for node in ast.walk(ast.parse(path.read_text(), filename=rel)):
+            if isinstance(node, ast.Attribute) and node.attr in banned_calls:
+                offenders.append(f"{rel}:{node.lineno} uses .{node.attr}")
+            elif isinstance(node, ast.Import) and any(
+                a.name.split(".")[0] == "pandas" for a in node.names
+            ):
+                offenders.append(f"{rel}:{node.lineno} imports pandas")
+            elif isinstance(node, ast.ImportFrom) and (node.module or "").split(".")[0] == "pandas":
+                offenders.append(f"{rel}:{node.lineno} imports from pandas")
+            elif (
+                isinstance(node, ast.keyword)
+                and node.arg == "default"
+                and isinstance(node.value, ast.Name)
+                and node.value.id == "str"
+            ):
+                offenders.append(f"{rel}:{node.lineno} passes default=str")
+    assert not offenders, offenders
+
+
 def test_one_decode_path_per_web_api_read():
     """Cells decode only inside ``odata/json_decode.py`` (no
     ``decode_value(`` call elsewhere in the package), and no module but

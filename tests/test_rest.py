@@ -121,8 +121,13 @@ def test_rest_secret_auth_reaches_wire(spark, fixture_server, secrets_file):
 
 
 def test_rest_writer_batches_and_collects(spark, fixture_server):
+    import base64
+    import datetime as dt
+
+    at = dt.datetime(2024, 1, 1, 10, 30, tzinfo=dt.timezone.utc)
     df = spark.createDataFrame(
-        [(i, f"t{i}") for i in range(7)], "item_id long, title string"
+        [(i, f"t{i}", at, bytes([i, 255])) for i in range(7)],
+        "item_id long, title string, at timestamp, blob binary",
     ).coalesce(1)
     from erpl_web_spark.sources.rest import ensure_registered
 
@@ -137,6 +142,9 @@ def test_rest_writer_batches_and_collects(spark, fixture_server):
     got = sorted(fixture_server.state.rest_collected, key=lambda d: d["item_id"])
     assert [d["item_id"] for d in got] == list(range(7))
     assert got[0]["title"] == "t0"
+    # the wire encoding: the UTC instant with a Z, binary as base64
+    assert {d["at"] for d in got} == {"2024-01-01T10:30:00Z"}
+    assert [base64.b64decode(d["blob"]) for d in got] == [bytes([i, 255]) for i in range(7)]
     posts = [
         r for r in fixture_server.state.log
         if r["path"] == "/rest/collector" and r["method"] == "POST"
