@@ -24,8 +24,11 @@ sets them, and gzip bodies are decoded. There is no cookie jar and no
 ~/.netrc lookup; ``user:pass@`` in a URL becomes a Basic Authorization
 header. Transport failures raise the builtin TimeoutError (connect or
 read timeout) or ConnectionError (refused, reset, TLS, proxy), both
-OSError subclasses. One HttpClient per executor task is the intended
-usage pattern.
+OSError subclasses. A response is returned whatever its status; every
+connector turns a non-2xx one into ``HttpStatusError`` through
+``HttpResponse.raise_for_status()`` (reference error mapping,
+odata_read_functions.cpp:1983-2007). One HttpClient per executor task is
+the intended usage pattern.
 """
 
 from __future__ import annotations
@@ -119,6 +122,24 @@ class RetryConfig:
 _IDEMPOTENT_METHODS = {"GET", "HEAD", "OPTIONS"}
 
 
+class HttpStatusError(RuntimeError):
+    """A response whose status is not 2xx. ``status`` and ``url`` let
+    callers branch on it (ODP's expired-token reload, Graph's 410). A GET
+    reads ``HTTP {status} fetching {url}``; any other method names itself
+    and keeps the head of the response body, the server's reason."""
+
+    def __init__(self, status: int, url: str, method: str = "GET", body: str = ""):
+        if method == "GET":
+            msg = f"HTTP {status} fetching {url}"
+        else:
+            msg = f"HTTP {status} from {method} {url}" + (f": {body[:200]}" if body else "")
+        if status in (401, 403):
+            msg += " (provide a secret scoped to this URL)"
+        super().__init__(msg)
+        self.status = status
+        self.url = url
+
+
 @dataclass
 class HttpResponse:
     method: str
@@ -149,6 +170,14 @@ class HttpResponse:
         import json
 
         return json.loads(self.text)
+
+    def raise_for_status(self) -> HttpResponse:
+        """``self`` on a 2xx status, else raise ``HttpStatusError``. The
+        client follows redirects itself, so a 3xx here is one it could
+        not follow, and its body is not data."""
+        if 200 <= self.status < 300:
+            return self
+        raise HttpStatusError(self.status, self.url, self.method, self.text)
 
 
 def _basic_auth(userinfo: str) -> str:

@@ -88,11 +88,7 @@ class OAuth2Client:
             "POST", self.token_endpoint, body=body,
             content_type="application/x-www-form-urlencoded",
         )
-        if resp.status >= 400:
-            raise RuntimeError(
-                f"OAuth2 token request failed: HTTP {resp.status}: {resp.text[:200]}"
-            )
-        doc = resp.json()
+        doc = resp.raise_for_status().json()
         return TokenResponse(
             access_token=doc["access_token"],
             refresh_token=doc.get("refresh_token"),

@@ -5,8 +5,8 @@ Reference lifecycle (SURVEY.md §3.1): bind probes the URL once to
 classify service-root vs entity-set and detect the protocol version
 (odata_client.cpp:642-791, 827-845), fetches + caches the $metadata EDMX
 (EdmCache, odata_client.cpp:56-63), then the scan follows next-page links
-until absent (odata_content.cpp:1072-1100). Errors map to friendly
-messages (odata_read_functions.cpp:1983-2007).
+until absent (odata_content.cpp:1072-1100). A non-2xx status raises
+``core.http.HttpStatusError``, re-exported here.
 """
 
 from __future__ import annotations
@@ -14,20 +14,10 @@ from __future__ import annotations
 from collections.abc import Iterator
 from typing import Any
 
-from erpl_web_spark.core.http import HttpClient, HttpResponse
+from erpl_web_spark.core.http import HttpClient, HttpResponse, HttpStatusError  # noqa: F401
 from erpl_web_spark.core.url import HttpUrl
 from erpl_web_spark.odata.edm import EdmModel
 from erpl_web_spark.odata.json_decode import extract_rows_payload, next_link
-
-
-class HttpStatusError(RuntimeError):
-    """An HTTP error status (>= 400) on a page walk; ``status`` lets
-    callers branch on it (ODP's expired-token reload, Graph's 410)."""
-
-    def __init__(self, status: int, url: str):
-        super().__init__(f"HTTP {status} fetching {url}")
-        self.status = status
-        self.url = url
 
 
 # Process-wide EDMX cache keyed by metadata URL (mirrors EdmCache).
@@ -72,19 +62,7 @@ class ODataClient:
     def probe(self) -> dict:
         """One GET to classify the URL and capture the first page."""
         resp = self.http.get(self.url, headers={"Accept": "application/json"})
-        if resp.status == 404:
-            raise RuntimeError(
-                f"Resource not found ({self.url}). Check the entity-set name "
-                "or use odata_describe() to list available sets."
-            )
-        if resp.status in (401, 403):
-            raise RuntimeError(
-                f"Authentication failed ({resp.status}) for {self.url}. "
-                "Provide a secret scoped to this URL."
-            )
-        if resp.status >= 400:
-            raise RuntimeError(f"HTTP {resp.status} from {self.url}")
-        doc = resp.json()
+        doc = resp.raise_for_status().json()
         self._probe_doc = doc
         self._version = detect_version(doc, resp.headers)
         return doc
@@ -127,9 +105,7 @@ class ODataClient:
         murl = self.metadata_url()
         if murl not in _EDM_CACHE:
             resp = self.http.get(murl, headers={"Accept": "application/xml"})
-            if resp.status >= 400:
-                raise RuntimeError(f"$metadata fetch failed: HTTP {resp.status} from {murl}")
-            _EDM_CACHE[murl] = EdmModel.from_xml(resp.text)
+            _EDM_CACHE[murl] = EdmModel.from_xml(resp.raise_for_status().text)
         return _EDM_CACHE[murl]
 
     # -- pagination --------------------------------------------------------
@@ -145,9 +121,7 @@ class ODataClient:
         url = url or self.url
         headers = headers or {"Accept": "application/json"}
         while url:
-            resp = self.http.get(url, headers=headers)
-            if resp.status >= 400:
-                raise HttpStatusError(resp.status, url)
+            resp = self.http.get(url, headers=headers).raise_for_status()
             doc = resp.json()
             yield resp, doc
             link = next_link(doc)

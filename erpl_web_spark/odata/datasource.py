@@ -67,7 +67,7 @@ from pyspark.sql.types import StructType
 
 from erpl_web_spark.core.http import HttpClient
 from erpl_web_spark.core.secrets import auth_headers_from_options
-from erpl_web_spark.odata.client import HttpStatusError, ODataClient
+from erpl_web_spark.odata.client import ODataClient
 from erpl_web_spark.odata.edm import EdmModel
 from erpl_web_spark.odata.expand import parse_expand
 from erpl_web_spark.odata.filters import translate_filters
@@ -130,9 +130,7 @@ class ODataDataSource(DataSource):
             ).build()
             http = HttpClient(auth_headers=auth_headers_from_options(self.options))
             resp = http.get(url, headers={"Accept": "application/json"})
-            if resp.status >= 400:
-                raise HttpStatusError(resp.status, url)
-            rows = extract_rows_payload(resp.json())
+            rows = extract_rows_payload(resp.raise_for_status().json())
             if not rows:
                 # A valid-but-empty aggregation cannot be type-inferred;
                 # Spark only calls schema() when the user supplied none.

@@ -40,9 +40,7 @@ class BusinessCentralClient:
 def bc_show_companies(spark: SparkSession, client: BusinessCentralClient) -> DataFrame:
     resp = client.http.get(client.entity_url("companies"),
                            headers={"Accept": "application/json"})
-    if resp.status >= 400:
-        raise RuntimeError(f"Business Central HTTP {resp.status}")
-    items = resp.json().get("value", [])
+    items = resp.raise_for_status().json().get("value", [])
     rows = [(i.get("id"), i.get("name"), i.get("displayName")) for i in items]
     return local_rows(spark, rows, "id string, name string, display_name string")
 

@@ -44,10 +44,7 @@ class DatasphereClient:
         return f"{self.base_url}/api/v1/dwc/consumption/analytical/{space}/{asset}"
 
     def get_values(self, url: str) -> list[dict]:
-        resp = self.http.get(url, headers={"Accept": "application/json"})
-        if resp.status >= 400:
-            raise RuntimeError(f"Datasphere HTTP {resp.status} from {url}")
-        doc = resp.json()
+        doc = self.http.get(url, headers={"Accept": "application/json"}).raise_for_status().json()
         return doc.get("value", doc if isinstance(doc, list) else [])
 
 

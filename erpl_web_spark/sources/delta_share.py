@@ -26,6 +26,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from erpl_web_spark.core import jsonwire
 from erpl_web_spark.core.http import HttpClient
 from erpl_web_spark.core.localframe import local_rows
 
@@ -39,11 +40,10 @@ class DeltaShareProfile:
     @classmethod
     def load(cls, path_or_url: str, http: HttpClient | None = None) -> "DeltaShareProfile":
         if path_or_url.startswith(("http://", "https://")):
-            text = (http or HttpClient()).get(path_or_url).text
+            doc = (http or HttpClient()).get(path_or_url).raise_for_status().json()
         else:
             with open(path_or_url) as f:
-                text = f.read()
-        doc = json.loads(text)
+                doc = json.load(f)
         return cls(
             endpoint=doc["endpoint"].rstrip("/"),
             bearer_token=doc.get("bearerToken", ""),
@@ -61,9 +61,7 @@ class DeltaShareClient:
     def _get_items(self, path: str) -> list[dict]:
         url = f"{self.profile.endpoint}{path}"
         resp = self.http.get(url, headers={"Accept": "application/json"})
-        if resp.status >= 400:
-            raise RuntimeError(f"Delta Sharing HTTP {resp.status} from {url}")
-        return resp.json().get("items", [])
+        return resp.raise_for_status().json().get("items", [])
 
     def list_shares(self) -> list[str]:
         return [i["name"] for i in self._get_items("/shares")]
@@ -82,10 +80,8 @@ class DeltaShareClient:
         """POST the query endpoint; parse NDJSON -> (schema, file URLs)."""
         url = f"{self.profile.endpoint}/shares/{share}/schemas/{schema}/tables/{table}/query"
         resp = self.http.request(
-            "POST", url, body=json.dumps({}), content_type="application/json"
-        )
-        if resp.status >= 400:
-            raise RuntimeError(f"Delta Sharing query failed: HTTP {resp.status} from {url}")
+            "POST", url, body=jsonwire.dumps({}), content_type="application/json"
+        ).raise_for_status()
         schema_struct: StructType | None = None
         files: list[str] = []
         for line in resp.text.splitlines():

@@ -56,10 +56,9 @@ from pyspark.sql.types import (
 )
 
 from erpl_web_spark.core import jsonwire
-from erpl_web_spark.core.http import HttpClient
+from erpl_web_spark.core.http import HttpClient, HttpStatusError
 from erpl_web_spark.core.localframe import local_batches
 from erpl_web_spark.core.secrets import default_registry
-from erpl_web_spark.odata.client import HttpStatusError
 from erpl_web_spark.odata.json_decode import ColumnDecoders
 from erpl_web_spark.sources.bulk import cut, fan_out, write_partitions
 
@@ -79,11 +78,8 @@ class GraphClient:
         self.sent = 0  # ``request`` calls made, one HTTP exchange each
 
     def get_json(self, path: str) -> Any:
-        url = self.base_url + path
-        resp = self.http.get(url, headers={"Accept": "application/json"})
-        if resp.status >= 400:
-            raise HttpStatusError(resp.status, url)
-        return resp.json()
+        resp = self.http.get(self.base_url + path, headers={"Accept": "application/json"})
+        return resp.raise_for_status().json()
 
     def _absolute(self, link: str) -> str:
         # Graph links are absolute, or relative to the versioned base
@@ -106,9 +102,7 @@ class GraphClient:
         pages = 0
         while url:
             resp = self.http.get(url, headers={"Accept": "application/json"})
-            if resp.status >= 400:
-                raise HttpStatusError(resp.status, url)
-            doc = resp.json()
+            doc = resp.raise_for_status().json()
             items.extend(doc.get("value", []))
             pages += 1
             # Cursor first, cap second: breaking before capturing this
@@ -127,15 +121,12 @@ class GraphClient:
         return self.walk(path)[0]
 
     def request(self, method: str, path: str, body: dict | None = None) -> Any:
-        url = self.base_url + path
         self.sent += 1
         resp = self.http.request(
-            method, url,
+            method, self.base_url + path,
             body=jsonwire.dumps(body) if body is not None else None,
             content_type="application/json" if body is not None else None,
-        )
-        if resp.status >= 400:
-            raise RuntimeError(f"Graph HTTP {resp.status} from {url}: {resp.text[:200]}")
+        ).raise_for_status()
         return resp.json() if resp.raw else None
 
 

@@ -98,9 +98,7 @@ class GraphQLClient:
             body=body,
             content_type="application/json",
         )
-        if resp.status >= 400:
-            raise GraphQLError(f"HTTP {resp.status} from {self.url}")
-        doc = resp.json()
+        doc = resp.raise_for_status().json()
         if doc.get("errors"):
             msgs = "; ".join(e.get("message", "?") for e in doc["errors"])
             raise GraphQLError(f"GraphQL errors: {msgs}")

@@ -55,7 +55,6 @@ from erpl_web_spark.core.http import HttpClient
 from erpl_web_spark.core.infer import infer_struct
 from erpl_web_spark.core.secrets import auth_headers_from_options as _auth_headers
 from erpl_web_spark.core.url import HttpUrl
-from erpl_web_spark.odata.client import HttpStatusError
 from erpl_web_spark.odata.json_decode import ColumnDecoders
 
 if TYPE_CHECKING:
@@ -103,10 +102,7 @@ class RestPager:
         self.max_pages = int(options.get("max_pages", 10_000))
 
     def _get(self, url: str):
-        resp = self.http.get(url, headers={"Accept": "application/json"})
-        if resp.status >= 400:
-            raise HttpStatusError(resp.status, url)
-        return resp
+        return self.http.get(url, headers={"Accept": "application/json"}).raise_for_status()
 
     def pages(
         self, offset_start: int | None = None, offset_limit: int | None = None
@@ -350,11 +346,7 @@ class RestWriter(DataSourceArrowWriter):
         for chunk in cut((row for b in iterator for row in batch_rows(b)), batch):
             body = jsonwire.dumps(chunk[0] if batch == 1 else chunk)
             resp = client.request(method, url, body=body, content_type="application/json")
-            if resp.status >= 300:
-                raise RuntimeError(
-                    f"rest write failed: {method} {url} -> {resp.status} "
-                    f"{resp.text[:200]}"
-                )
+            resp.raise_for_status()
             rows += len(chunk)
             requests += 1
         return _RestWriteCommit(rows, requests)

@@ -19,8 +19,6 @@ only v2 or only v4); both failing raises.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import BooleanType, StringType, StructField, StructType
 
@@ -60,15 +58,9 @@ def _http_for(base_url: str, http: HttpClient | None) -> HttpClient:
     return HttpClient(auth_headers=default_registry.auth_headers_for_url(base_url))
 
 
-def _get_json(http: HttpClient, url: str) -> dict:
-    resp = http.request("GET", url)
-    if resp.status != 200:
-        raise RuntimeError(f"SAP catalog request failed: HTTP {resp.status} for {url}")
-    return json.loads(resp.text)
-
-
 def _v2_services(http: HttpClient, base_url: str) -> list[tuple]:
-    doc = _get_json(http, base_url.rstrip("/") + V2_CATALOG_PATH + "?$format=json")
+    url = base_url.rstrip("/") + V2_CATALOG_PATH + "?$format=json"
+    doc = http.get(url).raise_for_status().json()
     rows = []
     for entry in doc.get("d", {}).get("results", []):
         service_id = entry.get("ID") or ""
@@ -85,7 +77,7 @@ def _v4_services(http: HttpClient, base_url: str) -> list[tuple]:
         + V4_CATALOG_PATH
         + "?$expand=DefaultSystem($expand=Services())&$format=json"
     )
-    doc = _get_json(http, url)
+    doc = http.get(url).raise_for_status().json()
     rows = []
     for group in doc.get("value", []):
         system = group.get("DefaultSystem") or {}
@@ -104,14 +96,17 @@ def odata_sap_show(
     """All OData services registered in the SAP Gateway (v2 + v4 catalogs)."""
     client = _http_for(base_url, http)
     rows: list[tuple] = []
-    errors: list[str] = []
+    errors: list[Exception] = []
     for loader in (_v2_services, _v4_services):
         try:
             rows.extend(loader(client, base_url))
         except Exception as exc:  # one catalog version may be absent
-            errors.append(str(exc))
+            errors.append(exc)
     if not rows and len(errors) == 2:
-        raise RuntimeError("both SAP catalog endpoints failed: " + "; ".join(errors))
+        # Raise the v4 error (an ``HttpStatusError`` when the server
+        # answered), its message naming the v2 one too.
+        errors[1].args = (f"both SAP catalog endpoints failed: {errors[0]}; {errors[1]}",)
+        raise errors[1]
     return local_rows(spark, rows, SAP_SHOW_SCHEMA)
 
 
@@ -126,7 +121,7 @@ def odp_odata_show(
         + V2_CATALOG_PATH
         + "?$expand=EntitySets&$format=json"
     )
-    doc = _get_json(client, url)
+    doc = client.get(url).raise_for_status().json()
     rows: list[tuple] = []
     for entry in doc.get("d", {}).get("results", []):
         service_id = entry.get("ID") or ""

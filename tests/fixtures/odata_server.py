@@ -859,6 +859,8 @@ def _make_handler(state: FixtureState):
                 variables = doc.get("variables") or {}
                 if "boom" in q:
                     return self._json(200, {"errors": [{"message": "boom"}]})
+                if "explode" in q:  # a server fault, not a GraphQL error
+                    return self._send(500, b"internal server error", "text/plain")
                 products = GQL_PRODUCTS
                 if "instants" in q:
                     return self._json(200, {"data": {"instants": [{"id": 1, "at": INSTANT}]}})

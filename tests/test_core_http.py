@@ -374,3 +374,96 @@ def test_json_wire_encoding(tz, zone):
     for bad in (float("nan"), float("inf"), -float("inf")):
         with pytest.raises(ValueError):
             dumps({"v": [bad]})
+
+
+def test_raise_for_status_contract():
+    """``HttpResponse.raise_for_status`` passes a 2xx response through and
+    raises ``HttpStatusError`` (a ``RuntimeError``) for anything else, a
+    3xx the client could not follow included. A GET's message is exactly
+    ``HTTP {status} fetching {url}``; another method's names the method
+    and keeps 200 characters of the body; 401/403 add the secret hint."""
+    from erpl_web_spark.core.http import HttpResponse, HttpStatusError
+
+    def resp(status, method="GET", body=b""):
+        return HttpResponse(method, status, "http://h/x", {}, "text/plain", body)
+
+    for ok in (200, 201, 204):
+        r = resp(ok)
+        assert r.raise_for_status() is r
+    for status, method, body, want in (
+        (404, "GET", b"nope", "HTTP 404 fetching http://h/x"),
+        (302, "GET", b"", "HTTP 302 fetching http://h/x"),
+        (422, "POST", b"x" * 300, "HTTP 422 from POST http://h/x: " + "x" * 200),
+        (404, "HEAD", b"", "HTTP 404 from HEAD http://h/x"),
+        (401, "GET", b"", "HTTP 401 fetching http://h/x (provide a secret scoped to this URL)"),
+    ):
+        with pytest.raises(HttpStatusError) as err:
+            resp(status, method, body).raise_for_status()
+        assert isinstance(err.value, RuntimeError)
+        assert (str(err.value), err.value.status, err.value.url) == (want, status, "http://h/x")
+
+
+def _status_cases():
+    from erpl_web_spark.core.oauth2 import OAuth2Client
+    from erpl_web_spark.odata.client import ODataClient
+    from erpl_web_spark.sources.business_central import (
+        BusinessCentralClient,
+        bc_show_companies,
+    )
+    from erpl_web_spark.sources.datasphere import DatasphereClient
+    from erpl_web_spark.sources.delta_share import DeltaShareClient, DeltaShareProfile
+    from erpl_web_spark.sources.graph import GraphClient
+    from erpl_web_spark.sources.graphql import GraphQLClient
+    from erpl_web_spark.sources.sap_catalog import V4_CATALOG_PATH, odata_sap_show
+
+    def share(b):
+        return DeltaShareClient(DeltaShareProfile(b + "/delta", "tok"), HttpClient())
+
+    v4_catalog = (
+        "/nosap" + V4_CATALOG_PATH + "?$expand=DefaultSystem($expand=Services())&$format=json"
+    )
+    # (id, call on the fixture base URL, status, path of the failing URL)
+    return [
+        ("odata_probe", lambda b: ODataClient(b + "/v4/NoSuchSet", HttpClient()).probe(),
+         404, "/v4/NoSuchSet"),
+        ("odata_metadata", lambda b: ODataClient(b + "/nosvc/Set", HttpClient()).get_model(),
+         404, "/nosvc/$metadata"),
+        ("graph_request", lambda b: GraphClient(b + "/graph", HttpClient()).request(
+            "POST", "/nope", {}), 404, "/graph/nope"),
+        ("graphql_500", lambda b: GraphQLClient(b + "/graphql", HttpClient()).execute(
+            "query { explode }"), 500, "/graphql"),
+        ("datasphere", lambda b: DatasphereClient(b + "/dsp", HttpClient()).get_values(
+            b + "/dsp/api/v1/dwc/catalog/nope"), 404, "/dsp/api/v1/dwc/catalog/nope"),
+        ("bc_show_companies", lambda b: bc_show_companies(
+            None, BusinessCentralClient(b + "/bc/nope", HttpClient())),
+         404, "/bc/nope/companies"),
+        ("delta_profile", lambda b: DeltaShareProfile.load(b + "/delta/nope.share", HttpClient()),
+         404, "/delta/nope.share"),
+        ("delta_list", lambda b: share(b).list_schemas("nope"), 404, "/delta/shares/nope/schemas"),
+        ("delta_query", lambda b: share(b).query_table("share1", "default", "nope"),
+         404, "/delta/shares/share1/schemas/default/tables/nope/query"),
+        ("sap_catalog_both", lambda b: odata_sap_show(None, b + "/nosap", HttpClient()),
+         404, v4_catalog),
+        ("oauth2_token", lambda b: OAuth2Client(b + "/nope-token", "cid", http=HttpClient())
+         .client_credentials(), 404, "/nope-token"),
+    ]
+
+
+@pytest.mark.parametrize("case", _status_cases(), ids=lambda c: c[0])
+def test_every_connector_raises_http_status_error(fixture_server, case):
+    """Every web-API surface turns an error status into the one
+    ``HttpStatusError`` carrying the status and the failing URL (no
+    SparkSession: each raises before building a frame). When both SAP
+    catalog versions fail, the v4 error is raised and names the v2 one."""
+    from erpl_web_spark.core.http import HttpStatusError
+    from erpl_web_spark.sources.sap_catalog import V2_CATALOG_PATH
+
+    _, call, status, path = case
+    url = fixture_server.base_url + path
+    with pytest.raises(HttpStatusError) as err:
+        call(fixture_server.base_url)
+    assert (err.value.status, err.value.url) == (status, url)
+    assert f"HTTP {status} " in str(err.value) and url in str(err.value)
+    if case[0] == "sap_catalog_both":
+        assert str(err.value).startswith("both SAP catalog endpoints failed: HTTP 404")
+        assert V2_CATALOG_PATH in str(err.value)

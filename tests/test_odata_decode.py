@@ -360,7 +360,8 @@ def test_one_write_path_per_web_api_sink():
     ``sources/bulk.py``'s Arrow partition loop and encode JSON only
     through ``core.jsonwire``: no module there calls ``foreachPartition``,
     ``mapInPandas``, ``iterrows`` or ``.accumulator(``, imports pandas,
-    or passes ``default=str`` to a JSON encoder."""
+    passes ``default=str`` to a JSON encoder, or builds a request
+    ``body=`` with ``json.dumps``."""
     import ast
     from pathlib import Path
 
@@ -387,6 +388,14 @@ def test_one_write_path_per_web_api_sink():
                 and node.value.id == "str"
             ):
                 offenders.append(f"{rel}:{node.lineno} passes default=str")
+            elif isinstance(node, ast.keyword) and node.arg == "body" and any(
+                isinstance(n, ast.Attribute)
+                and n.attr == "dumps"
+                and isinstance(n.value, ast.Name)
+                and n.value.id == "json"
+                for n in ast.walk(node.value)
+            ):
+                offenders.append(f"{rel}:{node.value.lineno} encodes body= with json.dumps")
     assert not offenders, offenders
 
 
@@ -412,4 +421,46 @@ def test_one_decode_path_per_web_api_read():
                 offenders.append(f"{rel}:{node.lineno} calls decode_value(")
             if name == "createDataFrame" and rel != "core/localframe.py":
                 offenders.append(f"{rel}:{node.lineno} calls createDataFrame(")
+    assert not offenders, offenders
+
+
+def test_one_http_status_contract():
+    """Whether a response is an error, and what is raised for it, is
+    decided only in ``core/http.py`` (``HttpResponse.raise_for_status``):
+    no other package module compares a ``.status`` attribute with
+    ``<``, ``<=``, ``>``, ``>=`` or ``!=``, or parses a ``.text``
+    attribute with ``json.loads`` instead of ``HttpResponse.json()``.
+    ``==`` and ``in`` on a caught error's status, and plain ``status``
+    names (a ``$batch`` subresponse's), stay allowed."""
+    import ast
+    from pathlib import Path
+
+    import erpl_web_spark
+
+    root = Path(erpl_web_spark.__file__).parent
+    ordering = (ast.Lt, ast.LtE, ast.Gt, ast.GtE, ast.NotEq)
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "core/http.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), filename=rel)):
+            if isinstance(node, ast.Compare) and any(
+                isinstance(op, ordering) for op in node.ops
+            ) and any(
+                isinstance(side, ast.Attribute) and side.attr == "status"
+                for side in (node.left, *node.comparators)
+            ):
+                offenders.append(f"{rel}:{node.lineno} compares .status")
+            elif (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "loads"
+                and isinstance(node.func.value, ast.Name)
+                and node.func.value.id == "json"
+                and node.args
+                and isinstance(node.args[0], ast.Attribute)
+                and node.args[0].attr == "text"
+            ):
+                offenders.append(f"{rel}:{node.lineno} calls json.loads on .text")
     assert not offenders, offenders
