@@ -122,22 +122,38 @@ class RetryConfig:
 _IDEMPOTENT_METHODS = {"GET", "HEAD", "OPTIONS"}
 
 
+def redact(url: str) -> str:
+    """``url`` without its ``user:pass@`` userinfo, for error text. Query
+    values stay: ``$skiptoken`` and ``!deltatoken`` paging links are not
+    credentials."""
+    parts = urlsplit(url)
+    if "@" not in parts.netloc:
+        return url
+    return parts._replace(netloc=parts.netloc.rpartition("@")[2]).geturl()
+
+
 class HttpStatusError(RuntimeError):
-    """A response whose status is not 2xx. ``status`` and ``url`` let
-    callers branch on it (ODP's expired-token reload, Graph's 410). A GET
-    reads ``HTTP {status} fetching {url}``; any other method names itself
-    and keeps the head of the response body, the server's reason."""
+    """A response whose status is not 2xx. ``status`` and ``url`` (its
+    userinfo redacted) let callers branch on it (ODP's expired-token
+    reload, Graph's 410). A GET reads ``HTTP {status} fetching {url}``;
+    any other method names itself and keeps the head of the response
+    body, the server's reason."""
 
     def __init__(self, status: int, url: str, method: str = "GET", body: str = ""):
+        url, body = redact(url), body[:200]
         if method == "GET":
             msg = f"HTTP {status} fetching {url}"
         else:
-            msg = f"HTTP {status} from {method} {url}" + (f": {body[:200]}" if body else "")
+            msg = f"HTTP {status} from {method} {url}" + (f": {body}" if body else "")
         if status in (401, 403):
             msg += " (provide a secret scoped to this URL)"
         super().__init__(msg)
-        self.status = status
-        self.url = url
+        self.status, self.url, self.method, self.body = status, url, method, body
+
+    def __reduce__(self):
+        # rebuilt from what __init__ takes; the state keeps a message a
+        # caller rewrote (the SAP catalog's both-endpoints error)
+        return type(self), (self.status, self.url, self.method, self.body), {"args": self.args}
 
 
 @dataclass
@@ -308,7 +324,9 @@ class HttpClient:
                 current_url = target.to_string()
                 continue
             return resp
-        raise RuntimeError(f"redirect limit ({self.retry.max_redirects}) exceeded for {url}")
+        raise RuntimeError(
+            f"redirect limit ({self.retry.max_redirects}) exceeded for {redact(url)}"
+        )
 
     def _pool(self, url: str) -> urllib3.PoolManager:
         proxy = self._env.proxy_for(url)
@@ -374,7 +392,7 @@ class HttpClient:
                 )
                 if not retryable or attempt > self.retry.retries:
                     raise (TimeoutError if timed_out else ConnectionError)(
-                        f"{method} {url}: {e}"
+                        f"{method} {redact(url)}: {e}"
                     ) from e
                 self._sleep(attempt)
                 continue

@@ -899,8 +899,11 @@ def _delta_sync(
             return _delta_sync(client, path, state_key, state_dir)
         raise
     if cursor:
-        with open(state_path, "w") as f:
+        # temp file + rename: a failed write leaves the old cursor whole
+        tmp = state_path + ".tmp"
+        with open(tmp, "w") as f:
             json.dump({"delta_link": cursor}, f)
+        os.replace(tmp, state_path)
     return items
 
 

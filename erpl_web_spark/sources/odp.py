@@ -23,8 +23,10 @@ every page decodes into one Arrow record batch (``ColumnDecoders``) and
 ``odp_read`` returns the batches as a local DataFrame. Pages are fetched
 driver-side (the reference's scan is also a single page-chain); for huge
 initial loads, do the first load through the parallel ``odata`` data
-source and seed the subscription with ``import_delta_token``. A Structured Streaming wrapper lives in
-``erpl_web_spark.streaming.odp_stream``.
+source and seed the subscription with ``import_delta_token``. The
+Structured Streaming source (``erpl_web_spark.streaming.odp_stream``)
+calls only ``OdpReader.fetch``: its offset is the delta link, and it
+keeps no subscription.
 """
 
 from __future__ import annotations
@@ -79,14 +81,12 @@ class OdpSubscriptionRepository:
     pyarrow-visible object-store URI (``s3://``, ``gs://``; ``hdfs://``
     where libhdfs is available) — the repository no longer silently
     requires a driver-local directory. pyarrow is used instead of the
-    JVM Hadoop FileSystem because this code also runs inside Python
-    Data Source worker processes (the ``odp`` streaming source), which
-    have no py4j gateway. Subscription saves land via create-temp +
-    move (atomic rename on local/HDFS; on object stores a small single
-    PUT is whole-object-visible, so the move's copy+delete is safe
-    too). The audit trail appends to ``audit.jsonl`` where the
-    filesystem supports appends, else writes one record file per event
-    under ``audit/``.
+    JVM Hadoop FileSystem, so no py4j gateway is needed. Subscription
+    saves land via create-temp + move (atomic rename on local/HDFS; on
+    object stores a small single PUT is whole-object-visible, so the
+    move's copy+delete is safe too). The audit trail appends to
+    ``audit.jsonl`` where the filesystem supports appends, else writes
+    one record file per event under ``audit/``.
     """
 
     def __init__(self, state_dir: str = DEFAULT_STATE_DIR):
@@ -173,24 +173,18 @@ class OdpSubscriptionRepository:
                 f.write(line.encode())
 
 
-def extract_delta_token(doc: dict) -> tuple[str | None, str | None]:
-    """(token, delta_link) from v4 @odata.deltaLink or v2 d.__delta."""
-    link = None
-    if isinstance(doc, dict):
-        link = doc.get("@odata.deltaLink") or doc.get("odata.deltaLink")
-        if not link:
-            d = doc.get("d")
-            if isinstance(d, dict):
-                link = d.get("__delta")
-    if not link:
-        return None, None
-    m = _DELTA_TOKEN_RE.search(link)
-    token = m.group(1).strip("'\"") if m else None
-    return token, link
+def delta_link_of(doc: dict) -> str | None:
+    """The delta link of a page: v4 @odata.deltaLink or v2 d.__delta."""
+    if not isinstance(doc, dict):
+        return None
+    link = doc.get("@odata.deltaLink") or doc.get("odata.deltaLink")
+    d = doc.get("d")
+    return link or (d.get("__delta") if isinstance(d, dict) else None)
 
 
 class OdpReader:
-    """Orchestrates initial load / delta fetch for one subscription."""
+    """One subscription's CDC fetch (``fetch``), plus the subscription
+    state ``odp_read`` keeps under ``state_dir`` (``run_batch``)."""
 
     def __init__(
         self,
@@ -200,7 +194,7 @@ class OdpReader:
         http: HttpClient | None = None,
     ):
         self.url = url
-        self.repo = OdpSubscriptionRepository(state_dir)
+        self.state_dir = state_dir
         self.max_page_size = max_page_size
         self.http = http or HttpClient(
             auth_headers=default_registry.auth_headers_for_url(url)
@@ -211,13 +205,37 @@ class OdpReader:
         return client.get_model().schema_for_entity_set(client.entity_set_name())
 
     def fetch(
+        self, delta_link: str, schema: StructType, reload_expired: bool = True
+    ) -> tuple[list[pyarrow.RecordBatch], str, str, bool]:
+        """One CDC fetch: the initial load when ``delta_link`` is empty,
+        else the delta from it, where an expired or invalid token (400,
+        404, 410) falls back to a full reload (I5) unless
+        ``reload_expired`` is off. Returns (one record batch per non-empty
+        page, the next delta link, the phase, whether the server applied
+        track-changes). The next link is read off the LAST page, once the
+        whole walk succeeded (I4); without one it stays ``delta_link``."""
+        src = delta_link or self.url
+        phase = "DELTA_FETCH" if delta_link else "INITIAL_LOAD"
+        try:
+            batches, first, last = self._walk(src, schema)
+        except HttpStatusError as e:
+            if not (delta_link and reload_expired and e.status in (400, 404, 410)):
+                raise
+            src, phase = self.url, "INITIAL_LOAD(token-fallback)"
+            batches, first, last = self._walk(src, schema)
+        link = delta_link_of(last)
+        applied = "track-changes" in first.headers.get(
+            "Preference-Applied", first.headers.get("preference-applied", "")
+        )
+        next_link = HttpUrl.parse(src).resolve(link).to_string() if link else delta_link
+        return batches, next_link, phase, applied
+
+    def _walk(
         self, url: str, schema: StructType
     ) -> tuple[list[pyarrow.RecordBatch], HttpResponse, dict]:
-        """One decoded record batch per non-empty page from ``url`` on
-        (the ``ODataClient.pages`` walk, the track-changes ``Prefer``
-        header on every page), the first response and the last document.
-        The delta link appears only on the LAST page, so the token commit
-        waits for it (I4)."""
+        """The ``ODataClient.pages`` walk from ``url`` with the
+        track-changes ``Prefer`` header on every page: one record batch
+        per non-empty page, the first response and the last document."""
         batches = []
         first = None
         decoders = ColumnDecoders(schema)
@@ -233,35 +251,33 @@ class OdpReader:
     def run_batch(
         self, force_full_load: bool = False, import_delta_token: str | None = None
     ) -> tuple[list[pyarrow.RecordBatch], StructType, OdpSubscription, str]:
-        """Execute one CDC batch; returns (record batches, schema,
-        subscription, phase)."""
-        sub_id = self.repo.subscription_id_for(self.url)
-        sub = self.repo.load(sub_id) or OdpSubscription(sub_id, self.url)
+        """One ``fetch`` from the stored subscription's delta link, then
+        the subscription saved and audited; returns (record batches,
+        schema, subscription, phase)."""
+        repo = OdpSubscriptionRepository(self.state_dir)
+        sub_id = repo.subscription_id_for(self.url)
+        sub = repo.load(sub_id) or OdpSubscription(sub_id, self.url)
         if import_delta_token:
-            sub.delta_token = import_delta_token
             sub.delta_link = f"{self.url}!deltatoken='{import_delta_token}'"
-            sub.status = "ACTIVE"
+            sub.delta_token = import_delta_token
+        link = "" if force_full_load else sub.delta_link or ""
         schema = self.schema()
         t0 = time.time()
-
-        if force_full_load or not sub.delta_link:
-            phase = "INITIAL_LOAD"
-            batches, sub = self._initial_load(sub, schema)
-        else:
-            phase = "DELTA_FETCH"
-            try:
-                batches, sub = self._delta_fetch(sub, schema)
-            except HttpStatusError as e:
-                if e.status in (400, 404, 410):
-                    # expired/invalid token -> automatic full reload (I5)
-                    phase = "INITIAL_LOAD(token-fallback)"
-                    batches, sub = self._initial_load(sub, schema)
-                else:
-                    sub.status = "ERROR"
-                    self.repo.save(sub)
-                    raise
-        self.repo.save(sub)
-        self.repo.audit(
+        try:
+            batches, next_link, phase, applied = self.fetch(link, schema)
+        except HttpStatusError:
+            if link:
+                sub.status = "ERROR"
+                repo.save(sub)
+            raise
+        if phase != "DELTA_FETCH":
+            sub.preference_applied = applied
+        if next_link:
+            m = _DELTA_TOKEN_RE.search(next_link)
+            sub.delta_link, sub.delta_token = next_link, m and m.group(1).strip("'\"")
+        sub.status = "ACTIVE"
+        repo.save(sub)
+        repo.audit(
             sub_id,
             {
                 "phase": phase,
@@ -278,26 +294,6 @@ class OdpReader:
             prefer += f", odata.maxpagesize={self.max_page_size}"
         return {"Accept": "application/json", "Prefer": prefer}
 
-    def _initial_load(self, sub: OdpSubscription, schema: StructType):
-        batches, first, last = self.fetch(self.url, schema)
-        sub.preference_applied = "track-changes" in first.headers.get(
-            "Preference-Applied", first.headers.get("preference-applied", "")
-        )
-        token, delta_link = extract_delta_token(last)
-        if delta_link:
-            sub.delta_token = token
-            sub.delta_link = HttpUrl.parse(self.url).resolve(delta_link).to_string()
-        sub.status = "ACTIVE"
-        return batches, sub
-
-    def _delta_fetch(self, sub: OdpSubscription, schema: StructType):
-        batches, _first, last = self.fetch(sub.delta_link, schema)
-        token, delta_link = extract_delta_token(last)
-        if delta_link:  # advance token only after the last page (I4)
-            sub.delta_token = token
-            sub.delta_link = HttpUrl.parse(sub.delta_link).resolve(delta_link).to_string()
-        return batches, sub
-
 
 # -- public API -------------------------------------------------------------
 
@@ -309,7 +305,14 @@ def odp_read(
     max_page_size: int | None = None,
     state_dir: str = DEFAULT_STATE_DIR,
 ) -> DataFrame:
-    """One CDC batch as a DataFrame (reference A8 ``odp_odata_read``)."""
+    """One CDC batch as a DataFrame (reference A8 ``odp_odata_read``).
+
+    The subscription's token advances when the frame is built, before
+    the caller writes it anywhere: if that write fails, pass the old
+    token as ``import_delta_token`` to read the same delta again (the
+    audit trail's ``token_after`` records each one). For delivery that
+    follows the sink, use the ``odp`` streaming source, whose only state
+    is its offset."""
     reader = OdpReader(url, state_dir, max_page_size)
     batches, schema, _sub, _phase = reader.run_batch(force_full_load, import_delta_token)
     return local_batches(spark, batches, schema)

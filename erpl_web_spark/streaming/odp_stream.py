@@ -2,12 +2,16 @@
 
 The reference's ODP surface is pull-based micro-batching with durable
 delta tokens (SURVEY.md §2.I) — exactly Spark's micro-batch source
-contract: **offset == delta link**. This wraps the ODP orchestrator in a
-``SimpleDataSourceStreamReader`` (driver-side reads, appropriate for CDC
-delta volumes; Spark checkpoints the offsets, giving exactly-once
-delivery into the sink — the reference's deferred-token-commit semantics
-fall out of Spark's offset protocol for free). Each micro-batch is the
-orchestrator's Arrow record batches, one per non-empty page.
+contract: **offset == delta link**. The offset is the stream's only
+state: each micro-batch is one ``OdpReader.fetch`` from its start
+offset's link (the initial load from an empty one), and Spark's
+checkpoint logs the next link before the sink sees the rows, so a
+restart at any point re-reads from the last logged link — exactly-once
+delivery into an idempotent sink, the reference's deferred-token-commit
+semantics from Spark's offset protocol. A stream creates no
+subscription and does not appear in ``odp_list_subscriptions``. Each
+micro-batch is one Arrow record batch per non-empty page; a link the
+server returns unchanged is no new micro-batch.
 
 Usage::
 
@@ -26,7 +30,7 @@ from typing import TYPE_CHECKING
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import StructType
 
-from erpl_web_spark.sources.odp import DEFAULT_STATE_DIR, OdpReader
+from erpl_web_spark.sources.odp import OdpReader
 
 if TYPE_CHECKING:
     import pyarrow
@@ -38,57 +42,46 @@ class OdpStreamDataSource(DataSource):
         return "odp"
 
     def schema(self) -> StructType:
-        return OdpReader(
-            self.options["url"], self.options.get("state_dir", DEFAULT_STATE_DIR)
-        ).schema()
+        return OdpReader(self.options["url"]).schema()
 
     def simpleStreamReader(self, schema: StructType) -> "OdpStreamReader":
         return OdpStreamReader(
             self.options["url"],
             schema,
-            self.options.get("state_dir", DEFAULT_STATE_DIR),
             int(self.options["max_page_size"]) if "max_page_size" in self.options else None,
         )
 
 
 class OdpStreamReader(SimpleDataSourceStreamReader):
-    def __init__(self, url: str, schema: StructType, state_dir: str, max_page_size):
+    def __init__(self, url: str, schema: StructType, max_page_size):
         self._url = url
         self._schema = schema
-        self._state_dir = state_dir
         self._max_page_size = max_page_size
 
-    def _reader(self) -> OdpReader:
-        return OdpReader(self._url, self._state_dir, self._max_page_size)
+    def _fetch(
+        self, start: dict, reload_expired: bool
+    ) -> tuple[list[pyarrow.RecordBatch], str]:
+        reader = OdpReader(self._url, max_page_size=self._max_page_size)
+        batches, link, _phase, _applied = reader.fetch(
+            start["delta_link"], self._schema, reload_expired
+        )
+        return batches, link
 
     def initialOffset(self) -> dict:
-        return {"delta_link": "", "batch": 0}
+        return {"delta_link": ""}
 
     def read(self, start: dict) -> tuple[Iterator[pyarrow.RecordBatch], dict]:
-        reader = self._reader()
-        if not start.get("delta_link"):
-            batches, _schema, sub, _phase = reader.run_batch(force_full_load=True)
-        else:
-            batches, _schema, sub, _phase = reader.run_batch(
-                import_delta_token=None  # state repo already holds the link
-            )
-        return iter(batches), {
-            "delta_link": sub.delta_link or "", "batch": start.get("batch", 0) + 1
-        }
+        batches, link = self._fetch(start, reload_expired=True)
+        return iter(batches), {"delta_link": link}
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[pyarrow.RecordBatch]:
         # Failure replay: re-fetch from the start offset's delta link. ODP
         # servers replay a delta until the next token is requested, so this
-        # is deterministic within the server's retention window.
-        reader = self._reader()
-        link = start.get("delta_link")
-        if not link:
-            batches, _sch, _sub, _ph = reader.run_batch(force_full_load=True)
-            return iter(batches)
-        # An HTTP error (a 503 after retries, an expired token) raises:
-        # an empty replay would silently drop the batch's rows.
-        batches, _first, _last = reader.fetch(link, self._schema)
-        return iter(batches)
+        # is deterministic within the server's retention window. An HTTP
+        # error (a 503 after retries, an expired token) raises: an empty
+        # replay, or a full reload in place of a logged delta, would not be
+        # the logged batch.
+        return iter(self._fetch(start, reload_expired=False)[0])
 
     def commit(self, end: dict) -> None:
-        pass  # durable state already advanced by the repo on each batch
+        pass  # the offset IS the state; Spark's checkpoint owns it

@@ -440,6 +440,33 @@ def test_graph_delta_page_cap_resumes(spark, fixture_server, tmp_path, monkeypat
     assert sync() == []
 
 
+def test_graph_delta_cursor_survives_failed_write(fixture_server, tmp_path, monkeypatch):
+    """A cursor write that fails after a walk leaves the old cursor
+    whole: the next sync resumes from it (no empty state file that
+    every later sync fails to parse)."""
+    import erpl_web_spark.sources.graph as graph_mod
+
+    g = GraphClient(fixture_server.base_url + "/graph", HttpClient())
+    state = str(tmp_path / "gstate")
+
+    def sync():
+        items = graph_mod._delta_sync(g, "/users/delta", "users", state)
+        return sorted(i["id"] for i in items)
+
+    assert sync() == [f"u{i}" for i in range(5)]  # initial load -> G1
+    real_dump = json.dump
+
+    def dump_fails_once(*args, **kwargs):
+        monkeypatch.setattr(json, "dump", real_dump)
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", dump_fails_once)
+    with pytest.raises(OSError, match="disk full"):
+        sync()  # the G1 delta is walked, its cursor write fails
+    assert sync() == ["u1", "u3"]  # G1 again
+    assert sync() == []  # G2, steady state
+
+
 def test_graph_groups_delta_sync(spark, fixture_server, tmp_path):
     from erpl_web_spark.core.http import HttpClient
     from erpl_web_spark.sources.graph import GraphClient, graph_groups_delta

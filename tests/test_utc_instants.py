@@ -141,7 +141,7 @@ def test_odp_stream_batch(tz, fixture_server, tmp_path, zone):
 
     tz(zone)
     url, state = fixture_server.base_url + "/odp/Stamps", str(tmp_path)
-    reader = OdpStreamReader(url, OdpReader(url, state).schema(), state, None)
+    reader = OdpStreamReader(url, OdpReader(url, state).schema(), None)
     batches, _offset = reader.read(reader.initialOffset())
     assert _micros(list(batches), "At") == [WANT_US]
 
