@@ -1,6 +1,6 @@
-"""Core plumbing: URL building, HTTP session (retry/redirect/charset/
-cache), secret registry. Pure Python, no Spark dependency — usable on the
-driver (probe/metadata) and inside executors (page fetches).
+"""Core plumbing: URL building, HTTP session (one retry policy,
+redirects, charset), secret registry. Pure Python, no Spark dependency:
+usable on the driver (probe/metadata) and in executors (page fetches).
 
 The names below resolve on first access, so importing a light submodule
 (``core.pyworker``, which the package ``__init__`` imports in every Python
@@ -14,7 +14,6 @@ _EXPORTS = {
     "canonicalize_query_key": "url",
     "HttpClient": "http",
     "HttpResponse": "http",
-    "RetryConfig": "http",
     "SecretRegistry": "secrets",
     "Secret": "secrets",
     "default_registry": "secrets",

@@ -1,17 +1,18 @@
 """HTTP client with the reference's operational semantics.
 
 Contract (see BASELINE.md and reference src/http_client.cpp):
-- retry with exponential backoff: 3 retries, 100 ms initial wait, 4x
-  backoff, on statuses 408/418/429/503/504 (http_client.hpp:90-97,
-  http_client.cpp:1009-1050);
+- 3 retries on statuses 408/418/429/503/504 (http_client.hpp:90-97,
+  http_client.cpp:1009-1050), each after ``retry_delay``: the server's
+  ``Retry-After`` (seconds or an HTTP date, capped at 30 s), else the
+  reference ladder of 100, 400 and 1600 ms. ``retry_delay`` is the one
+  retry policy: Graph ``$batch`` waits by it between its rounds too;
 - manual redirect handling: <=10 hops, same-origin keeps auth headers,
   cross-origin strips Authorization/Cookie, 301/302/303 -> GET, 307/308
   preserve method+body (http_client.cpp:946-1000);
 - charset conversion utf-8 / iso-8859-1 / iso-8859-15 / windows-1252
   auto-detected from Content-Type (charset_converter.cpp:9-90);
 - binary content tagged with a BINARY_CONTENT_BASE64: prefix for
-  octet-stream/pdf/image/video/audio/font (http_client.cpp:875-900);
-- optional response cache keyed on (method, url) (http_client.hpp:291-330).
+  octet-stream/pdf/image/video/audio/font (http_client.cpp:875-900).
 
 Transport is one urllib3 PoolManager per client: keep-alive connections
 per host, matching the reference's per-host httplib client reuse. The
@@ -36,9 +37,12 @@ from __future__ import annotations
 import base64
 import ipaddress
 import os
-import time
 import urllib.request
+from collections.abc import Mapping
 from dataclasses import dataclass
+from datetime import datetime, timezone
+from email.utils import parsedate_to_datetime
+from time import sleep  # the one point a retry waits (core and $batch)
 from urllib.parse import unquote, urlsplit
 
 import urllib3
@@ -53,6 +57,9 @@ from urllib3.exceptions import (
 from erpl_web_spark.core.url import HttpUrl
 
 RETRY_STATUSES = {408, 418, 429, 503, 504}
+RETRIES = 3  # retries after the first attempt (reference http_client.hpp:90-97)
+MAX_REDIRECTS = 10
+RETRY_AFTER_CAP_S = 30.0
 BINARY_PREFIX = "BINARY_CONTENT_BASE64:"
 _BINARY_TYPES = (
     "application/octet-stream", "application/pdf", "image/", "video/",
@@ -105,21 +112,30 @@ def sniff_binary(raw: bytes) -> bool:
     return b"\x00" in raw[:1024]   # NUL in the head: not text
 
 
-@dataclass
-class RetryConfig:
-    retries: int = 3
-    wait_ms: int = 100
-    backoff: float = 4.0
-    timeout_s: float = 30.0
-    max_redirects: int = 10
-    # A read timeout means the request MAY have been delivered and
-    # processed — retrying a non-idempotent method (POST mutation, OAuth
-    # code exchange) can double-execute it. Timeouts therefore retry only
-    # for idempotent methods unless the caller opts in.
-    retry_non_idempotent: bool = False
-
-
 _IDEMPOTENT_METHODS = {"GET", "HEAD", "OPTIONS"}
+
+
+def retry_delay(attempt: int, headers: Mapping | None = None) -> float:
+    """Seconds to wait before retry ``attempt`` (1-based), for a
+    throttled response or subresponse with ``headers``, or for a
+    transport error (no headers). A ``Retry-After`` header, in any case,
+    is honoured in either form, delta-seconds or an HTTP date (a past one
+    is 0), up to 30 s. Without one that parses, the reference ladder:
+    0.1 × 4^(attempt-1) s, i.e. 100, 400, 1600 ms
+    (http_client.cpp:1046-1050)."""
+    value = next(
+        (str(v).strip() for k, v in (headers or {}).items() if k.lower() == "retry-after"), ""
+    )
+    if value.isdecimal():
+        return min(float(value), RETRY_AFTER_CAP_S)
+    try:
+        when = parsedate_to_datetime(value)
+    except ValueError:
+        return 0.1 * 4 ** (attempt - 1)
+    if when.tzinfo is None:  # asctime form: GMT without a zone
+        when = when.replace(tzinfo=timezone.utc)
+    seconds = (when - datetime.now(timezone.utc)).total_seconds()
+    return min(max(seconds, 0.0), RETRY_AFTER_CAP_S)
 
 
 def redact(url: str) -> str:
@@ -248,16 +264,9 @@ class _Environment:
 
 
 class HttpClient:
-    def __init__(
-        self,
-        retry: RetryConfig | None = None,
-        auth_headers: dict[str, str] | None = None,
-        cache_responses: bool = False,
-    ):
-        self.retry = retry or RetryConfig()
+    def __init__(self, auth_headers: dict[str, str] | None = None, timeout_s: float = 30.0):
         self.auth_headers = dict(auth_headers or {})
-        self.cache_responses = cache_responses
-        self._cache: dict[tuple[str, str], HttpResponse] = {}
+        self.timeout_s = timeout_s
         self._env = _Environment()
         self._pools: dict[str | None, urllib3.PoolManager] = {}
 
@@ -273,13 +282,8 @@ class HttpClient:
         self._env = _Environment()
         self._pools = {}
 
-    # -- public verbs ------------------------------------------------------
-
     def get(self, url: str, headers: dict[str, str] | None = None) -> HttpResponse:
         return self.request("GET", url, headers=headers)
-
-    def head(self, url: str, headers: dict[str, str] | None = None) -> HttpResponse:
-        return self.request("HEAD", url, headers=headers)
 
     def request(
         self,
@@ -289,28 +293,14 @@ class HttpClient:
         body: bytes | str | None = None,
         content_type: str | None = None,
     ) -> HttpResponse:
-        key = (method, url)
-        if self.cache_responses and method in ("GET", "HEAD") and key in self._cache:
-            return self._cache[key]
-        resp = self._request_with_redirects(method, url, headers or {}, body, content_type)
-        if self.cache_responses and method in ("GET", "HEAD"):
-            self._cache[key] = resp
-        return resp
-
-    def clear_cache(self) -> None:
-        self._cache.clear()
-
-    # -- internals ---------------------------------------------------------
-
-    def _request_with_redirects(self, method, url, headers, body, content_type):
         current_method = method
         current_url = url
         current_body = body
         send_auth = True
         origin = HttpUrl.parse(url)
-        for _hop in range(self.retry.max_redirects + 1):
+        for _hop in range(MAX_REDIRECTS + 1):
             resp = self._request_with_retries(
-                current_method, current_url, headers, current_body, content_type, send_auth
+                current_method, current_url, headers or {}, current_body, content_type, send_auth
             )
             if resp.status in (301, 302, 303, 307, 308):
                 location = resp.headers.get("Location") or resp.headers.get("location")
@@ -324,9 +314,7 @@ class HttpClient:
                 current_url = target.to_string()
                 continue
             return resp
-        raise RuntimeError(
-            f"redirect limit ({self.retry.max_redirects}) exceeded for {redact(url)}"
-        )
+        raise RuntimeError(f"redirect limit ({MAX_REDIRECTS}) exceeded for {redact(url)}")
 
     def _pool(self, url: str) -> urllib3.PoolManager:
         proxy = self._env.proxy_for(url)
@@ -370,34 +358,31 @@ class HttpClient:
                     url,
                     body=body,
                     headers=hdrs,
-                    timeout=self.retry.timeout_s,
+                    timeout=self.timeout_s,
                     redirect=False,
                     retries=False,
                 )
             except _TRANSPORT_ERRORS as e:
                 # A connect timeout means nothing was delivered, so every
-                # method is safe to retry with the backoff ladder. A read
-                # timeout, refusal or dropped connection may follow a
-                # request the server already processed; retrying a
-                # mutation would duplicate its side effects. Those retry
-                # only idempotent methods (reference timeout_http_client.cpp
-                # wraps requests in a deadline for the hung-server case),
-                # unless the caller opted in via retry_non_idempotent.
+                # method is safe to retry. A read timeout, refusal or
+                # dropped connection may follow a request the server
+                # already processed; retrying a mutation would duplicate
+                # its side effects. Those retry only idempotent methods
+                # (reference timeout_http_client.cpp wraps requests in a
+                # deadline for the hung-server case).
                 refused = isinstance(e, NewConnectionError)  # DNS failures too
                 timed_out = isinstance(e, urllib3.exceptions.TimeoutError) and not refused
                 retryable = (
-                    (timed_out and isinstance(e, ConnectTimeoutError))
-                    or method.upper() in _IDEMPOTENT_METHODS
-                    or self.retry.retry_non_idempotent
-                )
-                if not retryable or attempt > self.retry.retries:
+                    timed_out and isinstance(e, ConnectTimeoutError)
+                ) or method.upper() in _IDEMPOTENT_METHODS
+                if not retryable or attempt > RETRIES:
                     raise (TimeoutError if timed_out else ConnectionError)(
                         f"{method} {redact(url)}: {e}"
                     ) from e
-                self._sleep(attempt)
+                sleep(retry_delay(attempt))
                 continue
-            if r.status in RETRY_STATUSES and attempt <= self.retry.retries:
-                self._sleep(attempt)
+            if r.status in RETRY_STATUSES and attempt <= RETRIES:
+                sleep(retry_delay(attempt, r.headers))
                 continue
             return HttpResponse(
                 method=method,
@@ -407,8 +392,3 @@ class HttpClient:
                 content_type=r.headers.get("Content-Type", ""),
                 raw=r.data if method != "HEAD" else b"",
             )
-
-    def _sleep(self, attempt: int) -> None:
-        # wait * backoff^(attempt-1): 100ms, 400ms, 1600ms (reference
-        # formula http_client.cpp:1046-1050).
-        time.sleep(self.retry.wait_ms / 1000.0 * (self.retry.backoff ** (attempt - 1)))

@@ -40,7 +40,6 @@ from __future__ import annotations
 import datetime
 import json
 import os
-import time
 from collections.abc import Iterable
 from typing import TYPE_CHECKING, Any, NamedTuple
 
@@ -55,6 +54,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from erpl_web_spark.core import http as http_core
 from erpl_web_spark.core import jsonwire
 from erpl_web_spark.core.http import HttpClient, HttpStatusError
 from erpl_web_spark.core.localframe import local_batches
@@ -153,12 +153,12 @@ def graph_batch_execute(
     service's body limit. Returns one response dict ``{"id", "status",
     "body"}`` per input, in input order.
 
-    Throttling: Graph applies 429/503 PER SUBREQUEST inside a 200
-    envelope (the transport-level retry in core.http never sees them),
-    so throttled subrequests are sent again in follow-up envelopes after
-    the largest subresponse ``Retry-After`` (capped at 30 s), up to 3
-    rounds. Any other failed subresponse raises at once, id and status
-    named, so partial failures are attributable, never silent.
+    Throttling: Graph answers a retry status PER SUBREQUEST inside a 200
+    envelope, where the transport's retry never sees it. Those
+    subrequests are sent again in follow-up envelopes, up to ``RETRIES``
+    rounds, each after the largest ``core.http.retry_delay`` of their
+    subresponse headers. Any other failed subresponse raises at once, id
+    and status named, so partial failures are attributable, never silent.
     """
     subrequests = [
         {"id": str(i), "method": r["method"], "url": r["url"]}
@@ -168,9 +168,9 @@ def graph_batch_execute(
     ]
     sizes = [len(jsonwire.dumps(sub).encode()) for sub in subrequests]
     results: list[dict | None] = [None] * len(requests)
-    todo, rounds = list(range(len(requests))), 3
-    for attempt in range(rounds + 1):
-        throttled, retry_after = [], 0.0
+    todo = list(range(len(requests)))
+    for attempt in range(1, http_core.RETRIES + 2):
+        throttled, delay = [], 0.0
         for chunk in cut(todo, max_requests, sizes.__getitem__, max_bytes):
             doc = client.request("POST", "/$batch", {"requests": [subrequests[i] for i in chunk]})
             got = {str(resp.get("id")): resp for resp in (doc or {}).get("responses", [])}
@@ -179,13 +179,9 @@ def graph_batch_execute(
                 if resp is None:
                     raise RuntimeError(f"Graph $batch dropped response id={i}")
                 status = int(resp.get("status", 0))
-                if status in (429, 503):
+                if status in http_core.RETRY_STATUSES:
                     throttled.append(i)
-                    headers = {str(k).lower(): v for k, v in (resp.get("headers") or {}).items()}
-                    try:
-                        retry_after = max(retry_after, float(headers.get("retry-after", 0)))
-                    except (TypeError, ValueError):
-                        pass
+                    delay = max(delay, http_core.retry_delay(attempt, resp.get("headers")))
                 elif status >= 400:
                     raise RuntimeError(
                         f"Graph $batch subrequest id={i} failed with "
@@ -195,12 +191,12 @@ def graph_batch_execute(
                     results[i] = resp
         if not (todo := throttled):
             break
-        if attempt == rounds:
+        if attempt > http_core.RETRIES:
             raise RuntimeError(
-                f"Graph $batch: {len(todo)} subrequests still throttled (429/503) "
-                f"after {rounds} retry rounds"
+                f"Graph $batch: {len(todo)} subrequests still throttled "
+                f"after {http_core.RETRIES} retry rounds"
             )
-        time.sleep(min(retry_after, 30.0))
+        http_core.sleep(delay)
     return results  # type: ignore[return-value]
 
 

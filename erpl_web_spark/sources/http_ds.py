@@ -24,7 +24,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from erpl_web_spark.core.http import HttpClient, RetryConfig
+from erpl_web_spark.core.http import HttpClient
 from erpl_web_spark.core.localframe import local_rows
 from erpl_web_spark.core.secrets import default_registry
 from erpl_web_spark.sources.bulk import each_row, fan_out
@@ -62,10 +62,7 @@ def _do_request(
 
 def _single(spark: SparkSession, method: str, url: str, headers=None, body=None,
             content_type=None, timeout: float = 30.0) -> DataFrame:
-    client = HttpClient(
-        retry=RetryConfig(timeout_s=timeout),
-        auth_headers=default_registry.auth_headers_for_url(url),
-    )
+    client = HttpClient(default_registry.auth_headers_for_url(url), timeout_s=timeout)
     row = _do_request(client, method, url, headers, body, content_type)
     return local_rows(spark, [row], HTTP_RESPONSE_SCHEMA)
 

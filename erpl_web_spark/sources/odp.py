@@ -57,6 +57,8 @@ DEFAULT_STATE_DIR = os.environ.get(
 )
 
 _DELTA_TOKEN_RE = re.compile(r"!deltatoken='?([^'&]+)'?")
+# ``fetch``'s phase when an expired or invalid token fell back to a reload
+RELOAD_PHASE = "INITIAL_LOAD(token-fallback)"
 
 
 @dataclass
@@ -221,7 +223,7 @@ class OdpReader:
         except HttpStatusError as e:
             if not (delta_link and reload_expired and e.status in (400, 404, 410)):
                 raise
-            src, phase = self.url, "INITIAL_LOAD(token-fallback)"
+            src, phase = self.url, RELOAD_PHASE
             batches, first, last = self._walk(src, schema)
         link = delta_link_of(last)
         applied = "track-changes" in first.headers.get(

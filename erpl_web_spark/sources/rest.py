@@ -323,7 +323,7 @@ class RestWriter(DataSourceArrowWriter):
 
     Non-transactional like any REST sink: duplicates can arise from
     (a) Spark task retries re-sending already-posted batches, and
-    (b) the HTTP core's status-code retry (408/429/503/504) when an
+    (b) the HTTP core's status-code retry (408/418/429/503/504) when an
     ambiguous gateway error masks a server that already committed —
     timeouts are idempotent-only (core/http.py) but status retries are
     not method-gated. The exactly-once upgrade for both is an

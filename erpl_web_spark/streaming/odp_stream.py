@@ -11,7 +11,9 @@ delivery into an idempotent sink, the reference's deferred-token-commit
 semantics from Spark's offset protocol. A stream creates no
 subscription and does not appear in ``odp_list_subscriptions``. Each
 micro-batch is one Arrow record batch per non-empty page; a link the
-server returns unchanged is no new micro-batch.
+server returns unchanged is no new micro-batch. A batch that fell back
+to a full reload (its start token expired) is marked so in its end
+offset, and its replay reloads.
 
 Usage::
 
@@ -30,7 +32,7 @@ from typing import TYPE_CHECKING
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import StructType
 
-from erpl_web_spark.sources.odp import OdpReader
+from erpl_web_spark.sources.odp import RELOAD_PHASE, OdpReader
 
 if TYPE_CHECKING:
     import pyarrow
@@ -59,29 +61,34 @@ class OdpStreamReader(SimpleDataSourceStreamReader):
         self._max_page_size = max_page_size
 
     def _fetch(
-        self, start: dict, reload_expired: bool
-    ) -> tuple[list[pyarrow.RecordBatch], str]:
+        self, delta_link: str, reload_expired: bool
+    ) -> tuple[list[pyarrow.RecordBatch], str, str]:
         reader = OdpReader(self._url, max_page_size=self._max_page_size)
-        batches, link, _phase, _applied = reader.fetch(
-            start["delta_link"], self._schema, reload_expired
-        )
-        return batches, link
+        batches, link, phase, _applied = reader.fetch(delta_link, self._schema, reload_expired)
+        return batches, link, phase
 
     def initialOffset(self) -> dict:
         return {"delta_link": ""}
 
     def read(self, start: dict) -> tuple[Iterator[pyarrow.RecordBatch], dict]:
-        batches, link = self._fetch(start, reload_expired=True)
-        return iter(batches), {"delta_link": link}
+        batches, link, phase = self._fetch(start["delta_link"], reload_expired=True)
+        if link == start["delta_link"]:
+            return iter(batches), start  # no new token, no micro-batch
+        end = {"delta_link": link}
+        if phase == RELOAD_PHASE:
+            end["reloaded"] = True  # its replay reloads too
+        return iter(batches), end
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[pyarrow.RecordBatch]:
-        # Failure replay: re-fetch from the start offset's delta link. ODP
-        # servers replay a delta until the next token is requested, so this
-        # is deterministic within the server's retention window. An HTTP
+        # Failure replay: re-fetch from the start offset's delta link, or
+        # reload when the logged batch was a reload. ODP servers replay a
+        # delta until the next token is requested, so this is
+        # deterministic within the server's retention window. An HTTP
         # error (a 503 after retries, an expired token) raises: an empty
         # replay, or a full reload in place of a logged delta, would not be
         # the logged batch.
-        return iter(self._fetch(start, reload_expired=False)[0])
+        link = "" if end.get("reloaded") else start["delta_link"]
+        return iter(self._fetch(link, reload_expired=False)[0])
 
     def commit(self, end: dict) -> None:
         pass  # the offset IS the state; Spark's checkpoint owns it

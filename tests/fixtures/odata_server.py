@@ -531,6 +531,12 @@ def _make_handler(state: FixtureState):
                 if c <= 2:
                     return self._send(429, b"slow down", "text/plain")
                 return self._json(200, {"ok": True, "attempts": c})
+            if route == "/http/throttled-once":
+                c = state.flaky_counts.get(route, 0) + 1
+                state.flaky_counts[route] = c
+                if c == 1:
+                    return self._send(429, b"slow down", "text/plain", {"Retry-After": "2"})
+                return self._json(200, {"ok": True, "attempts": c})
             if route == "/http/slow-once":
                 c = state.flaky_counts.get(route, 0) + 1
                 state.flaky_counts[route] = c
@@ -836,9 +842,8 @@ def _make_handler(state: FixtureState):
             })
             if parts.path == "/http/echo":
                 return self._json(201, {"received": body.decode("utf-8", "replace")})
-            if parts.path.startswith("/http/slow-once-post/"):
-                # hangs past the client read timeout on first call per key;
-                # the trailing key isolates counters between tests
+            if parts.path == "/http/slow-once-post":
+                # hangs past the client read timeout on the first call
                 c = state.flaky_counts.get(parts.path, 0) + 1
                 state.flaky_counts[parts.path] = c
                 if c == 1:
@@ -940,7 +945,7 @@ def _make_handler(state: FixtureState):
                         if title.startswith("thr-") and title not in state.batch_throttled:
                             state.batch_throttled.add(title)
                             responses.append({"id": sid, "status": 429,
-                                              "headers": {"Retry-After": "0"},
+                                              "headers": {"Retry-After": "2"},
                                               "body": {"error": "throttled"}})
                             continue
                         task_id = f"task-{len(state.planner_created) + 1}"

@@ -213,6 +213,21 @@ def test_graph_batch_throttled_subrequests_retry(fixture_server):
     assert out[1]["body"]["title"] == "thr-a" and out[3]["body"]["title"] == "thr-b"
 
 
+def test_graph_batch_waits_retry_after(fixture_server, monkeypatch):
+    """Throttled subresponses carry ``Retry-After: 2``: the next envelope
+    goes out after the one retry wait, ``core.http.retry_delay``'s 2 s."""
+    from erpl_web_spark.core import http as http_core
+    from erpl_web_spark.sources.graph import graph_batch_execute
+
+    sleeps = []
+    monkeypatch.setattr(http_core, "sleep", sleeps.append)
+    g = GraphClient(fixture_server.base_url + "/graph", HttpClient())
+    reqs = [{"method": "POST", "url": "/planner/tasks", "body": {"title": t}}
+            for t in ("thr-wait-1", "ok-wait", "thr-wait-2")]
+    out = graph_batch_execute(g, reqs)
+    assert ([r["status"] for r in out], sleeps) == ([201, 201, 201], [2.0])
+
+
 def test_graph_batch_failure_is_attributable(fixture_server):
     from erpl_web_spark.sources.graph import graph_batch_execute
 

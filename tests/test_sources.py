@@ -11,27 +11,42 @@ from pyspark.sql import functions as F
 
 # -- http_* table functions -------------------------------------------------
 
-def test_http_get_single_row(spark, fixture_server):
-    from erpl_web_spark.sources.http_ds import http_get
+@pytest.mark.parametrize("verb", ["get", "head", "post", "put", "patch", "delete"])
+def test_http_verbs_single_row(spark, fixture_server, monkeypatch, verb):
+    """Each ``http_*`` table function returns the reference's one row:
+    its method, status and the echoed body (none for HEAD). ``timeout``
+    (GET and HEAD) reaches the client's ``timeout_s``."""
+    from erpl_web_spark.core.http import HttpClient
+    from erpl_web_spark.sources import http_ds
 
-    df = http_get(spark, fixture_server.base_url + "/http/echo?a=1")
-    rows = df.collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert r["method"] == "GET"
-    assert r["status"] == 200
+    status, sent = {"get": (200, None), "head": (200, None), "delete": (201, "")}.get(
+        verb, (201, '{"x": 2}')
+    )
+    timeouts = []
+
+    class Recording(HttpClient):
+        def request(self, *args, **kwargs):
+            timeouts.append(self.timeout_s)
+            return super().request(*args, **kwargs)
+
+    monkeypatch.setattr(http_ds, "HttpClient", Recording)
+    call = getattr(http_ds, f"http_{verb}")
+    url = fixture_server.base_url + "/http/echo?a=1"
+    if verb in ("get", "head"):
+        df = call(spark, url, timeout=7.5)
+    else:
+        df = call(spark, url, body=sent) if sent else call(spark, url)
+    [r] = df.collect()
+    assert (r["method"], r["status"]) == (verb.upper(), status)
+    assert timeouts == [7.5 if verb in ("get", "head") else 30.0]
     assert r["content_type"].startswith("application/json")
-    assert json.loads(r["content"])["query"] == {"a": "1"}
     assert r["headers"]["Content-Type"].startswith("application/json")
-
-
-def test_http_post_body(spark, fixture_server):
-    from erpl_web_spark.sources.http_ds import http_post
-
-    df = http_post(spark, fixture_server.base_url + "/http/echo", body='{"x": 2}')
-    r = df.collect()[0]
-    assert r["status"] == 201
-    assert json.loads(r["content"])["received"] == '{"x": 2}'
+    if verb == "get":
+        assert json.loads(r["content"])["query"] == {"a": "1"}
+    elif verb == "head":
+        assert r["content"] == ""
+    else:
+        assert json.loads(r["content"])["received"] == sent
 
 
 def test_http_call_bulk_fanout(spark, fixture_server):
@@ -262,6 +277,23 @@ def test_odp_stream_replay_raises_on_http_error(fixture_server, odp_state):
     with pytest.raises(HttpStatusError) as err:
         reader.readBetweenOffsets(start, {"delta_link": "", "batch": 2})
     assert err.value.status == 410
+
+
+def test_odp_stream_replays_a_reload(fixture_server, odp_state):
+    """A micro-batch whose start token had expired is a full reload; its
+    end offset says so, and a fresh reader's replay reloads the same rows
+    instead of raising the expired token's 410."""
+    from erpl_web_spark.sources.odp import OdpReader
+    from erpl_web_spark.streaming.odp_stream import OdpStreamReader
+
+    url = fixture_server.base_url + "/odp/Facts"
+    schema = OdpReader(url, odp_state).schema()
+    start = {"delta_link": url + "?!deltatoken='GONE'"}
+    batches, end = OdpStreamReader(url, schema, None).read(start)
+    rows = [r for b in batches for r in b.to_pylist()]
+    assert len(rows) == 7 and end["delta_link"].endswith("!deltatoken='T1'")
+    replay = OdpStreamReader(url, schema, None).readBetweenOffsets(start, end)
+    assert [r for b in replay for r in b.to_pylist()] == rows
 
 
 @pytest.mark.parametrize("crash", ["read", "sink", "commit"])
